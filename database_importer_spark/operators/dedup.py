@@ -10,8 +10,8 @@ the rest of the engine.
 Scale design at 100 TB:
   * exact dedup: hash-groupBy on a 256-bit digest — one shuffle of
     (digest, id), never the payload.
-  * MinHash LSH: shingles → k seeded hash-mins (map-side, no
-    shuffle) → band buckets → shuffle only (band_hash, id) pairs →
+  * MinHash LSH: shingles → k affine hash-mins (map-side, no
+    shuffle) → band buckets → shuffle only (band_key, id) pairs →
     candidate pairs verified by exact Jaccard on the candidates only.
     Band/row parameters trade recall for candidate volume.
   * SimHash: 64 weighted-bit sums per doc (one aggregation), near-dup
@@ -111,24 +111,6 @@ def shingle_rows(df: DataFrame, text_col: str, n: int = 3) -> DataFrame:
     return idx.withColumn(
         "shingle", F.expr(f"concat_ws(' ', slice(__toks, __i, {n}))")
     ).drop("__toks", "__i")
-
-
-def minhash_signatures(
-    df: DataFrame, id_col: str, shingle_col: str = "shingle_arr", num_hashes: int = 32
-) -> DataFrame:
-    """MinHash signature: for seed k, sig[k] = min over shingles of
-    xxhash64(shingle, k). Pure map-side (explode → groupBy id is one
-    shuffle of hashed shingles; at scale compute mins with
-    aggregate() per row instead — done here: no explode at all)."""
-    sig = F.array(
-        *[
-            F.array_min(
-                F.expr(f"transform({shingle_col}, s -> xxhash64(s, {k}))")
-            ).alias(f"h{k}")
-            for k in range(num_hashes)
-        ]
-    )
-    return df.select(F.col(id_col), sig.alias("minhash_sig"))
 
 
 MINHASH_PRIME = 1073741789  # largest prime < 2^30: a*h < 2^58 stays in int64
@@ -298,12 +280,17 @@ def minhash_near_dups_portable(
     seed: int = 7,
     target_recall: float | None = None,
 ) -> DataFrame:
-    """minhash_near_dups with the portable md5+affine hash family —
-    bit-identical across engines, so the full pipeline (shingle →
-    signature → banding → exact-Jaccard verify) is exact-oracle
-    checkable. Same plan shape and shuffle profile as the xxhash64
-    variant, including the S-curve (bands, rows) derivation when
-    ``target_recall`` is set (recall floor pinned in tests)."""
+    """Full MinHash-LSH near-dup pipeline: shingle → signature → band
+    buckets → candidate pairs → exact-Jaccard verify ≥ threshold.
+    LSH is a recall filter; the output is exact-verified, so false
+    positives never survive (false negatives are the recall cost).
+    The md5+affine hash family is bit-identical across engines, so the
+    whole pipeline is exact-oracle checkable.
+
+    ``target_recall``: when set, (bands, rows) are derived from the
+    S-curve so candidate recall at ``threshold`` is ≥ this floor
+    (lsh_params_for_recall), overriding num_hashes/bands. The floor
+    is empirically pinned in tests/test_operators.py."""
     if target_recall is not None:
         bands, rows_per_band = lsh_params_for_recall(threshold, target_recall)
         num_hashes = bands * rows_per_band
@@ -311,50 +298,6 @@ def minhash_near_dups_portable(
     sigs = minhash_signatures_portable(sh, id_col, num_hashes=num_hashes, seed=seed)
     cands = lsh_candidate_pairs_portable(sigs, id_col, bands, num_hashes // bands)
     return jaccard_pairs(sh, id_col, cands).filter(F.col("jaccard") >= threshold)
-
-
-def lsh_candidate_pairs(
-    sigs: DataFrame, id_col: str, bands: int = 8, rows_per_band: int = 4
-) -> DataFrame:
-    """Band the signatures and bucket-join: docs sharing any band
-    bucket become candidate pairs (id_a < id_b). Only (band_id,
-    band_hash, id) tuples shuffle — payload never moves."""
-    banded = sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                "_",
-                                *[
-                                    F.element_at("minhash_sig", b * rows_per_band + r + 1)
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("band_hash"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select(id_col, "band.band_id", "band.band_hash")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col(f"a.band_id") == F.col(f"b.band_id"))
-            & (F.col(f"a.band_hash") == F.col(f"b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
 
 
 def jaccard_pairs(
@@ -415,69 +358,17 @@ def lsh_params_for_recall(
     return best
 
 
-def minhash_near_dups(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    threshold: float = 0.8,
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    target_recall: float | None = None,
-) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: shingle → signature → band
-    buckets → candidate pairs → exact-Jaccard verify ≥ threshold.
-    LSH is a recall filter; the output is exact-verified, so false
-    positives never survive (false negatives are the recall cost).
-
-    ``target_recall``: when set, (bands, rows) are derived from the
-    S-curve so candidate recall at ``threshold`` is ≥ this floor
-    (lsh_params_for_recall), overriding num_hashes/bands. The floor
-    is empirically pinned in tests/test_operators.py."""
-    if target_recall is not None:
-        bands, rows_per_band = lsh_params_for_recall(threshold, target_recall)
-        num_hashes = bands * rows_per_band
-    sh = shingles(df, text_col, shingle_n)
-    sigs = minhash_signatures(sh, id_col, num_hashes=num_hashes)
-    cands = lsh_candidate_pairs(sigs, id_col, bands, num_hashes // bands)
-    return jaccard_pairs(sh, id_col, cands).filter(F.col("jaccard") >= threshold)
-
-
-def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """64-bit SimHash fingerprint: per token hash, each bit votes
-    ±1; fingerprint bit b = sign of the vote sum. One explode + one
-    64-sum aggregation, all JVM-side."""
-    toks = df.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).withColumn("h", F.xxhash64("tok"))
-    votes = toks.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1)
-                .otherwise(-1)
-            ).alias(f"b{b}")
-            for b in range(64)
-        ]
-    )
-    fp = None
-    for b in range(64):
-        bit = F.when(F.col(f"b{b}") > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, b)
-        fp = term if fp is None else fp.bitwiseXOR(term)
-    return votes.select(F.col(id_col), fp.alias("simhash64"))
-
-
 def simhash_portable(
     df: DataFrame, text_col: str, id_col: str, nbits: int = 60
 ) -> DataFrame:
-    """SimHash with a portable md5-derived token hash (60 bits = 15
-    hex chars, parsed identically by DuckDB), so fingerprints — and
-    hence band-blocked near-dup pairs — are exact-oracle checkable.
-    Same shape as simhash(): one explode + one nbits-sum aggregation,
-    all JVM-side; output is a 64-bit long whose top 64-nbits bits are
-    zero (band blocking over 64 bits remains pigeonhole-complete)."""
+    """SimHash fingerprint: per token hash, each bit votes ±1;
+    fingerprint bit b = sign of the vote sum. The token hash is
+    md5-derived (60 bits = 15 hex chars, parsed identically by
+    DuckDB), so fingerprints — and hence band-blocked near-dup pairs —
+    are exact-oracle checkable. One explode + one nbits-sum
+    aggregation, all JVM-side; output is a 64-bit long whose top
+    64-nbits bits are zero (band blocking over 64 bits remains
+    pigeonhole-complete)."""
     toks = df.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
     ).withColumn(

@@ -39,10 +39,10 @@ staging).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from database_importer_spark.cache import fingerprint, memo
 
 _MATCH_FLAG = "__dbis_matched"
 
@@ -76,15 +76,9 @@ def _dedup_keep_order(cols: list[str]) -> list[str]:
     return out
 
 
-def _file_anchored_memo(spark, namespace: str) -> dict:
-    from database_importer_spark.session import session_cache
-
-    return session_cache(spark, namespace)
-
-
-# Per-OBJECT memo of the (canonical plan, file stats) base: computing
-# it costs two py4j round trips (analyzed-plan toString — a large
-# string — and inputFiles) plus the stats, ~50-100 ms on a merge
+# Per-OBJECT memo of the (canonical plan, file fingerprints) base:
+# computing it costs two py4j round trips (analyzed-plan toString — a
+# large string — and inputFiles) plus the stats, ~50-100 ms on a merge
 # source. A DataFrame object's plan never changes, and every builder
 # hands Merger a FRESH object when the corpus changes (frame_cache /
 # footer-cache fingerprints gate object reuse), so object identity ⇒
@@ -101,8 +95,8 @@ _ANCHOR_BASE: "_weakref.WeakKeyDictionary[DataFrame, object]" = (
 
 def _file_anchored_key(frame: DataFrame, extra: tuple):
     """Memo key for a data-derived property of ``frame``: its
-    #id-stripped analyzed plan + the (path, size, mtime) of every
-    input file + ``extra``. Same plan over same bytes ⇒ same verdict.
+    #id-stripped analyzed plan + the fingerprint of every input file +
+    ``extra``. Same plan over same bytes ⇒ same verdict.
     Returns None when the frame has NO file anchors (checkpointed /
     LogicalRDD / createDataFrame sources): two different datasets
     would canonicalize identically after id-stripping, so those are
@@ -117,12 +111,10 @@ def _file_anchored_key(frame: DataFrame, extra: tuple):
         try:
             plan = frame._jdf.queryExecution().analyzed().toString()
             canonical = re.sub(r"#\d+L?", "#", plan)
-            files = []
-            for f in frame.inputFiles():
-                p = f.removeprefix("file:")
-                st = os.stat(p)
-                files.append((p, st.st_size, st.st_mtime_ns))
-            base = (canonical, tuple(sorted(files))) if files else False
+            files = sorted(
+                fingerprint(f.removeprefix("file:")) for f in frame.inputFiles()
+            )
+            base = (canonical, tuple(files)) if files else False
         except Exception:
             return None
         try:
@@ -187,13 +179,13 @@ class Merger:
         # actually-empty source still raises on every construction
         # (only non-emptiness is ever recorded).
         probe = validate_anchor if validate_anchor is not None else data
-        memo = _file_anchored_memo(probe.sparkSession, "merge_nonempty")
+        nonempty = memo("merge_nonempty", probe.sparkSession)
         key = _file_anchored_key(probe, ())
-        if key is None or key not in memo:
+        if key is None or key not in nonempty:
             if data.isEmpty():
                 raise ValueError("data contains no records")
             if key is not None:
-                memo[key] = True
+                nonempty[key] = True
 
         self._target = target
         self._data_master = data
@@ -313,11 +305,11 @@ class Merger:
         frame = (
             self._validate_anchor if self._validate_anchor is not None else self._data
         )
-        memo = _file_anchored_memo(frame.sparkSession, "merge_validated_keys")
+        validated = memo("merge_validated_keys", frame.sparkSession)
         # No file anchors (e.g. a checkpointed/LogicalRDD source,
         # createDataFrame input): never memoized, always re-validate.
         key = _file_anchored_key(frame, tuple(self._join_on))
-        if key is not None and key in memo:
+        if key is not None and key in validated:
             return
         dup = (
             frame.groupBy(*self._join_on)
@@ -332,7 +324,7 @@ class Merger:
                 % (_plural(len(self._join_on)), _fmt_cols(self._join_on))
             )
         if key is not None:
-            memo[key] = True
+            validated[key] = True
 
     # --- properties (importer.py:107-123 parity: re-slice on change) --
 

@@ -18,6 +18,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from database_importer_spark.cache import fingerprint, memo
+
 SALT = "__dbis_salt"
 
 
@@ -117,8 +119,8 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-# Warm-path memo for the ensure_* helpers: (memo_token, sf_dir,
-# source fingerprint, args) → table name / path. Plan
+# Warm-path memo for the ensure_* helpers (cache.memo("ensure")):
+# (memo_token, source fingerprint, args) → table name / path. Plan
 # canonicalization (a py4j analyzed-plan round trip) and catalog
 # existence checks cost ~100-150 ms per query invocation once the
 # layout exists — pure per-query constant. A call site may opt in by
@@ -133,7 +135,6 @@ def write_bucketed(
 # itself ~30-70 ms of py4j round trips (reader + projection), and the
 # warm path never needs it — the factory is invoked only on a memo
 # miss.
-_ENSURE_MEMO: dict[tuple, str] = {}
 
 
 def ensure_bucketed_layout(
@@ -173,18 +174,16 @@ def ensure_bucketed_layout(
     import re
     import shutil
 
-    p = os.path.join(sf_dir, f"{source}.parquet")
-    st = os.stat(p)
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
+    fp = fingerprint(os.path.join(sf_dir, f"{source}.parquet"))
+    ensured = memo("ensure")
     memo_key = None
     if memo_token is not None:
         # the token stands in for the df's derivation (incl. columns),
         # so the warm path runs without materializing the df at all
         memo_key = (
-            "bkt", memo_token, os.path.abspath(sf_dir), source, fp,
-            tuple(keys), tuple(sort_cols or []), buckets,
+            "bkt", memo_token, fp, tuple(keys), tuple(sort_cols or []), buckets,
         )
-        hit = _ENSURE_MEMO.get(memo_key)
+        hit = ensured.get(memo_key)
         if hit is not None:
             return hit
     if callable(df):
@@ -206,14 +205,11 @@ def ensure_bucketed_layout(
         + f"|{buckets}"
     )
     shape_tag = hashlib.md5(shape.encode()).hexdigest()[:8]
-    dir_tag = "".join(
-        c if c.isalnum() else "_" for c in os.path.abspath(sf_dir)
-    ).lower()
-    table = f"dbis_bkt_{source}_{dir_tag}_{fp}_{shape_tag}"
+    table = f"dbis_bkt_{source}_{fp}_{shape_tag}"
 
     def done(name):
         if memo_key is not None:
-            _ENSURE_MEMO[memo_key] = name
+            ensured[memo_key] = name
         return name
 
     if spark.catalog.tableExists(table):
@@ -293,16 +289,14 @@ def ensure_partitioned_layout(
     import re
     import shutil
 
-    p = os.path.join(sf_dir, f"{source}.parquet")
-    st = os.stat(p)
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
+    fp = fingerprint(os.path.join(sf_dir, f"{source}.parquet"))
+    ensured = memo("ensure")
     memo_key = None
     if memo_token is not None:
         memo_key = (
-            "part", memo_token, os.path.abspath(sf_dir), source, fp,
-            part_col, files_per_partition, cluster_col,
+            "part", memo_token, fp, part_col, files_per_partition, cluster_col,
         )
-        hit = _ENSURE_MEMO.get(memo_key)
+        hit = ensured.get(memo_key)
         if hit is not None:
             return hit
     if callable(df):
@@ -317,15 +311,12 @@ def ensure_partitioned_layout(
         + "|" + str(cluster_col)
     )
     shape_tag = hashlib.md5(shape.encode()).hexdigest()[:8]
-    dir_tag = "".join(
-        c if c.isalnum() else "_" for c in os.path.abspath(sf_dir)
-    ).lower()
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    loc = os.path.join(wh, f"dbis_part_{source}_{dir_tag}_{fp}_{shape_tag}")
+    loc = os.path.join(wh, f"dbis_part_{source}_{fp}_{shape_tag}")
 
     def done(path):
         if memo_key is not None:
-            _ENSURE_MEMO[memo_key] = path
+            ensured[memo_key] = path
         return path
 
     if os.path.exists(os.path.join(loc, "_SUCCESS")):
@@ -377,11 +368,10 @@ def ensure_partitioned_layout(
 # entry is simply never hit again. Only the LEAF DataFrame is cached
 # — per-query filters/projections still build per call — and layout
 # consumers never self-join the layout, so shared expression ids are
-# safe. Scoped to the owning LIVE session via session.session_cache
-# (child sessions have their own SQLConf; a DataFrame is bound to the
-# session that created it; ADVICE r6: id(spark) keys can alias a
-# recycled session id, and a module dict would pin DataFrames for
-# process lifetime). Keys carry a schema fingerprint: two callers
+# safe. Scoped to the owning LIVE session via cache.memo (child
+# sessions have their own SQLConf; a DataFrame is bound to the session
+# that created it, and a process memo would pin DataFrames for process
+# lifetime). Keys carry a schema fingerprint: two callers
 # reading the same loc with different schemas get distinct leaves
 # instead of the first registration silently winning.
 
@@ -396,9 +386,7 @@ def read_partitioned_layout(spark: SparkSession, loc: str, schema) -> DataFrame:
     """Path-based read of an ensure_partitioned_layout output with an
     explicit schema (skips footer + partition-type inference) and a
     per-session leaf cache (skips per-call partition discovery)."""
-    from database_importer_spark.session import session_cache
-
-    readers = session_cache(spark, "layout_readers")
+    readers = memo("layout_readers", spark)
     key = (loc, _schema_tag(schema))
     df = readers.get(key)
     if df is None:
@@ -416,13 +404,11 @@ def partitioned_layout_view(spark: SparkSession, loc: str, schema) -> str:
     regenerated corpus gets a fresh view name."""
     import hashlib
 
-    from database_importer_spark.session import session_cache
-
     vname = (
         "dbis_vpart_"
         + hashlib.md5(f"{loc}|{_schema_tag(schema)}".encode()).hexdigest()[:10]
     )
-    registered = session_cache(spark, "layout_views")
+    registered = memo("layout_views", spark)
     if vname not in registered:
         read_partitioned_layout(spark, loc, schema).createOrReplaceTempView(vname)
         registered[vname] = loc

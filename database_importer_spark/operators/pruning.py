@@ -41,27 +41,7 @@ from __future__ import annotations
 
 import os
 
-# threshold is a pure function of the file bytes — safe to memoize
-# process-wide on (abspath, size, mtime_ns, column, k). BOUNDED
-# (VERDICT r7 hygiene 3): keys embed file fingerprints, so a
-# long-lived process cycling corpora would otherwise grow it for
-# process lifetime. FIFO eviction is fine — the workload re-reads the
-# same handful of (table, column) pairs, and a miss just re-reads
-# footers.
-_CACHE_MAX = 64
-
-
-class _BoundedCache(dict):
-    def __setitem__(self, key, value):
-        if key not in self and len(self) >= _CACHE_MAX:
-            del self[next(iter(self))]
-        super().__setitem__(key, value)
-
-
-_THRESHOLD_CACHE: dict[tuple, float | None] = _BoundedCache()
-
-# exact footer MAX per (files fingerprint, column) — same class
-_FOOTER_MAX_CACHE: dict[tuple, int | None] = _BoundedCache()
+from database_importer_spark.cache import fingerprint, memo
 
 
 def _parquet_files(path: str) -> list[str]:
@@ -76,13 +56,6 @@ def _parquet_files(path: str) -> list[str]:
     return [path]
 
 
-def _fingerprint(files: list[str], col: str, k: int) -> tuple:
-    parts = [(os.path.abspath(f),) + tuple(
-        (lambda s: (s.st_size, s.st_mtime_ns))(os.stat(f))
-    ) for f in files]
-    return (tuple(parts), col, k)
-
-
 def topk_prune_threshold(path: str, col: str, k: int) -> float | None:
     """Lower bound on the k-th largest value of ``col`` across all
     row groups under ``path``, from footer stats plus a one-column
@@ -92,10 +65,12 @@ def topk_prune_threshold(path: str, col: str, k: int) -> float | None:
     import numpy as np
     import pyarrow.parquet as pq
 
+    # a pure function of the file bytes: memoized on their fingerprint
+    thresholds = memo("topk_thresholds")
+    key = (fingerprint(path), col, k)
+    if key in thresholds:
+        return thresholds[key]
     files = _parquet_files(path)
-    key = _fingerprint(files, col, k)
-    if key in _THRESHOLD_CACHE:
-        return _THRESHOLD_CACHE[key]
 
     # (stats_max, file, rg_index) for every row group; None max → no
     # stats for that group → it can never be pruned, but it also
@@ -109,10 +84,10 @@ def topk_prune_threshold(path: str, col: str, k: int) -> float | None:
         try:
             ci = md.schema.to_arrow_schema().get_field_index(col)
         except KeyError:
-            _THRESHOLD_CACHE[key] = None
+            thresholds[key] = None
             return None
         if ci < 0:
-            _THRESHOLD_CACHE[key] = None
+            thresholds[key] = None
             return None
         for i in range(md.num_row_groups):
             st = md.row_group(i).column(ci).statistics
@@ -121,7 +96,7 @@ def topk_prune_threshold(path: str, col: str, k: int) -> float | None:
             groups.append((float(st.max), f, i))
 
     if not groups:
-        _THRESHOLD_CACHE[key] = None
+        thresholds[key] = None
         return None
 
     groups.sort(key=lambda g: g[0], reverse=True)
@@ -142,11 +117,11 @@ def topk_prune_threshold(path: str, col: str, k: int) -> float | None:
             break
 
     if have < k:
-        _THRESHOLD_CACHE[key] = None
+        thresholds[key] = None
         return None
     allv = np.concatenate(vals)
     thr = float(np.partition(allv, len(allv) - k)[len(allv) - k])
-    _THRESHOLD_CACHE[key] = thr
+    thresholds[key] = thr
     return thr
 
 
@@ -166,10 +141,11 @@ def footer_exact_max(path: str, col: str) -> int | None:
     groups are stats-less or all-NULL, fall back)."""
     import pyarrow.parquet as pq
 
+    maxes = memo("footer_max")
+    key = (fingerprint(path), col)
+    if key in maxes:
+        return maxes[key]
     files = _parquet_files(path)
-    key = _fingerprint(files, col, -1)
-    if key in _FOOTER_MAX_CACHE:
-        return _FOOTER_MAX_CACHE[key]
 
     out: int | None = None
     for f in files:
@@ -182,17 +158,17 @@ def footer_exact_max(path: str, col: str) -> int | None:
         import pyarrow.types as pat
 
         if ci < 0 or not pat.is_integer(schema.field(ci).type):
-            _FOOTER_MAX_CACHE[key] = None
+            maxes[key] = None
             return None
         for i in range(md.num_row_groups):
             rg = md.row_group(i).column(ci)
             st = rg.statistics
             if st is None or not st.has_min_max:
                 if rg.num_values > 0:  # real values but no stats
-                    _FOOTER_MAX_CACHE[key] = None
+                    maxes[key] = None
                     return None
                 continue
             mx = int(st.max)
             out = mx if out is None or mx > out else out
-    _FOOTER_MAX_CACHE[key] = out
+    maxes[key] = out
     return out

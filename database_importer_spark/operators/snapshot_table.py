@@ -57,16 +57,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from database_importer_spark.cache import fingerprint, memo
 from database_importer_spark.operators.merge import Merger
 from database_importer_spark.operators.partitioning import _layout_lock
-from database_importer_spark.operators.pruning import _BoundedCache
 
 _FORMAT = "dbis-snapshot/1"
-
-# manifests are immutable once published (link(2) never overwrites),
-# so caching on (table root, version) is sound process-wide. Bounded:
-# a long sweep cycling corpora must not grow it for process lifetime.
-_MANIFEST_CACHE: dict[tuple, dict] = _BoundedCache()
 
 
 def _manifest_dir(loc: str) -> str:
@@ -94,14 +89,19 @@ def latest_version(loc: str) -> int | None:
 
 
 def load_manifest(loc: str, version: int) -> dict:
-    key = (os.path.abspath(loc), version)
-    hit = _MANIFEST_CACHE.get(key)
+    # a published manifest is immutable (link(2) never overwrites), but
+    # a table root can be removed and recreated at the same path: key
+    # on the manifest file's fingerprint, not on (loc, version)
+    path = _manifest_path(loc, version)
+    manifests = memo("manifests")
+    key = fingerprint(path)
+    hit = manifests.get(key)
     if hit is None:
-        with open(_manifest_path(loc, version)) as f:
+        with open(path) as f:
             hit = json.load(f)
         if hit.get("format") != _FORMAT:
-            raise ValueError(f"not a {_FORMAT} manifest: {key}")
-        _MANIFEST_CACHE[key] = hit
+            raise ValueError(f"not a {_FORMAT} manifest: {path}")
+        manifests[key] = hit
     return hit
 
 
@@ -2309,7 +2309,6 @@ def vacuum_snapshot(loc: str, keep_latest: int = 1) -> tuple[int, int]:
         p = _manifest_path(loc, v)
         if os.path.exists(p):
             os.unlink(p)
-            _MANIFEST_CACHE.pop((os.path.abspath(loc), v), None)
             dropped_m += 1
     dropped_f = 0
     data_root = os.path.join(loc, "data")

@@ -10,12 +10,6 @@ from pyspark.sql.window import Window
 
 from database_importer_spark.plans.registry import DEC, dec4_sum, declare, t
 
-# events-day layout read schema keyed by layout loc (content-addressed;
-# regeneration invalidates) — warm calls skip rebuilding the source
-# frame just to ask for .schema.
-_EV_LAYOUT_SCHEMA: dict[str, object] = {}
-
-
 @declare(
     "agg_events_value_rollup",
     oracle="""
@@ -105,6 +99,7 @@ def agg_events_rollup_partitioned(spark, sf_dir):
     groupBy reads it for free instead of re-deriving date_trunc per
     event. Fixed shape (pruned scan → partial agg → one exchange) →
     static-plan session."""
+    from database_importer_spark.cache import memo
     from database_importer_spark.operators.partitioning import (
         ensure_partitioned_layout,
         partitioned_layout_view,
@@ -124,10 +119,11 @@ def agg_events_rollup_partitioned(spark, sf_dir):
     # explicit schema skips per-query footer + partition inference
     # (same measured win as tpch_q6_partitioned); cached per layout
     # loc so warm calls skip building the source frame too
-    schema = _EV_LAYOUT_SCHEMA.get(loc)
+    schemas = memo("layout_schemas")
+    schema = schemas.get(loc)
     if schema is None:
         schema = ev().schema
-        _EV_LAYOUT_SCHEMA[loc] = schema
+        schemas[loc] = schema
     from database_importer_spark.plans.registry import dec4_sum_sql
 
     v = partitioned_layout_view(spark, loc, schema)

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from database_importer_spark.cache import fingerprint, memo
 from database_importer_spark.operators.merge import Merger, candidate_key_check
 from database_importer_spark.plans.registry import DEC, declare, frame_cache, t
 
@@ -765,15 +766,10 @@ def _snap_loc(spark, sf_dir, name="upsert"):
     state."""
     import os
 
-    p = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(p)
-    fp = f"{st.st_size}_{st.st_mtime_ns}"
-    dir_tag = "".join(
-        c if c.isalnum() else "_" for c in os.path.abspath(sf_dir)
-    ).lower()
+    fp = fingerprint(os.path.join(sf_dir, "orders.parquet"))
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     token = _snap_contract_token(name)
-    return os.path.join(wh, f"dbis_snap_{name}_{dir_tag}_{fp}_{token}")
+    return os.path.join(wh, f"dbis_snap_{name}_{fp}_{token}")
 
 
 def _snap_batch_touched(spark, sf_dir, loc):
@@ -814,9 +810,7 @@ def _snap_ensure_merged(spark, sf_dir):
         latest_version,
         merge_snapshot_commit,
     )
-    from database_importer_spark.session import session_cache
-
-    cache = session_cache(spark, "snapshot_merge_state")
+    cache = memo("snapshot_merge_state", spark)
     loc = _snap_loc(spark, sf_dir)
     hit = cache.get(loc)
     if hit is None:
@@ -1557,13 +1551,10 @@ def table_changes_cursor(spark, sf_dir):
     from database_importer_spark.operators.snapshot_table import (
         latest_version,
     )
-    from database_importer_spark.session import (
-        session_cache,
-        static_plan_session,
-    )
+    from database_importer_spark.session import static_plan_session
 
     rv_now = latest_version(rloc)
-    cache = session_cache(spark, "replica_frame")
+    cache = memo("replica_frame", spark)
     ck = (rloc, rv_now)
     df = cache.get(ck)
     if df is None:
@@ -1746,10 +1737,8 @@ def table_vacuum_retention(spark, sf_dir):
     from database_importer_spark.scratch import scratch_dir
     import os
 
-    st_ = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    loc = os.path.join(
-        scratch_dir(f"vret_{st_.st_size}_{st_.st_mtime_ns}"), "tbl"
-    )
+    fp = fingerprint(os.path.join(sf_dir, "orders.parquet"))
+    loc = os.path.join(scratch_dir(f"vret_{fp}"), "tbl")
     _snap_create_at(spark, sf_dir, loc)
     create_tag(loc, "audit_v0", version=0)
     for parent in (0, 1):
@@ -2089,13 +2078,10 @@ def table_partition_evolution(spark, sf_dir):
     # session (no AQE wrapper) + frame cache per (table, version) —
     # the r9 point-lookup warm path; version in the key invalidates
     # on commits.
-    from database_importer_spark.session import (
-        session_cache,
-        static_plan_session,
-    )
+    from database_importer_spark.session import static_plan_session
 
     v = latest_version(loc)
-    cache = session_cache(spark, "pspec_frame")
+    cache = memo("pspec_frame", spark)
     ck = (loc, v)
     df = cache.get(ck)
     if df is None:
@@ -2208,10 +2194,7 @@ def table_point_lookup_pruned(spark, sf_dir):
         latest_version,
         read_snapshot_keyrange,
     )
-    from database_importer_spark.session import (
-        session_cache,
-        static_plan_session,
-    )
+    from database_importer_spark.session import static_plan_session
 
     loc = _snap_loc(spark, sf_dir, "ptl")
 
@@ -2246,7 +2229,7 @@ def table_point_lookup_pruned(spark, sf_dir):
     # pattern as the layout reader caches). The version in the key
     # invalidates if the table ever gains commits.
     v = latest_version(loc)
-    cache = session_cache(spark, "ptl_frame")
+    cache = memo("ptl_frame", spark)
     ck = (loc, v, _PTL_LO, _PTL_HI)
     df = cache.get(ck)
     if df is None:

@@ -24,7 +24,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from database_importer_spark.session import session_cache
+from database_importer_spark.cache import fingerprint, memo
 
 
 @dataclass
@@ -78,34 +78,26 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-# Temp-view memo: (session, sf_dir, table, file fingerprint) → view
-# name. Lets a declared plan be ONE spark.sql(...) call instead of a
-# chain of py4j DataFrame calls: each DataFrame method is a Python→JVM
-# round trip (~5-10 ms), so a six-way join built through the API costs
-# ~150-200 ms of pure construction per invocation, while one sql()
-# call parses+analyzes entirely JVM-side (~40 ms measured for the same
-# q5 shape at sf10). The file fingerprint keys invalidation: a
+# Temp-view memo: (session, table fingerprint) → view name. Lets a
+# declared plan be ONE spark.sql(...) call instead of a chain of py4j
+# DataFrame calls: each DataFrame method is a Python→JVM round trip
+# (~5-10 ms), so a six-way join built through the API costs ~150-200
+# ms of pure construction per invocation, while one sql() call
+# parses+analyzes entirely JVM-side (~40 ms measured for the same q5
+# shape at sf10). The fingerprint in the name keys invalidation: a
 # regenerated corpus re-registers the view over the fresh schema.
-# Stored per live session via session.session_cache (ADVICE r6: an
-# id(spark) key could alias a recycled session id).
 
 
 def sql_view(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Register (once per session + corpus fingerprint) a temp view
+    """Register (once per session + table fingerprint) a temp view
     over ``t(spark, sf_dir, name)`` and return its name — the leaf
     handle for single-``spark.sql`` declared plans."""
-    import hashlib
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    st = os.stat(path)
-    tag = hashlib.md5(
-        f"{os.path.abspath(sf_dir)}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:8]
-    vname = f"dbis_v_{name}_{tag}"
-    memo = session_cache(spark, "sql_views")
-    if vname not in memo:
+    fp = fingerprint(os.path.join(sf_dir, f"{name}.parquet"))
+    vname = f"dbis_v_{name}_{fp}"
+    views = memo("sql_views", spark)
+    if vname not in views:
         t(spark, sf_dir, name).createOrReplaceTempView(vname)
-        memo[vname] = vname
+        views[vname] = vname
     return vname
 
 
@@ -118,30 +110,18 @@ def frame_cache(spark: SparkSession, sf_dir: str, name: str, build):
     are pure functions of the corpus (no mutable tables, no layout
     side effects beyond their own memoized ensure_*); the fingerprint
     covers every *.parquet in sf_dir so a regenerated corpus rebuilds.
-    The cache dies with the session (session_cache WeakKey)."""
-    cache = session_cache(spark, "declared_frames")
+    The cache dies with the session."""
     d = os.path.abspath(sf_dir)
-    # ADVICE r11: directory-shaped *.parquet entries (scaled corpora
-    # write part files under lineitem.parquet/) must fingerprint their
-    # CONTENTS — a dir's own size/mtime does not change when a
-    # same-named part file is rewritten in place.
-    fp = []
-    for n in sorted(os.listdir(d)):
-        if not n.endswith(".parquet"):
-            continue
-        p = os.path.join(d, n)
-        if os.path.isdir(p):
-            for m in sorted(os.listdir(p)):
-                st = os.stat(os.path.join(p, m))
-                fp.append((f"{n}/{m}", st.st_size, st.st_mtime_ns))
-        else:
-            st = os.stat(p)
-            fp.append((n, st.st_size, st.st_mtime_ns))
-    k = (name, d, tuple(fp))
-    df = cache.get(k)
+    k = (name,) + tuple(
+        fingerprint(os.path.join(d, n))
+        for n in sorted(os.listdir(d))
+        if n.endswith(".parquet")
+    )
+    frames = memo("declared_frames", spark)
+    df = frames.get(k)
     if df is None:
         df = build()
-        cache[k] = df
+        frames[k] = df
     return df
 
 

@@ -33,13 +33,6 @@ def REV_SUM():
 
 REV_SQL = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(25,4))"
 
-# q6-partitioned layout read schema, keyed by layout loc (loc is
-# content-addressed on the source fingerprint, so regeneration
-# invalidates) — lets warm calls skip rebuilding the layout's source
-# frame just to ask for .schema.
-_Q6_LAYOUT_SCHEMA: dict[str, object] = {}
-
-
 @declare(
     "tpch_q3_shipping_priority",
     cache_frame=True,
@@ -388,6 +381,7 @@ def tpch_q6_partitioned(spark, sf_dir):
     session. The full-scan twin stays declared: it measures the
     no-layout cost the same way `tpch_q3` does for the bucketed
     family."""
+    from database_importer_spark.cache import memo
     from database_importer_spark.operators.partitioning import (
         ensure_partitioned_layout,
         partitioned_layout_view,
@@ -414,10 +408,11 @@ def tpch_q6_partitioned(spark, sf_dir):
     # 309→189 ms at sf10; a catalog table was probed SLOWER (217 ms,
     # metastore partition pruning overhead). Cached per layout loc
     # (content-addressed) so warm calls also skip building li.
-    schema = _Q6_LAYOUT_SCHEMA.get(loc)
+    schemas = memo("layout_schemas")
+    schema = schemas.get(loc)
     if schema is None:
         schema = li().schema
-        _Q6_LAYOUT_SCHEMA[loc] = schema
+        schemas[loc] = schema
     from database_importer_spark.plans.registry import dec4_sum_sql
 
     v = partitioned_layout_view(spark, loc, schema)

@@ -281,28 +281,3 @@ def pushdown_plan_session(spark: SparkSession) -> SparkSession:
     child._dbis_pushdown_child = child
     spark._dbis_pushdown_child = child
     return child
-
-
-# Per-session cache registry (ADVICE r6): subsystem caches used to key
-# on id(spark), but a garbage-collected session's id can be recycled by
-# a brand-new session, which would then inherit DataFrames/temp-view
-# claims bound to the dead session. A WeakKeyDictionary keyed on the
-# LIVE session object can never alias (identity, not address), and a
-# collected session drops its whole cache — nothing is pinned for
-# process lifetime. (Our factories memoize sessions, so the Python
-# wrapper identity is stable across calls.)
-import weakref  # noqa: E402
-
-_SESSION_CACHES: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def session_cache(spark: SparkSession, namespace: str) -> dict:
-    """Mutable dict scoped to (live session, namespace). Entries die
-    with the session; callers own key/value semantics per namespace."""
-    caches = _SESSION_CACHES.get(spark)
-    if caches is None:
-        caches = {}
-        _SESSION_CACHES[spark] = caches
-    return caches.setdefault(namespace, {})

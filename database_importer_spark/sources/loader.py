@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from database_importer_spark.cache import fingerprint, memo
+
 # The ten driver-generated tables (TESTDATA.md). Order matters only
 # for display; keys are the canonical table names used everywhere.
 TABLES = [
@@ -75,33 +77,28 @@ def _ensure_nanos_readable(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-# Inferred-schema cache: schema inference re-parses the parquet
-# footer on EVERY read.parquet call — ~80 ms per call on the
-# 489-row-group sf10 lineitem (489 × 16 column-chunk entries), paid
-# by every query's construction. The schema is a pure function of
-# the file bytes, so cache it on (path, size, mtime_ns) and hand it
-# to the reader explicitly; any rewrite of the file invalidates the
-# key. At 100 TB this is what a catalog does for you — table schemas
-# resolve from metadata, not from re-reading data-file footers per
-# query.
-_SCHEMA_CACHE: dict[tuple[str, int, int], T.StructType] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read ``{sf_dir}/{name}.parquet`` with its schema memoized on the
+    file fingerprint. Schema inference re-parses the parquet footer on
+    every read.parquet call (~80 ms on the 489-row-group sf10
+    lineitem), paid by every query's construction; the schema is a
+    pure function of the file bytes. At 100 TB this is what a catalog
+    does for you: table schemas resolve from metadata, not from
+    re-reading data-file footers per query."""
     if name in NS_TIMESTAMP_COLS:
         _ensure_nanos_readable(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        st = os.stat(path)
-        key = (os.path.abspath(path), st.st_size, st.st_mtime_ns)
+        key = fingerprint(path)
     except OSError:
         key = None  # missing/odd path: let the reader raise its error
-    if key is not None and key in _SCHEMA_CACHE:
-        df = spark.read.schema(_SCHEMA_CACHE[key]).parquet(path)
+    schemas = memo("table_schemas")
+    if key in schemas:
+        df = spark.read.schema(schemas[key]).parquet(path)
     else:
         df = spark.read.parquet(path)
         if key is not None:
-            _SCHEMA_CACHE[key] = df.schema
+            schemas[key] = df.schema
     return _normalize_ns_timestamps(name, df)
 
 

@@ -117,19 +117,14 @@ def read_events_stream_sliced(
     observable. Staging is process-scoped scratch (the r8 fixed-path
     collision class) and memoized on the _SUCCESS marker; ts is
     normalized to µs exactly like the single-batch reader."""
-    import hashlib
-
+    from database_importer_spark.cache import fingerprint
     from database_importer_spark.scratch import scratch_dir
     from database_importer_spark.sources.loader import _ensure_nanos_readable
 
     _ensure_nanos_readable(spark)
     sf_dir = os.path.abspath(sf_dir)
     path = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(path)
-    tag = hashlib.md5(
-        f"{sf_dir}_{st.st_size}_{st.st_mtime_ns}".encode()
-    ).hexdigest()[:10]
-    d = os.path.join(scratch_dir(f"events_sliced_{slices}"), tag)
+    d = os.path.join(scratch_dir(f"events_sliced_{slices}"), fingerprint(path))
     if not os.path.exists(os.path.join(d, "_SUCCESS")):
         if _events_ts_is_nanos(sf_dir):
             raw = spark.read.schema(EVENTS_RAW_SCHEMA_NANOS).parquet(path)

@@ -124,24 +124,23 @@ def test_live_table_is_process_scoped_and_gcs_dead_siblings(spark):
     parallel cpus7+sf0.01 sweep). The loc must embed our pid, and a
     sibling table left by a DEAD process must be garbage-collected on
     first build while a live peer's table is left alone."""
-    from database_importer_spark.operators.merge_partitioned import (
-        _ENSURE_MEMO,
-        ensure_live_target,
-    )
+    from database_importer_spark.cache import memo
 
     loc, _, _, _ = _pm_parts(spark, SF)
     assert f"_p{os.getpid()}_" in os.path.basename(loc)
 
-    wh = os.path.dirname(loc)
-    dead = os.path.join(wh, "dbis_live_upsert_pm_p999999999_orders_x_1_2")
+    wh, ours = os.path.split(loc)
+    # siblings named exactly like ours, save the owning pid
+    dead = os.path.join(wh, ours.replace(f"_p{os.getpid()}_", "_p999999999_"))
     os.makedirs(dead, exist_ok=True)
-    alive = os.path.join(wh, f"dbis_live_upsert_pm_p1_orders_x_1_2")
+    alive = os.path.join(wh, ours.replace(f"_p{os.getpid()}_", "_p1_"))
     os.makedirs(alive, exist_ok=True)  # pid 1 (init) is always alive
     # force the ensure path to run its GC sweep (fresh memo + no
     # _SUCCESS check short-circuit for OUR table is fine — GC runs
     # before the lock when the table is missing; use a fresh owner)
-    for k in [k for k in list(_ENSURE_MEMO) if k[0] == "live" and k[1] == "upsert_pm"]:
-        _ENSURE_MEMO.pop(k, None)
+    ensured = memo("ensure")
+    for k in [k for k in list(ensured) if k[0] == "live" and k[1] == "upsert_pm"]:
+        ensured.pop(k, None)
     import shutil
 
     shutil.rmtree(loc, ignore_errors=True)

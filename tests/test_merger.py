@@ -315,9 +315,9 @@ def test_validate_memo_fires_only_for_file_anchored_sources(spark, tmp_path):
     an RDD/createDataFrame source has no file anchors and must
     re-validate every call (two different datasets would canonicalize
     identically after #id-stripping)."""
-    from database_importer_spark.session import session_cache
+    from database_importer_spark.cache import memo as cache_memo
 
-    memo = session_cache(spark, "merge_validated_keys")
+    memo = cache_memo("merge_validated_keys", spark)
     memo.clear()
 
     target = spark.createDataFrame(SEED, SCHEMA)
@@ -348,9 +348,9 @@ def test_validate_anchor_covers_checkpointed_source(spark, tmp_path):
     files) memoizes via its pre-checkpoint validate_anchor — and a
     DUPLICATE-keyed anchored source still raises (failures are never
     memoized)."""
-    from database_importer_spark.session import session_cache
+    from database_importer_spark.cache import memo as cache_memo
 
-    memo = session_cache(spark, "merge_validated_keys")
+    memo = cache_memo("merge_validated_keys", spark)
     memo.clear()
 
     target = spark.createDataFrame(SEED, SCHEMA)

@@ -84,7 +84,9 @@ def test_lsh_pairs_subset_of_exact(spark, docs):
     thresh = 0.3
     lsh = set(
         (r["id_a"], r["id_b"])
-        for r in D.minhash_near_dups(docs, "text", "doc_id", threshold=thresh).collect()
+        for r in D.minhash_near_dups_portable(
+            docs, "text", "doc_id", threshold=thresh
+        ).collect()
     )
     sh = D.shingles(docs, "text", 3)
     all_pairs = (
@@ -207,25 +209,13 @@ def test_minhash_recall_floor_on_planted_corpus(spark):
     assert len(exact) >= 20  # corpus really contains ≥0.5-Jaccard pairs
     found = {
         (r["id_a"], r["id_b"])
-        for r in D.minhash_near_dups(
+        for r in D.minhash_near_dups_portable(
             corpus, "text", "doc_id", threshold=0.5, target_recall=0.9
         ).collect()
     }
     assert found <= exact  # exact-Jaccard verify: no false positives
     recall = len(found & exact) / len(exact)
     assert recall >= 0.9, f"MinHash-LSH recall {recall:.3f} < 0.9"
-    # the portable md5+affine family (the declared query's hash path,
-    # operators/dedup.minhash_near_dups_portable) must clear the same
-    # floor — hash family quality, not just the xxhash64 variant's
-    found_p = {
-        (r["id_a"], r["id_b"])
-        for r in D.minhash_near_dups_portable(
-            corpus, "text", "doc_id", threshold=0.5, target_recall=0.9
-        ).collect()
-    }
-    assert found_p <= exact
-    recall_p = len(found_p & exact) / len(exact)
-    assert recall_p >= 0.9, f"portable MinHash recall {recall_p:.3f} < 0.9"
 
 
 def test_simhash_identical_texts_collide(spark):
@@ -234,7 +224,10 @@ def test_simhash_identical_texts_collide(spark):
          (3, "completely different words here")],
         "doc_id long, text string",
     )
-    fp = {r["doc_id"]: r["simhash64"] for r in D.simhash(df, "text", "doc_id").collect()}
+    fp = {
+        r["doc_id"]: r["simhash64"]
+        for r in D.simhash_portable(df, "text", "doc_id").collect()
+    }
     assert fp[1] == fp[2]
     assert fp[1] != fp[3]
 
@@ -246,7 +239,7 @@ def test_simhash_band_blocking_complete_vs_brute_force(spark, sf_dir):
     from database_importer_spark.sources.loader import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    fp = D.simhash(docs, "text", "doc_id").cache()
+    fp = D.simhash_portable(docs, "text", "doc_id").cache()
     try:
         blocked = {
             (r["id_a"], r["id_b"], r["hamming"])
@@ -881,16 +874,20 @@ def test_footer_exact_max(tmp_path):
 
 
 def test_pruning_caches_are_bounded():
-    """VERDICT r7 hygiene 3: the fingerprint-keyed footer caches must
-    not grow for process lifetime — FIFO-bounded at _CACHE_MAX."""
-    from database_importer_spark.operators.pruning import (
-        _CACHE_MAX,
-        _BoundedCache,
-    )
+    """VERDICT r7 hygiene 3: fingerprint-keyed caches (the footer
+    caches among them) must not grow for process lifetime — every
+    cache.memo namespace, process- or session-owned, is FIFO-bounded
+    at the one cap."""
+    from database_importer_spark.cache import _CAP, memo
 
-    c = _BoundedCache()
-    for i in range(3 * _CACHE_MAX):
-        c[("k", i)] = i
-    assert len(c) == _CACHE_MAX
-    assert ("k", 3 * _CACHE_MAX - 1) in c  # newest kept
-    assert ("k", 0) not in c  # oldest evicted
+    class Owner:  # stands in for a live session: any weakref-able key
+        pass
+
+    owner = Owner()
+    for c in (memo("bounded_probe"), memo("bounded_probe", owner)):
+        for i in range(3 * _CAP):
+            c[("k", i)] = i
+        assert len(c) == _CAP
+        assert ("k", 3 * _CAP - 1) in c  # newest kept
+        assert ("k", 0) not in c  # oldest evicted
+    memo("bounded_probe").clear()

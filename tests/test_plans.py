@@ -915,13 +915,11 @@ def test_skew_join_builds_under_vanilla_byte_suffixed_conf(spark):
     ('134217728b', the vanilla-session default the driver runs under —
     the repo session's '32m' masked the broken parse across five green
     sweep configurations)."""
-    from database_importer_spark.session import (
-        session_cache,
-        skew_plan_session,
-    )
+    from database_importer_spark.cache import memo
+    from database_importer_spark.session import skew_plan_session
 
     child = skew_plan_session(spark)
-    frames = session_cache(child, "declared_frames")
+    frames = memo("declared_frames", child)
     for k in [k for k in frames if k[0] == "join_skew_aqe"]:
         frames.pop(k)  # force the builder (not a memoized frame) to run
     prev = child.conf.get("spark.sql.files.maxPartitionBytes")
@@ -935,6 +933,70 @@ def test_skew_join_builds_under_vanilla_byte_suffixed_conf(spark):
             frames.pop(k)  # do not leak a vanilla-conf-built plan
 
 
+_IMPURE_BUILDER_ATTRS = {
+    "localCheckpoint",
+    "cache",
+    "persist",
+    "createDataFrame",
+    "collect",
+    "count",
+    "isEmpty",
+    "toPandas",
+    "write",
+    "writeStream",
+    "foreachBatch",
+    "set",  # spark.conf.set / catalog mutation
+}
+
+
+def _impure_builder_calls(src: str) -> set[str]:
+    """Forbidden attribute uses in a plan builder's source: actions,
+    checkpoints, writes, streams and conf mutation."""
+    import ast
+
+    tree = ast.parse(src)
+    parent = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+    hits = set()
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Attribute):
+            continue
+        if node.attr == "count":
+            # the ACTION is the zero-arg method df.count();
+            # F.count(col) is the aggregate expression
+            call = parent.get(node)
+            if not (isinstance(call, ast.Call) and call.func is node):
+                continue
+            if call.args or call.keywords:
+                continue
+        if node.attr == "set":
+            # only conf mutation counts (x.conf.set(...))
+            v = node.value
+            if not (isinstance(v, ast.Attribute) and v.attr == "conf"):
+                continue
+        if node.attr in _IMPURE_BUILDER_ATTRS:
+            hits.add(node.attr)
+    return hits
+
+
+def test_purity_scan_flags_seeded_impure_builder():
+    """Negative control for the scan below: a builder that runs
+    df.count() (an action whose result the plan would embed) is
+    flagged; the F.count(col) aggregate expression is not."""
+    impure = (
+        "def build(spark, sf_dir):\n"
+        "    df = t(spark, sf_dir, 'orders')\n"
+        "    n = df.count()\n"
+        "    return df.limit(n)\n"
+    )
+    pure = (
+        "def build(spark, sf_dir):\n"
+        "    df = t(spark, sf_dir, 'orders')\n"
+        "    return df.groupBy('o_custkey').agg(F.count('o_orderkey'))\n"
+    )
+    assert _impure_builder_calls(impure) == {"count"}
+    assert _impure_builder_calls(pure) == set()
+
+
 def test_cached_builders_are_pure_by_source():
     """Every declare(cache_frame=True) builder must be a PURE plan
     constructor: no checkpoint (would pin computed rows across
@@ -945,24 +1007,9 @@ def test_cached_builders_are_pure_by_source():
     gets reviewed at flag time, but this catches the direct cases
     (r11 audit rule, pinned registry-wide in r12 when the flag set
     grew beyond the headline)."""
-    import ast
     import inspect
     import textwrap
 
-    forbidden_attrs = {
-        "localCheckpoint",
-        "cache",
-        "persist",
-        "createDataFrame",
-        "collect",
-        "count",
-        "isEmpty",
-        "toPandas",
-        "write",
-        "writeStream",
-        "foreachBatch",
-        "set",  # spark.conf.set / catalog mutation
-    }
     # llm_similarity_topk's ingestion collect is the one AUDITED
     # exception: memoized per corpus fingerprint since r7, with its
     # own zero-jobs-on-rebuild audit test — the returned frame still
@@ -979,28 +1026,7 @@ def test_cached_builders_are_pure_by_source():
         src = textwrap.dedent(
             inspect.getsource(inspect.unwrap(REGISTRY[key].fn))
         )
-        hits = set()
-        for node in ast.walk(ast.parse(src)):
-            if not isinstance(node, ast.Attribute):
-                continue
-            if node.attr == "count":
-                # the ACTION is the zero-arg method df.count();
-                # F.count(col) is the aggregate expression
-                parent_call = None
-                for c in ast.walk(ast.parse(src)):
-                    if isinstance(c, ast.Call) and c.func is node:
-                        parent_call = c
-                        break
-                if parent_call is None or parent_call.args or parent_call.keywords:
-                    continue
-            if node.attr == "set":
-                # only conf mutation counts (x.conf.set(...))
-                v = node.value
-                if not (isinstance(v, ast.Attribute) and v.attr == "conf"):
-                    continue
-            if node.attr in forbidden_attrs:
-                hits.add(node.attr)
-        hits -= whitelist.get(key, set())
+        hits = _impure_builder_calls(src) - whitelist.get(key, set())
         if hits:
             bad[key] = sorted(hits)
     assert not bad, f"impure cached builders: {bad}"

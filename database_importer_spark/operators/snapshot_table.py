@@ -20,12 +20,15 @@ no lakehouse jars (carried verdict item since r3):
   with file-level partition-column min/max stats (Iceberg-style file
   pruning metadata: the planner prunes files from the manifest before
   the engine lists or reads anything);
-* commits are ATOMIC and OPTIMISTICALLY CONCURRENT: the new manifest
-  is staged to a temp name and published with ``os.link`` — link(2)
-  fails with EEXIST if a peer already claimed the version, and the
-  loser recomputes against the winner's state and retries (exactly
-  Delta's commit-log protocol, with the local filesystem's atomic
-  link standing in for the object-store conditional put);
+* commits are ATOMIC and OPTIMISTICALLY CONCURRENT: every commit op
+  runs through ONE driver, ``_commit`` — resolve the parent manifest,
+  let the op build its child (writing any new files), publish
+  ``v{N+1}`` through ``_publish`` (staged to a temp name, then
+  ``os.link`` — link(2) fails with EEXIST if a peer already claimed
+  the version), and on that conflict drop the op's orphan commit dirs
+  and rebuild against the winner's state, a bounded number of times
+  (exactly Delta's commit-log protocol, with the local filesystem's
+  atomic link standing in for the object-store conditional put);
 * readers resolve a VERSION once and plan over its immutable file
   list — snapshot isolation: a concurrent commit can never change or
   delete the files under a running query, so the cross-process
@@ -62,6 +65,8 @@ from database_importer_spark.operators.merge import Merger
 from database_importer_spark.operators.partitioning import _layout_lock
 
 _FORMAT = "dbis-snapshot/1"
+# optimistic-commit attempts before a writer gives up on a hot table
+_COMMIT_ATTEMPTS = 5
 
 
 def _manifest_dir(loc: str) -> str:
@@ -72,20 +77,25 @@ def _manifest_path(loc: str, version: int) -> str:
     return os.path.join(_manifest_dir(loc), f"v{version:08d}.json")
 
 
+def _highest_entry(d: str, prefix: str = "v") -> int | None:
+    """Highest N among the ``{prefix}{N}.json`` entries of ``d`` — the
+    numbered chains (manifests, catalog entries, ref and changelog
+    entries) — or None when there are none."""
+    best = None
+    if os.path.isdir(d):
+        for name in os.listdir(d):
+            if name.startswith(prefix) and name.endswith(".json"):
+                try:
+                    n = int(name[len(prefix) : -5])
+                except ValueError:
+                    continue
+                best = n if best is None else max(best, n)
+    return best
+
+
 def latest_version(loc: str) -> int | None:
     """Highest published manifest version, or None for no table."""
-    d = _manifest_dir(loc)
-    if not os.path.isdir(d):
-        return None
-    best = None
-    for name in os.listdir(d):
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                v = int(name[1:-5])
-            except ValueError:
-                continue
-            best = v if best is None else max(best, v)
-    return best
+    return _highest_entry(_manifest_dir(loc))
 
 
 def load_manifest(loc: str, version: int) -> dict:
@@ -105,22 +115,40 @@ def load_manifest(loc: str, version: int) -> dict:
     return hit
 
 
-def _publish_manifest(loc: str, manifest: dict) -> None:
-    """Atomically publish ``manifest`` as its version. Raises
-    FileExistsError if a concurrent writer already claimed the
-    version — the caller's optimistic-retry point."""
-    d = _manifest_dir(loc)
-    os.makedirs(d, exist_ok=True)
-    final = _manifest_path(loc, manifest["version"])
-    tmp = final + f".tmp.{os.getpid()}"
+def _publish(path: str, payload: dict) -> None:
+    """Atomically publish ``payload`` as the json file ``path``: staged
+    to a temp name, fsynced, then linked into place. link(2) never
+    overwrites, so this raises FileExistsError when a peer already
+    claimed ``path`` — the one compare-and-swap behind every manifest,
+    changelog, ref and catalog entry of this module."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + f".tmp.{os.getpid()}"
     with open(tmp, "w") as f:
-        json.dump(manifest, f)
+        json.dump(payload, f)
         f.flush()
         os.fsync(f.fileno())
     try:
-        os.link(tmp, final)  # atomic, fails on EEXIST: the CAS
+        os.link(tmp, path)  # atomic, fails on EEXIST: the CAS
     finally:
         os.unlink(tmp)
+
+
+def _publish_manifest(loc: str, manifest: dict) -> None:
+    """Publish ``manifest`` as its version. Raises FileExistsError if a
+    concurrent writer already claimed the version — the caller's
+    optimistic-retry point."""
+    _publish(_manifest_path(loc, manifest["version"]), manifest)
+
+
+def _commit_dir(
+    loc: str, version: int, prefix: str = "c", sub: str | None = None
+) -> str:
+    """Data dir of one commit attempt, ``{prefix}{version}_{pid}[_{sub}]``:
+    named by (version, pid) so a losing optimistic writer's orphans are
+    identifiable; ``sub`` names one of several disjoint slices a commit
+    may write (e.g. the DELETE edges)."""
+    tag = f"{prefix}{version:08d}_{os.getpid()}" + (f"_{sub}" if sub else "")
+    return os.path.join(loc, "data", tag)
 
 
 def _col_min_max(md, name_to_idx, col):
@@ -196,10 +224,8 @@ def _write_commit_files(
     stats_cols: list[str] = (),
 ) -> list[dict]:
     """Write ``df`` as the data files of commit ``version`` and return
-    their manifest entries. Files go under a per-(version, pid) commit
-    dir (optionally suffixed — a commit may write several disjoint
-    slices, e.g. the DELETE edges) so a losing optimistic writer's
-    orphans are identifiable; the
+    their manifest entries, stamped with the commit SEQUENCE. Files go
+    under the attempt's ``_commit_dir`` (``subdir`` names a slice); the
     layout is range-clustered on (partition column, cluster column) so
     each file covers a CONTIGUOUS partition-value slice — tight footer
     min/max = sharp manifest pruning (the r6 partitioned-layout law:
@@ -213,9 +239,15 @@ def _write_commit_files(
     point-looked-up by key clusters on the key, not the partition
     column, so the key's per-file stats are sharp. ``stats_cols``
     names the secondary columns whose footer min/max the manifest
-    entries carry (Iceberg per-column stats)."""
-    tag = f"c{version:08d}_{os.getpid()}" + (f"_{subdir}" if subdir else "")
-    commit_dir = os.path.join(loc, "data", tag)
+    entries carry (Iceberg per-column stats).
+
+    Sequence numbers order data files against equality-delete files
+    (the Iceberg rule): a delete with seq D applies to a data file
+    with seq F iff D >= F — so a merge that re-inserts a previously
+    deleted key writes files with a HIGHER seq than the delete and the
+    key survives the read-side anti-join. Entries from manifests that
+    predate this field default to seq 0 (oldest)."""
+    commit_dir = _commit_dir(loc, version, sub=subdir)
     if sort_cols:
         cols = [F.col(c) for c in sort_cols]
     else:
@@ -226,17 +258,7 @@ def _write_commit_files(
     df.repartitionByRange(*head, *cols).write.mode("overwrite").parquet(
         commit_dir
     )
-    return _file_entries(commit_dir, loc, part_col, stats_cols)
-
-
-def _stamp_seq(entries: list[dict], version: int) -> list[dict]:
-    """Stamp the commit SEQUENCE onto new file entries. Sequence
-    numbers order data files against equality-delete files (the
-    Iceberg rule): a delete with seq D applies to a data file with
-    seq F iff D >= F — so a merge that re-inserts a previously
-    deleted key writes files with a HIGHER seq than the delete and
-    the key survives the read-side anti-join. Entries from manifests
-    that predate this field default to seq 0 (oldest)."""
+    entries = _file_entries(commit_dir, loc, part_col, stats_cols)
     for e in entries:
         e["seq"] = version
     return entries
@@ -324,6 +346,67 @@ def _carry_write_contract(manifest: dict, parent: dict) -> dict:
         if k in parent:
             manifest[k] = parent[k]
     return manifest
+
+
+class _Skip:
+    """A commit build's early result: the op returns ``result`` without
+    committing (nothing to do, or a peer already did it)."""
+
+    def __init__(self, result):
+        self.result = result
+
+
+def _commit(loc: str, build, expected_parent: int | None = None, resolve=None):
+    """The optimistic-commit loop every commit op runs through.
+
+    Each attempt resolves the head (no table raises FileNotFoundError),
+    applies the conditional-commit guard (``expected_parent``: return
+    None without committing when the table is elsewhere), loads the
+    parent manifest — or takes it from ``resolve()``, the hook that
+    lets merge parent on exactly the manifest its prewrite frame was
+    planned over (checked against ``expected_parent`` again: a peer may
+    land between the head read and the prewrite) — and calls
+    ``build(parent, version)``. The build returns a ``_Skip``, or
+    ``(fields, dirs)``: the child-manifest fields it sets (``commit``
+    at least; everything else carries from the parent) and the commit
+    dirs it wrote. The child is published with the link(2) CAS; the
+    loser of the version race removes exactly those dirs and rebuilds
+    against the winner's state, up to ``_COMMIT_ATTEMPTS`` times."""
+    for _ in range(_COMMIT_ATTEMPTS):
+        head = latest_version(loc)
+        if head is None:
+            raise FileNotFoundError(f"no snapshot table at {loc}")
+        if expected_parent is not None and head != expected_parent:
+            return None
+        m = load_manifest(loc, head) if resolve is None else resolve()
+        if expected_parent is not None and m["version"] != expected_parent:
+            return None
+        version = m["version"] + 1
+        out = build(m, version)
+        if isinstance(out, _Skip):
+            return out.result
+        fields, dirs = out
+        manifest = {
+            "format": _FORMAT,
+            "version": version,
+            "parent": m["version"],
+            "part_col": m["part_col"],
+            "schema": m["schema"],
+            "files": m["files"],
+            "deletes": _delete_entries(m),
+            "tags": _applied_tags(m),
+            **fields,
+        }
+        try:
+            _publish_manifest(loc, _carry_write_contract(manifest, m))
+            return version
+        except FileExistsError:
+            for d in dirs:
+                shutil.rmtree(d, ignore_errors=True)
+    raise RuntimeError(
+        f"snapshot {fields['commit']['op']} on {loc}: lost the "
+        f"optimistic-commit race {_COMMIT_ATTEMPTS} times"
+    )
 
 
 def _merge_cdf_frame(
@@ -415,19 +498,19 @@ def _merge_cdf_frame(
 _CHANGE_TYPE_COL = "_change_type"
 
 
-def _change_file_entries(change_dir: str, loc: str) -> list[dict]:
-    """Manifest entries for a commit's materialized change files —
-    path + rows only (change files are consumed whole by version, so
-    no pruning stats are recorded)."""
+def _row_entries(d: str, loc: str) -> list[dict]:
+    """Manifest entries for the non-empty parquet files Spark wrote
+    into ``d`` — path + rows only: change files (consumed whole by
+    version) and equality-delete files record no pruning stats."""
     import pyarrow.parquet as pq
 
     entries = []
-    if not os.path.isdir(change_dir):
+    if not os.path.isdir(d):
         return entries
-    for name in sorted(os.listdir(change_dir)):
+    for name in sorted(os.listdir(d)):
         if not name.endswith(".parquet"):
             continue
-        path = os.path.join(change_dir, name)
+        path = os.path.join(d, name)
         n = pq.ParquetFile(path).metadata.num_rows
         if n:
             entries.append({"path": os.path.relpath(path, loc), "rows": n})
@@ -476,18 +559,15 @@ def create_snapshot_table(
         if v is not None:
             return v
         df = df_factory()
-        entries = _stamp_seq(
-            _write_commit_files(
-                df,
-                loc,
-                0,
-                part_col,
-                cluster_col,
-                files=files,
-                sort_cols=sort_cols,
-                stats_cols=stats_cols or [],
-            ),
+        entries = _write_commit_files(
+            df,
+            loc,
             0,
+            part_col,
+            cluster_col,
+            files=files,
+            sort_cols=sort_cols,
+            stats_cols=stats_cols or [],
         )
         manifest = {
             "format": _FORMAT,
@@ -669,7 +749,6 @@ def merge_snapshot_commit(
     join_on: list[str],
     part_of,  # callable: merged DataFrame -> partition-value Column
     touched: list,
-    max_attempts: int = 5,
     expected_parent: int | None = None,
 ) -> int | None:
     """File-granular copy-on-write MERGE, committed optimistically.
@@ -693,34 +772,27 @@ def merge_snapshot_commit(
     broadcast-join pass over the already-pruned slice) and records
     them in the manifest's ``changes`` field; ``read_changes`` then
     scans them instead of digest-diffing the step."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        if expected_parent is not None and base_v != expected_parent:
-            return None
-        out, m, candidates = merge_snapshot_prewrite(
+    pre = {}
+
+    def resolve():
+        # TOCTOU close (ADVICE r9): the prewrite re-resolves the latest
+        # manifest, so the commit parents on exactly the manifest the
+        # merged frame was planned over (the driver re-checks it
+        # against expected_parent; the version+1 link CAS then closes
+        # the race completely).
+        pre["out"], m, pre["candidates"] = merge_snapshot_prewrite(
             spark, loc, batch, join_on, part_of, touched
         )
-        # TOCTOU close (ADVICE r9): prewrite re-resolves the latest
-        # manifest, so a peer committing between the check above and
-        # the prewrite would land this merge on a parent !=
-        # expected_parent. Re-check against the manifest the write
-        # will actually parent on; the version+1 link CAS then closes
-        # the race completely.
-        if expected_parent is not None and m["version"] != expected_parent:
-            return None
+        return m
+
+    def build(m, version):
         part_col = m["part_col"]
-        base_v = m["version"]
-        version = base_v + 1
-        new_files = _stamp_seq(
-            _write_commit_files(
-                out, loc, version, part_col, **_table_write_opts(m)
-            ),
-            version,
+        candidates = pre["candidates"]
+        new_files = _write_commit_files(
+            pre["out"], loc, version, part_col, **_table_write_opts(m)
         )
-        commit_info = {"op": "merge"}
-        manifest_changes = None
+        fields = {"commit": {"op": "merge"}}
+        dirs = [_commit_dir(loc, version)]
         if m.get("cdf"):
             schema = T.StructType.fromJson(m["schema"])
             base = _read_with_deletes(
@@ -729,53 +801,25 @@ def merge_snapshot_commit(
             ch = _merge_cdf_frame(
                 base, batch, join_on, part_col, part_of, schema
             )
-            change_dir = os.path.join(
-                loc, "data", f"c{version:08d}_{os.getpid()}_changes"
-            )
-            ch.write.mode("overwrite").parquet(change_dir)
-            manifest_changes = _change_file_entries(change_dir, loc)
+            dirs.append(_commit_dir(loc, version, sub="changes"))
+            ch.write.mode("overwrite").parquet(dirs[-1])
+            fields["changes"] = _row_entries(dirs[-1], loc)
         keep = {e["path"] for e in candidates}
-        manifest = {
-            "format": _FORMAT,
-            "version": version,
-            "parent": base_v,
-            "part_col": part_col,
-            "schema": m["schema"],
-            "files": [e for e in m["files"] if e["path"] not in keep]
-            + new_files,
-            # carried deletes still apply to carried files only: the
-            # rewritten candidates were read WITH deletes applied and
-            # their replacements carry seq=version > every delete seq.
-            "deletes": _delete_entries(m),
-            "tags": _applied_tags(m),
-            "commit": commit_info,
-        }
-        if manifest_changes is not None:
-            manifest["changes"] = manifest_changes
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return version
-        except FileExistsError:
-            # a peer claimed this version first: drop our orphaned
-            # commit dirs and recompute against the winner's state.
-            for sub in ("", "_changes"):
-                shutil.rmtree(
-                    os.path.join(
-                        loc, "data", f"c{version:08d}_{os.getpid()}{sub}"
-                    ),
-                    ignore_errors=True,
-                )
-    raise RuntimeError(
-        f"snapshot merge on {loc}: lost the optimistic-commit race "
-        f"{max_attempts} times"
-    )
+        # carried deletes still apply to carried files only: the
+        # rewritten candidates were read WITH deletes applied and
+        # their replacements carry seq=version > every delete seq.
+        fields["files"] = [
+            e for e in m["files"] if e["path"] not in keep
+        ] + new_files
+        return fields, dirs
+
+    return _commit(loc, build, expected_parent, resolve)
 
 
 def evolve_snapshot_schema(
     spark: SparkSession,
     loc: str,
     new_fields: list[tuple[str, str]],
-    max_attempts: int = 5,
     exist_ok: bool = False,
 ) -> int:
     """ADD COLUMN as a METADATA-ONLY commit: the child manifest
@@ -793,11 +837,8 @@ def evolve_snapshot_schema(
     version CAS to an identical change is success, not failure), and
     if nothing remains to add the current version is returned with no
     commit."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        m = load_manifest(loc, base_v)
+
+    def build(m, version):
         schema = T.StructType.fromJson(m["schema"])
         to_add = []
         for name, ddl in new_fields:
@@ -809,29 +850,16 @@ def evolve_snapshot_schema(
                 continue
             to_add.append((name, ddl))
         if exist_ok and not to_add:
-            return base_v
+            return _Skip(m["version"])
         for name, ddl in to_add:
             schema = schema.add(name, ddl, True)
-        manifest = {
-            "format": _FORMAT,
-            "version": base_v + 1,
-            "parent": base_v,
-            "part_col": m["part_col"],
+        # pure metadata: a lost race has nothing to clean
+        return {
             "schema": schema.jsonValue(),
-            "files": m["files"],
-            "deletes": _delete_entries(m),
-            "tags": _applied_tags(m),
             "commit": {"op": "evolve_schema"},
-        }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return base_v + 1
-        except FileExistsError:
-            continue  # pure metadata: nothing to clean, just recompute
-    raise RuntimeError(
-        f"snapshot schema evolution on {loc}: lost the optimistic-commit "
-        f"race {max_attempts} times"
-    )
+        }, []
+
+    return _commit(loc, build)
 
 
 def _check_append_schema(df: DataFrame, m: dict, loc: str) -> None:
@@ -863,7 +891,6 @@ def append_snapshot_commit(
     df: DataFrame,
     files: int | None = None,
     expected_parent: int | None = None,
-    max_attempts: int = 5,
 ) -> int | None:
     """INSERT-only fast path: write the new rows as new files and
     republish the parent's file list + the additions — no read of
@@ -879,52 +906,21 @@ def append_snapshot_commit(
     drifted append would otherwise be accepted silently and surface
     only at a later read as NULL columns or a runtime cast error far
     from the faulty commit."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        if expected_parent is not None and base_v != expected_parent:
-            return None
-        m = load_manifest(loc, base_v)
+
+    def build(m, version):
         _check_append_schema(df, m, loc)
-        version = base_v + 1
-        new_files = _stamp_seq(
-            _write_commit_files(
-                df,
-                loc,
-                version,
-                m["part_col"],
-                files=files,
-                **_table_write_opts(m),
-            ),
-            version,
+        new_files = _write_commit_files(
+            df, loc, version, m["part_col"], files=files, **_table_write_opts(m)
         )
-        manifest = {
-            "format": _FORMAT,
-            "version": version,
-            "parent": base_v,
-            "part_col": m["part_col"],
-            "schema": m["schema"],
+        return {
             "files": m["files"] + new_files,
-            "deletes": _delete_entries(m),
-            "tags": _applied_tags(m),
             "commit": {
                 "op": "append",
                 "rows": sum(e["rows"] for e in new_files),
             },
-        }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return version
-        except FileExistsError:
-            shutil.rmtree(
-                os.path.join(loc, "data", f"c{version:08d}_{os.getpid()}"),
-                ignore_errors=True,
-            )
-    raise RuntimeError(
-        f"snapshot append on {loc}: lost the optimistic-commit race "
-        f"{max_attempts} times"
-    )
+        }, [_commit_dir(loc, version)]
+
+    return _commit(loc, build, expected_parent)
 
 
 def _load_manifest_retained(loc: str, version: int) -> dict:
@@ -1284,7 +1280,6 @@ def delete_where_commit(
     part_lo,
     part_hi,
     row_pred=None,
-    max_attempts: int = 5,
 ) -> int:
     """Row-level DELETE as a copy-on-write commit, with Iceberg's
     planning-time METADATA DELETE: the predicate is
@@ -1314,11 +1309,8 @@ def delete_where_commit(
     read with their applicable delete files applied, and carried
     deletes keep applying to carried files only (new files outrank
     them by seq)."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        m = load_manifest(loc, base_v)
+
+    def build(m, version):
         part_col = m["part_col"]
         schema = T.StructType.fromJson(m["schema"])
         carried, dropped, rewrite = [], [], []
@@ -1336,7 +1328,6 @@ def delete_where_commit(
                 dropped.append(e)
             else:
                 rewrite.append(e)
-        version = base_v + 1
         new_files: list[dict] = []
         written_dirs: list[str] = []
         if rewrite:
@@ -1374,31 +1365,17 @@ def delete_where_commit(
                     )
                 )
             for tag, cond in slices:
-                written_dirs.append(
-                    os.path.join(
-                        loc, "data", f"c{version:08d}_{os.getpid()}_{tag}"
-                    )
-                )
-                new_files += _stamp_seq(
-                    _write_commit_files(
-                        kept.filter(cond),
-                        loc,
-                        version,
-                        part_col,
-                        subdir=tag,
-                        **_table_write_opts(m),
-                    ),
+                written_dirs.append(_commit_dir(loc, version, sub=tag))
+                new_files += _write_commit_files(
+                    kept.filter(cond),
+                    loc,
                     version,
+                    part_col,
+                    subdir=tag,
+                    **_table_write_opts(m),
                 )
-        manifest = {
-            "format": _FORMAT,
-            "version": version,
-            "parent": base_v,
-            "part_col": part_col,
-            "schema": m["schema"],
+        return {
             "files": carried + new_files,
-            "deletes": _delete_entries(m),
-            "tags": _applied_tags(m),
             "commit": {
                 "op": "delete_where",
                 "lo": part_lo,
@@ -1407,17 +1384,9 @@ def delete_where_commit(
                 "rewritten": len(rewrite),
                 "carried": len(carried),
             },
-        }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return version
-        except FileExistsError:
-            for d in written_dirs:
-                shutil.rmtree(d, ignore_errors=True)
-    raise RuntimeError(
-        f"snapshot delete on {loc}: lost the optimistic-commit race "
-        f"{max_attempts} times"
-    )
+        }, written_dirs
+
+    return _commit(loc, build)
 
 
 def delete_keys_commit(
@@ -1425,7 +1394,6 @@ def delete_keys_commit(
     loc: str,
     keys_df: DataFrame,
     key_cols: list[str],
-    max_attempts: int = 5,
     tag: str | None = None,
 ) -> int:
     """Row-level DELETE as a MERGE-ON-READ commit: equality-delete
@@ -1455,11 +1423,8 @@ def delete_keys_commit(
     files or re-erasing keys legitimately re-inserted since
     compaction. Concurrent first-timers may both land — harmless, the
     anti-join has set semantics — and every later run skips."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        m = load_manifest(loc, base_v)
+
+    def build(m, version):
         schema = T.StructType.fromJson(m["schema"])
         missing = [c for c in key_cols if c not in schema.names]
         if missing:
@@ -1476,9 +1441,8 @@ def delete_keys_commit(
             tag in _applied_tags(m)
             or any(d.get("tag") == tag for d in existing)
         ):
-            return base_v
-        version = base_v + 1
-        del_dir = os.path.join(loc, "data", f"d{version:08d}_{os.getpid()}")
+            return _Skip(m["version"])
+        del_dir = _commit_dir(loc, version, "d")
         notnull = functools.reduce(
             lambda a, c: a & F.col(c).isNotNull(),
             key_cols,
@@ -1487,57 +1451,34 @@ def delete_keys_commit(
         keys_df.select(*key_cols).filter(notnull).distinct().coalesce(
             1
         ).write.mode("overwrite").parquet(del_dir)
-        import pyarrow.parquet as pq
-
-        entries = []
-        for name in sorted(os.listdir(del_dir)):
-            if not name.endswith(".parquet"):
-                continue
-            path = os.path.join(del_dir, name)
-            n = pq.ParquetFile(path).metadata.num_rows
-            if n:
-                e = {
-                    "path": os.path.relpath(path, loc),
-                    "rows": n,
-                    "seq": version,
-                    "key": list(key_cols),
-                }
-                if tag is not None:
-                    e["tag"] = tag
-                entries.append(e)
+        entries = [
+            {
+                **e,
+                "seq": version,
+                "key": list(key_cols),
+                **({"tag": tag} if tag is not None else {}),
+            }
+            for e in _row_entries(del_dir, loc)
+        ]
         if not entries:
             shutil.rmtree(del_dir, ignore_errors=True)
-            return base_v
-        manifest = {
-            "format": _FORMAT,
-            "version": version,
-            "parent": base_v,
-            "part_col": m["part_col"],
-            "schema": m["schema"],
-            "files": m["files"],
+            return _Skip(m["version"])
+        return {
             "deletes": existing + entries,
             "tags": _applied_tags(m) + ([tag] if tag is not None else []),
             "commit": {
                 "op": "delete_keys",
                 "keys": sum(e["rows"] for e in entries),
             },
-        }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return version
-        except FileExistsError:
-            shutil.rmtree(del_dir, ignore_errors=True)
-    raise RuntimeError(
-        f"snapshot equality delete on {loc}: lost the optimistic-commit "
-        f"race {max_attempts} times"
-    )
+        }, [del_dir]
+
+    return _commit(loc, build)
 
 
 def compact_snapshot_commit(
     spark: SparkSession,
     loc: str,
     files: int | None = None,
-    max_attempts: int = 5,
     expected_parent: int | None = None,
 ) -> int | None:
     """Table maintenance as a commit: rewrite the CURRENT content into
@@ -1553,33 +1494,13 @@ def compact_snapshot_commit(
     version references them. ``expected_parent`` makes the OPTIMIZE
     conditional on the table version (None without committing when it
     moved) — the racing-process determinism guard, as on append/merge."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        if expected_parent is not None and base_v != expected_parent:
-            return None
-        m, _ = snapshot_files(loc, base_v)
-        part_col = m["part_col"]
-        df = read_snapshot(spark, loc, version=base_v)
-        version = base_v + 1
-        new_files = _stamp_seq(
-            _write_commit_files(
-                df,
-                loc,
-                version,
-                part_col,
-                files=files,
-                **_table_write_opts(m),
-            ),
-            version,
+
+    def build(m, version):
+        df = read_snapshot(spark, loc, version=m["version"])
+        new_files = _write_commit_files(
+            df, loc, version, m["part_col"], files=files, **_table_write_opts(m)
         )
-        manifest = {
-            "format": _FORMAT,
-            "version": version,
-            "parent": base_v,
-            "part_col": part_col,
-            "schema": m["schema"],
+        return {
             "files": new_files,
             # compaction reads THROUGH the deletes (read_snapshot
             # applies them), so the rewritten content has them
@@ -1589,25 +1510,14 @@ def compact_snapshot_commit(
             # of an old tagged erasure job commit again and delete keys
             # legitimately re-inserted since.
             "deletes": [],
-            "tags": _applied_tags(m),
             # the op tag is a CONTRACT statement: compaction is
             # content-preserving by construction, which is what lets
             # read_changes skip the step instead of digest-diffing the
             # whole table to discover an empty delta.
             "commit": {"op": "compact"},
-        }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return version
-        except FileExistsError:
-            shutil.rmtree(
-                os.path.join(loc, "data", f"c{version:08d}_{os.getpid()}"),
-                ignore_errors=True,
-            )
-    raise RuntimeError(
-        f"snapshot compact on {loc}: lost the optimistic-commit race "
-        f"{max_attempts} times"
-    )
+        }, [_commit_dir(loc, version)]
+
+    return _commit(loc, build, expected_parent)
 
 
 # --- change-file compaction (VERDICT r10 seed): many small per-commit
@@ -1641,26 +1551,19 @@ def changelog_entries(loc: str) -> list[dict]:
 
 
 def _publish_changelog_entry(loc: str, entry: dict) -> None:
-    """Numbered link(2)-CAS publish into the sidecar index; losing the
+    """Numbered link(2)-CAS publish into the sidecar index as the
+    HIGHEST entry + 1 (not the entry count: a retired entry must not
+    make every later publish collide with the last one); losing the
     number race just takes the next number (entries are additive —
     read_changes prefers the newest covering entry)."""
     d = _changelog_dir(loc)
-    os.makedirs(d, exist_ok=True)
     while True:
-        n = len([x for x in os.listdir(d) if x.endswith(".json")])
-        final = os.path.join(d, f"e{n:08d}.json")
-        tmp = final + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-            f.flush()
-            os.fsync(f.fileno())
+        last = _highest_entry(d, "e")
+        n = 0 if last is None else last + 1
         try:
-            os.link(tmp, final)
-            return
+            return _publish(os.path.join(d, f"e{n:08d}.json"), entry)
         except FileExistsError:
             continue
-        finally:
-            os.unlink(tmp)
 
 
 def compact_changes_commit(
@@ -1669,7 +1572,6 @@ def compact_changes_commit(
     from_version: int,
     to_version: int,
     files: int = 1,
-    max_attempts: int = 5,
     expected_parent: int | None = None,
 ) -> int | None:
     """Consolidate the MATERIALIZED change files of every commit in
@@ -1688,13 +1590,11 @@ def compact_changes_commit(
     racing compactors serialize on the manifest CAS like every writer.
     Content-preserving by contract: the commit's op tag keeps
     read_changes/lag accounting treating the STEP itself as free."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        if expected_parent is not None and base_v != expected_parent:
-            return None
-        if not 0 <= from_version <= to_version <= base_v:
+    sidecar: dict = {}
+
+    def build(m, version):
+        sidecar.clear()
+        if not 0 <= from_version <= to_version <= m["version"]:
             raise ValueError(
                 f"bad compact_changes range v{from_version}..v{to_version}"
             )
@@ -1704,21 +1604,17 @@ def compact_changes_commit(
             if mv.get("changes"):
                 covered.append((v, mv["changes"]))
         if not covered:
-            return base_v
+            return _Skip(m["version"])
         cover_versions = [v for v, _ in covered]
         for e in changelog_entries(loc):
             if set(cover_versions) <= set(e["covers"]):
-                return e["commit_version"]  # already consolidated
-        m = load_manifest(loc, base_v)
+                return _Skip(e["commit_version"])  # already consolidated
         schema = T.StructType.fromJson(m["schema"])
         ch_schema = T.StructType(
             [T.StructField(_CHANGE_TYPE_COL, T.StringType())]
             + list(schema.fields)
         )
-        version = base_v + 1
-        out_dir = os.path.join(
-            loc, "data", f"cc{version:08d}_{os.getpid()}"
-        )
+        out_dir = _commit_dir(loc, version, "cc")
         frames = [
             spark.read.schema(ch_schema)
             .parquet(*[os.path.join(loc, e["path"]) for e in entries])
@@ -1736,44 +1632,21 @@ def compact_changes_commit(
             .write.mode("overwrite")
             .parquet(out_dir)
         )
-        entries_out = _change_file_entries(out_dir, loc)
-        manifest = {
-            "format": _FORMAT,
-            "version": version,
-            "parent": base_v,
-            "part_col": m["part_col"],
-            "schema": m["schema"],
-            "files": m["files"],
-            "deletes": _delete_entries(m),
-            "tags": _applied_tags(m),
-            "commit": {
-                "op": "compact_changes",
-                "from": from_version,
-                "to": to_version,
-                "covers": cover_versions,
-                "files": entries_out,
-            },
+        entry = {
+            "from": from_version,
+            "to": to_version,
+            "covers": cover_versions,
+            "files": _row_entries(out_dir, loc),
         }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-        except FileExistsError:
-            shutil.rmtree(out_dir, ignore_errors=True)
-            continue
-        _publish_changelog_entry(
-            loc,
-            {
-                "from": from_version,
-                "to": to_version,
-                "covers": cover_versions,
-                "files": entries_out,
-                "commit_version": version,
-            },
-        )
-        return version
-    raise RuntimeError(
-        f"change-file compaction on {loc}: lost the optimistic-commit "
-        f"race {max_attempts} times"
-    )
+        sidecar.update(entry, commit_version=version)
+        return {"commit": {"op": "compact_changes", **entry}}, [out_dir]
+
+    v = _commit(loc, build, expected_parent)
+    # the last build committed iff its version came back: only then
+    # does the sidecar index gain the consolidation entry
+    if sidecar.get("commit_version") == v:
+        _publish_changelog_entry(loc, sidecar)
+    return v
 
 
 def replace_snapshot_commit(
@@ -1781,7 +1654,6 @@ def replace_snapshot_commit(
     loc: str,
     df: DataFrame,
     files: int | None = None,
-    max_attempts: int = 5,
     expected_parent: int | None = None,
 ) -> int | None:
     """Full-content REPLACE (INSERT OVERWRITE) as one atomic commit —
@@ -1801,59 +1673,28 @@ def replace_snapshot_commit(
     would BE a table scan). The replaced frame is schema-validated at
     commit time like appends. ``expected_parent`` is the usual
     conditional-commit CAS."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        if expected_parent is not None and base_v != expected_parent:
-            return None
-        m = load_manifest(loc, base_v)
+
+    def build(m, version):
         _check_append_schema(df, m, loc)
-        version = base_v + 1
-        new_files = _stamp_seq(
-            _write_commit_files(
-                df,
-                loc,
-                version,
-                m["part_col"],
-                files=files,
-                **_table_write_opts(m),
-            ),
-            version,
+        new_files = _write_commit_files(
+            df, loc, version, m["part_col"], files=files, **_table_write_opts(m)
         )
-        manifest = {
-            "format": _FORMAT,
-            "version": version,
-            "parent": base_v,
-            "part_col": m["part_col"],
-            "schema": m["schema"],
+        return {
             "files": new_files,
             "deletes": [],
-            "tags": _applied_tags(m),
             "commit": {
                 "op": "replace",
                 "rows": sum(e["rows"] for e in new_files),
             },
-        }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return version
-        except FileExistsError:
-            shutil.rmtree(
-                os.path.join(loc, "data", f"c{version:08d}_{os.getpid()}"),
-                ignore_errors=True,
-            )
-    raise RuntimeError(
-        f"snapshot replace on {loc}: lost the optimistic-commit race "
-        f"{max_attempts} times"
-    )
+        }, [_commit_dir(loc, version)]
+
+    return _commit(loc, build, expected_parent)
 
 
 def evolve_partition_spec(
     spark: SparkSession,
     loc: str,
     new_part_col: str,
-    max_attempts: int = 5,
 ) -> int:
     """PARTITION-SPEC EVOLUTION as a METADATA-ONLY commit (the
     Iceberg spec-evolution contract, near-trivial here because pruning
@@ -1874,14 +1715,11 @@ def evolve_partition_spec(
     manifest it parents on). Idempotent: evolving to the current spec
     returns the current version with no commit — racing peers
     converge."""
-    for _ in range(max_attempts):
-        base_v = latest_version(loc)
-        if base_v is None:
-            raise FileNotFoundError(f"no snapshot table at {loc}")
-        m = load_manifest(loc, base_v)
+
+    def build(m, version):
         old_part = m["part_col"]
         if old_part == new_part_col:
-            return base_v
+            return _Skip(m["version"])
         schema = T.StructType.fromJson(m["schema"])
         if new_part_col not in schema.names:
             raise ValueError(
@@ -1901,30 +1739,18 @@ def evolve_partition_spec(
             if stats:
                 e2["stats"] = stats
             migrated.append(e2)
-        manifest = {
-            "format": _FORMAT,
-            "version": base_v + 1,
-            "parent": base_v,
+        # pure metadata: a lost race has nothing to clean
+        return {
             "part_col": new_part_col,
-            "schema": m["schema"],
             "files": migrated,
-            "deletes": _delete_entries(m),
-            "tags": _applied_tags(m),
             "commit": {
                 "op": "evolve_partition_spec",
                 "from": old_part,
                 "to": new_part_col,
             },
-        }
-        try:
-            _publish_manifest(loc, _carry_write_contract(manifest, m))
-            return base_v + 1
-        except FileExistsError:
-            continue  # pure metadata: nothing to clean, just recompute
-    raise RuntimeError(
-        f"partition-spec evolution on {loc}: lost the optimistic-commit "
-        f"race {max_attempts} times"
-    )
+        }, []
+
+    return _commit(loc, build)
 
 
 # --- named refs: tags (immutable) and branches (CAS-movable heads) ----
@@ -1942,19 +1768,9 @@ def _refs_dir(loc: str, kind: str) -> str:
     return os.path.join(loc, "_refs", kind)
 
 
-def _write_ref_file(path: str, payload: dict) -> None:
-    """Publish ``payload`` at ``path`` atomically via link(2); raises
-    FileExistsError when the name is already claimed — the CAS."""
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = path + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, path)
-    finally:
-        os.unlink(tmp)
+def _ref_version(path: str) -> int:
+    with open(path) as f:
+        return json.load(f)["version"]
 
 
 def _check_ref_version(loc: str, version: int | None) -> int:
@@ -1968,62 +1784,46 @@ def _check_ref_version(loc: str, version: int | None) -> int:
     return version
 
 
-def create_tag(loc: str, name: str, version: int | None = None) -> int:
-    """Create an IMMUTABLE named ref to a version (default: latest).
-    Concurrent-idempotent: re-creating the tag at the SAME version is
-    success (a racing peer already published the identical ref — the
-    guard the concurrent sweep protocol requires); at a different
-    version it raises, because a tag's meaning never moves."""
+def _create_ref(loc: str, path: str, version: int | None, conflict) -> int:
+    """Publish a ref's first entry at ``path`` pointing to ``version``
+    (default: latest). Concurrent-idempotent: re-creating it at the
+    SAME version is success (a racing peer already published the
+    identical ref — the guard the concurrent sweep protocol requires);
+    at a different version it raises ``conflict(existing, version)``."""
     version = _check_ref_version(loc, version)
-    path = os.path.join(_refs_dir(loc, "tags"), f"{name}.json")
     try:
-        _write_ref_file(path, {"version": version})
+        _publish(path, {"version": version})
     except FileExistsError:
-        with open(path) as f:
-            existing = json.load(f)["version"]
+        existing = _ref_version(path)
         if existing != version:
-            raise ValueError(
-                f"tag {name!r} at {loc} already points to v{existing}, "
-                f"refusing to move it to v{version}"
-            ) from None
+            raise ValueError(conflict(existing, version)) from None
     return version
+
+
+def create_tag(loc: str, name: str, version: int | None = None) -> int:
+    """Create an IMMUTABLE named ref to a version (default: latest),
+    concurrent-idempotent (``_create_ref``); re-creating it at a
+    different version raises, because a tag's meaning never moves."""
+    return _create_ref(
+        loc,
+        os.path.join(_refs_dir(loc, "tags"), f"{name}.json"),
+        version,
+        lambda old, new: f"tag {name!r} at {loc} already points to "
+        f"v{old}, refusing to move it to v{new}",
+    )
 
 
 def create_branch(loc: str, name: str, version: int | None = None) -> int:
     """Create a branch HEAD at a version (default: latest) — entry 0
     of the branch's numbered ref chain. Concurrent-idempotent like
     create_tag: same-version re-create succeeds, different raises."""
-    version = _check_ref_version(loc, version)
-    path = os.path.join(_refs_dir(loc, "heads"), name, "r00000000.json")
-    try:
-        _write_ref_file(path, {"version": version})
-    except FileExistsError:
-        with open(path) as f:
-            existing = json.load(f)["version"]
-        if existing != version:
-            raise ValueError(
-                f"branch {name!r} at {loc} was already created at "
-                f"v{existing}, not v{version}"
-            ) from None
-    return version
-
-
-def _branch_entries(
-    loc: str, name: str, kind: str = "heads"
-) -> list[tuple[int, str]]:
-    d = os.path.join(_refs_dir(loc, kind), name)
-    if not os.path.isdir(d):
-        raise KeyError(f"no {kind[:-1]} {name!r} at {loc}")
-    out = []
-    for n in os.listdir(d):
-        if n.startswith("r") and n.endswith(".json"):
-            try:
-                out.append((int(n[1:-5]), os.path.join(d, n)))
-            except ValueError:
-                continue
-    if not out:
-        raise KeyError(f"no {kind[:-1]} {name!r} at {loc}")
-    return sorted(out)
+    return _create_ref(
+        loc,
+        os.path.join(_refs_dir(loc, "heads"), name, "r00000000.json"),
+        version,
+        lambda old, new: f"branch {name!r} at {loc} was already created "
+        f"at v{old}, not v{new}",
+    )
 
 
 def branch_head_entry(
@@ -2032,9 +1832,11 @@ def branch_head_entry(
     """(entry number, version) of the branch's current head — the
     entry number is the CAS token movers pass back to update_branch
     as ``expected_entry`` for an ABA-proof advance."""
-    k, path = _branch_entries(loc, name, kind)[-1]
-    with open(path) as f:
-        return k, json.load(f)["version"]
+    d = os.path.join(_refs_dir(loc, kind), name)
+    k = _highest_entry(d, "r")
+    if k is None:
+        raise KeyError(f"no {kind[:-1]} {name!r} at {loc}")
+    return k, _ref_version(os.path.join(d, f"r{k:08d}.json"))
 
 
 def branch_head(loc: str, name: str) -> int:
@@ -2063,10 +1865,7 @@ def update_branch(
     the ABA case, ADVICE r9), pass ``expected_entry`` from
     ``branch_head_entry``: the CAS then also requires the head to
     still be at that exact ENTRY NUMBER, which never repeats."""
-    entries = _branch_entries(loc, name, _kind)
-    k, path = entries[-1]
-    with open(path) as f:
-        cur = json.load(f)["version"]
+    k, cur = branch_head_entry(loc, name, _kind)
     if cur != expected_version:
         return False
     if expected_entry is not None and k != expected_entry:
@@ -2076,7 +1875,7 @@ def update_branch(
         _refs_dir(loc, _kind), name, f"r{k + 1:08d}.json"
     )
     try:
-        _write_ref_file(nxt, {"version": new_version})
+        _publish(nxt, {"version": new_version})
     except FileExistsError:
         return False
     return True
@@ -2099,19 +1898,13 @@ def create_cursor(loc: str, name: str, version: int | None = None) -> int:
     """Create a consumer cursor at a version (default: latest).
     Concurrent-idempotent like create_branch: same-version re-create
     converges, different raises."""
-    version = _check_ref_version(loc, version)
-    path = os.path.join(_refs_dir(loc, "cursors"), name, "r00000000.json")
-    try:
-        _write_ref_file(path, {"version": version})
-    except FileExistsError:
-        with open(path) as f:
-            existing = json.load(f)["version"]
-        if existing != version:
-            raise ValueError(
-                f"cursor {name!r} at {loc} was already created at "
-                f"v{existing}, not v{version}"
-            ) from None
-    return version
+    return _create_ref(
+        loc,
+        os.path.join(_refs_dir(loc, "cursors"), name, "r00000000.json"),
+        version,
+        lambda old, new: f"cursor {name!r} at {loc} was already created "
+        f"at v{old}, not v{new}",
+    )
 
 
 def cursor_entry(loc: str, name: str) -> tuple[int, int]:
@@ -2126,12 +1919,9 @@ def advance_cursor(
     """CAS-advance a consumer cursor to ``new_version``, conditional
     on its current ENTRY NUMBER (from cursor_entry) — entry numbers
     never repeat, so the advance is ABA-proof by construction."""
-    entries = _branch_entries(loc, name, "cursors")
-    k, path = entries[-1]
+    k, cur = cursor_entry(loc, name)
     if k != expected_entry:
         return False
-    with open(path) as f:
-        cur = json.load(f)["version"]
     return update_branch(
         loc, name, new_version, cur, expected_entry=k, _kind="cursors"
     )
@@ -2197,8 +1987,7 @@ def resolve_ref(loc: str, name: str) -> int:
     """NAME → VERSION: tags first, then branch heads."""
     tag = os.path.join(_refs_dir(loc, "tags"), f"{name}.json")
     if os.path.exists(tag):
-        with open(tag) as f:
-            return json.load(f)["version"]
+        return _ref_version(tag)
     return branch_head(loc, name)
 
 
@@ -2252,8 +2041,7 @@ def _ref_versions(loc: str) -> set[int]:
     if os.path.isdir(tags):
         for n in os.listdir(tags):
             if n.endswith(".json"):
-                with open(os.path.join(tags, n)) as f:
-                    out.add(json.load(f)["version"])
+                out.add(_ref_version(os.path.join(tags, n)))
     for kind in ("heads", "cursors"):
         d = _refs_dir(loc, kind)
         if os.path.isdir(d):
@@ -2411,18 +2199,7 @@ def _catalog_path(cat_loc: str, version: int) -> str:
 
 def catalog_latest(cat_loc: str) -> int | None:
     """Highest published catalog version, or None for no catalog."""
-    d = os.path.join(cat_loc, "_catalog")
-    if not os.path.isdir(d):
-        return None
-    best = None
-    for name in os.listdir(d):
-        if name.startswith("v") and name.endswith(".json"):
-            try:
-                v = int(name[1:-5])
-            except ValueError:
-                continue
-            best = v if best is None else max(best, v)
-    return best
+    return _highest_entry(os.path.join(cat_loc, "_catalog"))
 
 
 def load_catalog(cat_loc: str, version: int | None = None) -> dict:
@@ -2459,18 +2236,8 @@ def catalog_commit(
         "parent": cur,
         "tables": tables,
     }
-    d = os.path.dirname(_catalog_path(cat_loc, version))
-    os.makedirs(d, exist_ok=True)
-    final = _catalog_path(cat_loc, version)
-    tmp = final + f".tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(entry, f)
-        f.flush()
-        os.fsync(f.fileno())
     try:
-        os.link(tmp, final)
+        _publish(_catalog_path(cat_loc, version), entry)
     except FileExistsError:
         return None
-    finally:
-        os.unlink(tmp)
     return version

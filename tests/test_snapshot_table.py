@@ -13,15 +13,18 @@ claims the module makes:
   impossible here);
 - optimistic concurrency: a writer that loses the version race
   retries against the winner's state, cleans up its orphan files, and
-  lands the correct content;
+  lands the correct content — for every commit op, all of which run
+  through the one commit driver; the retries are bounded;
 - manifest pruning: a partition-scoped read hands the engine strictly
   fewer files (inputFiles pin), metadata-only;
 - vacuum retires exactly the unreferenced history and nothing the
   retained versions need.
 """
 
+import glob
 import os
 import sys
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -124,38 +127,245 @@ def test_snapshot_reader_survives_concurrent_commit(spark, tmp_path):
     assert got[5] == "v5" and len(got) == 40
 
 
-def test_optimistic_conflict_retries_and_cleans_orphans(
-    spark, tmp_path, monkeypatch
-):
-    loc = _mk_table(spark, tmp_path)
-    real_write = st._write_commit_files
-    fired = {"done": False}
+def _peer_wins(monkeypatch, times):
+    """Make a peer claim the version this process is about to publish,
+    ``times`` times: a pure-metadata commit of the parent's state lands
+    first. Returns (versions lost, the commit dirs this process had
+    written for each lost version when it lost)."""
+    real = st._publish_manifest
+    lost, written = [], []
 
-    def racing_write(df, loc_, version, part_col, cluster_col=None, **kw):
-        files = real_write(df, loc_, version, part_col, cluster_col, **kw)
-        if not fired["done"]:
-            fired["done"] = True
-            # a peer claims the same version first: same files as the
-            # parent, bumped version — a pure-metadata competing commit
-            parent = st.load_manifest(loc_, version - 1)
-            st._publish_manifest(
-                loc_, {**parent, "version": version, "parent": version - 1}
+    def racing(loc_, manifest):
+        v = manifest["version"]
+        if len(lost) < times:
+            parent = st.load_manifest(loc_, v - 1)
+            peer = {k: x for k, x in parent.items() if k != "changes"}
+            real(
+                loc_,
+                {**peer, "version": v, "parent": v - 1, "commit": {"op": "peer"}},
             )
-        return files
+            lost.append(v)
+            written.append(_attempt_dirs(loc_, v))
+        real(loc_, manifest)
 
-    monkeypatch.setattr(st, "_write_commit_files", racing_write)
-    v = st.merge_snapshot_commit(
-        spark, loc, _batch(spark, [(15, "UPD")]), ["k"], _part_of, touched=[1]
+    monkeypatch.setattr(st, "_publish_manifest", racing)
+    return lost, written
+
+
+def _attempt_dirs(loc, version):
+    """Commit dirs this process wrote for ``version`` (any prefix/slice)."""
+    pat = os.path.join(loc, "data", f"*{version:08d}_{os.getpid()}*")
+    return sorted(os.path.basename(d) for d in glob.glob(pat))
+
+
+def _table_rows(spark, lo, n):
+    df = spark.range(lo, lo + n).select(
+        F.col("id").cast("int").alias("k"),
+        F.concat(F.lit("a"), F.col("id")).alias("val"),
     )
-    assert v == 2  # lost v1 to the peer, landed v2
-    assert _state(spark, loc)[15] == ("UPD", 1)
-    # the losing attempt's commit dir was removed
-    assert not os.path.exists(
-        os.path.join(loc, "data", f"c{1:08d}_{os.getpid()}")
+    return df.withColumn("m", F.floor(F.col("k") / 10).cast("int"))
+
+
+def _consolidated_at(spark, loc, v):
+    """The one changelog entry covers the chain's v1, v2 at commit v."""
+    (entry,) = st.changelog_entries(loc)
+    return entry["commit_version"] == v and entry["covers"] == [1, 2]
+
+
+# op -> (table setup, the commit, content check, commit dirs it writes)
+_RACE_OPS = {
+    "merge": (
+        lambda spark, tmp: _mk_table(spark, tmp),
+        lambda spark, loc: st.merge_snapshot_commit(
+            spark, loc, _batch(spark, [(15, "UPD")]), ["k"], _part_of, [1]
+        ),
+        lambda spark, loc, v: _state(spark, loc)[15] == ("UPD", 1),
+        1,
+    ),
+    "merge_cdf": (
+        lambda spark, tmp: _cdf_chain(spark, tmp),
+        lambda spark, loc: st.merge_snapshot_commit(
+            spark, loc, _batch(spark, [(3, "u3")]), ["k"], _part_of, [0]
+        ),
+        lambda spark, loc, v: _state(spark, loc)[3] == ("u3", 0)
+        and bool(st.load_manifest(loc, v)["changes"]),
+        2,
+    ),
+    "evolve_schema": (
+        lambda spark, tmp: _mk_table(spark, tmp),
+        lambda spark, loc: st.evolve_snapshot_schema(
+            spark, loc, [("note", "string")]
+        ),
+        lambda spark, loc, v: "note" in st.read_snapshot(spark, loc).columns,
+        0,
+    ),
+    "append": (
+        lambda spark, tmp: _mk_table(spark, tmp),
+        lambda spark, loc: st.append_snapshot_commit(
+            spark, loc, _table_rows(spark, 100, 5)
+        ),
+        lambda spark, loc, v: set(_state(spark, loc))
+        == set(range(40)) | set(range(100, 105)),
+        1,
+    ),
+    "delete_where": (
+        lambda spark, tmp: _mk_table(spark, tmp),
+        lambda spark, loc: st.delete_where_commit(
+            spark, loc, 1, 1, row_pred=lambda df: F.col("k") % 2 == 0
+        ),
+        lambda spark, loc, v: set(_state(spark, loc))
+        == set(range(40)) - {10, 12, 14, 16, 18},
+        3,
+    ),
+    "delete_keys": (
+        lambda spark, tmp: _mk_table(spark, tmp),
+        lambda spark, loc: st.delete_keys_commit(
+            spark, loc, spark.createDataFrame([(5,), (35,)], "k int"), ["k"]
+        ),
+        lambda spark, loc, v: set(_state(spark, loc)) == set(range(40)) - {5, 35},
+        1,
+    ),
+    "compact": (
+        lambda spark, tmp: _mk_table(spark, tmp),
+        lambda spark, loc: st.compact_snapshot_commit(spark, loc, files=2),
+        lambda spark, loc, v: _state(spark, loc) == _state(spark, loc, 0)
+        and st.load_manifest(loc, v)["commit"]["op"] == "compact",
+        1,
+    ),
+    "compact_changes": (
+        lambda spark, tmp: _cdf_chain(spark, tmp),
+        lambda spark, loc: st.compact_changes_commit(spark, loc, 0, 2),
+        _consolidated_at,
+        1,
+    ),
+    "replace": (
+        lambda spark, tmp: _mk_table(spark, tmp),
+        lambda spark, loc: st.replace_snapshot_commit(
+            spark, loc, _table_rows(spark, 200, 8)
+        ),
+        lambda spark, loc, v: set(_state(spark, loc)) == set(range(200, 208)),
+        1,
+    ),
+    "evolve_partition_spec": (
+        lambda spark, tmp: _mk_table(spark, tmp),
+        lambda spark, loc: st.evolve_partition_spec(spark, loc, "k"),
+        lambda spark, loc, v: st.load_manifest(loc, v)["part_col"] == "k"
+        and len(_state(spark, loc)) == 40,
+        0,
+    ),
+}
+
+
+def _manifest_paths(m):
+    """Every file path a manifest names: data, delete, change files and
+    a consolidation commit's files."""
+    named = [e for k in ("files", "deletes", "changes") for e in m.get(k, [])]
+    named += (m.get("commit") or {}).get("files", [])
+    return [e["path"] for e in named]
+
+
+@pytest.mark.parametrize("op", list(_RACE_OPS))
+def test_optimistic_conflict_retries_and_cleans_orphans(
+    spark, tmp_path, monkeypatch, op
+):
+    """Each commit op loses v{N+1} to a peer once: it lands v{N+2}
+    with the expected content, removes exactly the commit dirs its
+    losing attempt wrote, and its manifest names only live files."""
+    setup, commit, check, n_dirs = _RACE_OPS[op]
+    loc = setup(spark, tmp_path)
+    n = st.latest_version(loc)
+    lost, written = _peer_wins(monkeypatch, times=1)
+    v = commit(spark, loc)
+    assert lost == [n + 1] and v == n + 2
+    assert len(written[0]) == n_dirs  # the losing attempt did write...
+    assert _attempt_dirs(loc, n + 1) == []  # ...and cleaned all of it
+    assert check(spark, loc, v)
+    m = st.load_manifest(loc, v)
+    assert m["parent"] == n + 1
+    for p in _manifest_paths(m):
+        assert os.path.exists(os.path.join(loc, p)), p
+
+
+def test_commit_retries_are_bounded(spark, tmp_path, monkeypatch):
+    """A peer that wins every attempt: the commit gives up with
+    RuntimeError after exactly _COMMIT_ATTEMPTS attempts and leaves no
+    commit dir of this process behind (only the table's own v0)."""
+    loc = _mk_table(spark, tmp_path)
+    lost, written = _peer_wins(monkeypatch, times=10 * st._COMMIT_ATTEMPTS)
+    with pytest.raises(RuntimeError, match="lost the optimistic-commit race"):
+        st.append_snapshot_commit(spark, loc, _table_rows(spark, 100, 5))
+    assert lost == list(range(1, st._COMMIT_ATTEMPTS + 1))
+    assert all(len(w) == 1 for w in written)
+    assert os.listdir(os.path.join(loc, "data")) == [f"c{0:08d}_{os.getpid()}"]
+
+
+def test_changelog_publish_numbers_past_retired_entries(tmp_path):
+    """Retiring a changelog entry that is not the newest must not
+    live-lock the next publish: entries number from the highest one,
+    not from the entry count."""
+    loc = str(tmp_path / "tbl")
+    st._publish_changelog_entry(loc, {"n": 0})
+    st._publish_changelog_entry(loc, {"n": 1})
+    os.unlink(os.path.join(loc, "_changelog", "e00000000.json"))
+    t = threading.Thread(
+        target=st._publish_changelog_entry, args=(loc, {"n": 2}), daemon=True
     )
-    # and no file of the loser leaked into the manifest
-    for e in st.load_manifest(loc, 2)["files"]:
-        assert os.path.exists(os.path.join(loc, e["path"]))
+    t.start()
+    t.join(timeout=10)
+    assert not t.is_alive(), "changelog publish is spinning"
+    assert os.path.exists(os.path.join(loc, "_changelog", "e00000002.json"))
+    assert [e["n"] for e in st.changelog_entries(loc)] == [1, 2]
+
+
+_PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "database_importer_spark",
+)
+
+
+def _publish_guard_violations(sources: dict[str, str]) -> list[str]:
+    """The commit protocol has ONE link(2) publish and no per-op retry
+    budget: ``os.link(`` exactly once in the package, ``max_attempts``
+    nowhere."""
+    links = [
+        rel for rel, src in sources.items() for _ in range(src.count("os.link("))
+    ]
+    out = [] if len(links) == 1 else [f"os.link( in {links}, want exactly one"]
+    return out + [
+        f"{rel}: max_attempts"
+        for rel, src in sources.items()
+        if "max_attempts" in src
+    ]
+
+
+def _package_sources() -> dict[str, str]:
+    out = {}
+    for dp, _d, fs in os.walk(_PKG):
+        for f in fs:
+            if f.endswith(".py"):
+                path = os.path.join(dp, f)
+                with open(path) as fh:
+                    out[os.path.relpath(path, _PKG)] = fh.read()
+    return out
+
+
+def test_one_link_publish_and_no_retry_budget_parameter():
+    assert _publish_guard_violations(_package_sources()) == []
+
+
+def test_publish_guard_flags_seeded_second_link():
+    seeded = {
+        **_package_sources(),
+        "operators/x.py": (
+            "import os\n"
+            "def publish(tmp, final, max_attempts=5):\n"
+            "    os.link(tmp, final)\n"
+        ),
+    }
+    got = _publish_guard_violations(seeded)
+    assert len(got) == 2
+    assert "want exactly one" in got[0] and "operators/x.py" in got[0]
+    assert got[1] == "operators/x.py: max_attempts"
 
 
 def test_manifest_pruning_hands_engine_fewer_files(spark, tmp_path):

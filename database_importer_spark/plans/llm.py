@@ -830,8 +830,9 @@ def llm_text_tokenize_tf(spark, sf_dir):
     sf10 (≈DuckDB parity), identical result by distributivity of the
     count. Non-replicated corpora pay one extra distinct-text exchange
     (+0.08 s at sf0.1) — the right trade for the 100 TB crawl case.
-    Probe tools/probe_tf.py also rules out per-doc sorted-run counting
-    (11 s) and HOF run-length arrays (61 s, quadratic array_append)."""
+    The r4 probe (working notes, "Round-4 end state") also rules out
+    per-doc sorted-run counting (11 s) and HOF run-length arrays
+    (61 s, quadratic array_append)."""
     d = t(spark, sf_dir, "documents")
     dist = d.groupBy("text").agg(F.count(F.lit(1)).alias("__mult"))
     return (
@@ -998,7 +999,7 @@ def llm_fingerprint(spark, sf_dir):
     pay one text exchange (+0.15 s at sf0.1). Same law as the dedup
     family: per-content work must scale with distinct content.
     Fixed two-exchange shape → static-plan session (397→182 ms at
-    sf0.1, tools/probe_floor.py — the largest AQE-staging tax in the
+    sf0.1, BASELINE.md round 5 — the largest AQE-staging tax in the
     headline set)."""
     spark = static_plan_session(spark)
     d = t(spark, sf_dir, "documents")

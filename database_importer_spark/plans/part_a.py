@@ -328,7 +328,7 @@ def upsert_merge_full(spark, sf_dir):
     since r6 the semi probe shares the update arm's broadcast frame,
     so the duplicated subplans are canonically identical and reuse
     one another's exchanges — the A/B now measures the checkpoint as
-    pure loss (3.62 → 2.97 s at sf10, tools/probe_merge_fixed.py).
+    pure loss (3.62 → 2.97 s at sf10, BASELINE.md "Round-7 levers").
     Dropping it also keeps the source file-anchored, which is what
     lets validate_unique_keys memoize (a checkpointed LogicalRDD has
     no input files to fingerprint, so it re-validated every

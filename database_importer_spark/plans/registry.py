@@ -45,7 +45,7 @@ def declare(key: str, oracle: str | None = None, cache_frame: bool = False):
     point-lookup / r11 borderline-trio warm path applied at the
     registry level (optimization round r11). It removes ONLY the
     py4j/analysis plan-construction constant (25-660 ms/key measured,
-    tools/probe_builder_cost.py); every materialization still
+    OPTIMIZATION_r11.md "Baseline measurements"); every materialization still
     recomputes from the parquet inputs — a cached *plan* is not a
     cached *result*. Set it ONLY for pure builders: plans over
     immutable parquet / memoized immutable ensure_* layouts, with no

@@ -238,7 +238,7 @@ def join_broadcast_hash(spark, sf_dir):
     Fixed-shape plan: runs on the static-plan session — AQE has no
     join side to flip and no skew to split here, and its per-stage
     scheduling round trips dominated the wall clock (433→288 ms at
-    sf0.1, tools/probe_floor.py; the saving is flat vs data size).
+    sf0.1, BASELINE.md round 5; the saving is flat vs data size).
     Declared as ONE spark.sql call (r7): this row is pure per-query
     constant at every sf (dims don't scale), so the ~8 py4j
     DataFrame round trips were a measurable slice of it; BROADCAST
@@ -938,7 +938,7 @@ def join_skew_aqe(spark, sf_dir):
     slice, tiny here) instead of sort-merge: same shuffle, same skew
     split (OptimizeSkewedJoin handles SHJ exactly like SMJ —
     ShuffledHashJoin(skew=true) plan-pinned), but neither side pays
-    the sort. A/B at sf10 (tools/probe_skew_shj.py, alternated
+    the sort. A/B at sf10 (OPTIMIZATION_r11.md §2, alternated
     min-of-6): SMJ 6.01 s vs SHJ 5.24 s, rows identical. The r4
     shuffled-hash negative (hash-relation OOM at 60M rows) does not
     apply: the build side here is the dim slice, never the fact. The
@@ -1017,7 +1017,7 @@ def join_skew_aqe(spark, sf_dir):
             )
             # guide §3.1: shuffled-hash, build = the per-partition dim
             # slice — same shuffle and skew split as SMJ, no sorts
-            # (A/B: 6.01 → 5.24 s at sf10, tools/probe_skew_shj.py)
+            # (A/B: 6.01 → 5.24 s at sf10, OPTIMIZATION_r11.md §2)
             .hint("shuffle_hash")
         )
         return (

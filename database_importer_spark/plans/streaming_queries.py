@@ -31,7 +31,7 @@ def stream_tumbling_window(spark, sf_dir):
     Static-plan session: the micro-batch's physical shape is fixed
     (scan → partial agg → state-store agg); AQE staging inside each
     micro-batch is pure scheduling tax (−170 ms at sf0.1,
-    tools/probe_stream.py). State semantics are unchanged — the real
+    BASELINE.md round 5). State semantics are unchanged — the real
     watermark + state-store machinery still runs every batch."""
     spark = static_plan_session(spark)
     ev = W.read_events_stream(spark, sf_dir)

@@ -117,7 +117,7 @@ def tpch_q3_bucketed(spark, sf_dir):
     tests/test_plans.py (no Exchange node at all).
 
     Zero-wide-exchange shape → static-plan session (AQE staging cost
-    only, nothing to adapt; −95 ms at sf0.1, tools/probe_floor.py).
+    only, nothing to adapt; −95 ms at sf0.1, BASELINE.md round 5).
     Declared as ONE spark.sql call (r6): the equivalent DataFrame
     chain costs ~150 ms of per-invocation py4j round trips, the SQL
     form ~40 ms — same physical plan, bit-equal output."""
@@ -274,7 +274,7 @@ def tpch_q5_bucketed(spark, sf_dir):
     Measured sf10: 1990 ms unbucketed → see BASELINE.md (the date
     filter on orders still pushes into the bucketed parquet scan).
     Broadcasts + one 5-row exchange = fixed shape → static-plan
-    session (tools/probe_floor.py). Declared as ONE spark.sql call
+    session (BASELINE.md round 5). Declared as ONE spark.sql call
     (r6): the equivalent six-way DataFrame chain costs ~195 ms of
     per-invocation py4j round trips, the SQL form ~43 ms — same
     physical plan (1 SMJ, 1 exchange, 0 sorts), bit-equal output."""

@@ -51,8 +51,8 @@ def udf_pandas_vectorized(spark, sf_dir):
     boundary as Arrow batches (~10-100x over row-at-a-time). The
     numpy float64 math is the same IEEE ops as the SQL twin — exact.
     Map-only plan → static-plan session: there is no shuffle for AQE
-    to stage at all (364→258 ms at sf0.1, tools/probe_floor.py).
-    Cost decomposition (tools/probe_arrow.py, sf10): compute floor
+    to stage at all (364→258 ms at sf0.1, BASELINE.md round 5).
+    Cost decomposition (BASELINE.md "Round-6 probes", sf10): compute floor
     0.39 s, + 0.73 s for the two-input-column Arrow round trip =
     1.12 s — the residual vs DuckDB is serialization by construction,
     and only the UDF's inputs cross (the projection stays JVM-side);
@@ -201,7 +201,7 @@ def udf_map_in_arrow(spark, sf_dir):
     """mapInArrow — the whole-batch end of the Python surface: batches
     arrive as raw Arrow RecordBatches (no pandas conversion), computed
     with Arrow kernels, yielded back. Declared for the surface; know
-    its cost model (measured, tools/probe_arrow.py at sf10): a MAP
+    its cost model (measured at sf10, BASELINE.md "Round-6 probes"): a MAP
     operator ships EVERY column of every row through Python both ways,
     so for a scalar expression it loses badly to a pandas_udf, which
     ships only the UDF's input columns while the projection stays

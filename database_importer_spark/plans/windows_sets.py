@@ -32,7 +32,7 @@ def win_rank_topk_per_group(spark, sf_dir):
     partition key, per-group sort only (never a global sort). At
     100 TB this is the canonical 'top 3 orders per customer' plan.
     One exchange + per-group sort = fixed shape → static-plan
-    session (tools/probe_floor.py). Declared as ONE spark.sql call
+    session (BASELINE.md round 5). Declared as ONE spark.sql call
     (r6, py4j-constant shave); the rn <= 3 filter still plans as
     WindowGroupLimit pushed below the exchange. Frame-cached per
     corpus fingerprint (r11 borderline-band constant shave)."""
@@ -147,13 +147,13 @@ def win_running_sum_rows(spark, sf_dir):
     """Running total per customer: quantized-LONG accumulation makes
     every prefix sum order-independent-exact, so the whole column
     hash-matches. One exchange + per-group sort = fixed shape →
-    static-plan session (283→208 ms at sf0.1, tools/probe_floor.py).
+    static-plan session (283→208 ms at sf0.1, BASELINE.md round 5).
     Output conversion is the plain double division (dec4_sum
     div="double", r7): bit-equal to the DECIMAL(25,4)→double cast
     while the per-CUSTOMER prefix stays < $9.0e11 — a per-entity
     bound that holds at 100 TB — and it runs per output row, so the
     decimal chain was 26% of the query (1.51→1.12 s at sf10,
-    tools/probe_band.py). Residual vs DuckDB is the exchange+sort
+    BASELINE.md "Round-7 levers"). Residual vs DuckDB is the exchange+sort
     floor (1.02 s of 1.12); the bucketed twin removes exactly that.
     Frame-cached per corpus fingerprint (r11: the ~130 ms py4j plan
     construction was 10%+ of the sf10 wall on a borderline-2x row;

@@ -135,7 +135,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # single-JVM heap for local mode (a real cluster sets executor
         # memory explicitly). r6 cross-process A/B at sf10 (min-of-5
-        # per invocation, alternated, tools/probe_heap.py): 16g wins
+        # per invocation, alternated; BASELINE.md "The heap probe"): 16g wins
         # 7-12% on scan/shuffle keys over 8g (q3 1.52->1.39 s,
         # q5_bucketed 611->539 ms, rank-topk 711->662, groupby_double
         # 581->542, merge ~3%) — less spill pressure per task share.
@@ -194,7 +194,7 @@ def static_plan_session(spark: SparkSession) -> SparkSession:
     aggregation already shrinking the shuffle to rows-per-group —
     that staging buys nothing and costs a per-stage scheduling round
     trip that dominates sub-second queries (measured in
-    tools/probe_floor.py: join_broadcast_hash 433→288 ms,
+    BASELINE.md round 5: join_broadcast_hash 433→288 ms,
     llm_fingerprint 397→182 ms at sf0.1; both flat vs data size, so
     the same absolute saving holds at sf10). This is a per-query
     planner directive, not an engine default: shapes with real

@@ -164,7 +164,7 @@ def _scratch_checkpoint_dir(name: str) -> str:
     has one: the bounded replay's offset log and state-store commits
     are durability bookkeeping for a query whose source is a static
     file — paying disk fsyncs for them is pure tax (measured −120 ms
-    per replay at sf0.1, tools/probe_stream.py). On a real cluster
+    per replay at sf0.1, BASELINE.md round 5). On a real cluster
     the checkpoint goes on durable shared storage; this knob is
     replay-harness-only and falls back to the system tempdir.
 

@@ -879,6 +879,10 @@ def test_bench_line_stays_under_driver_tail():
             "queries": {k: 99.999 for k in HEADLINE},
             "sf": 0.1,
             "duckdb_calib_sec": 0.0175,
+            # the run's setup (bench.py always runs local[...])
+            "cpus": 128,
+            "master": "local[128]",
+            "heap": "1024g",
         }
     )
     assert len(line) < 1950, (

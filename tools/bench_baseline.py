@@ -1,5 +1,5 @@
 """Measure Spark vs DuckDB wall-clock per headline query at a scale
-factor and rewrite the measured-results table in BASELINE.md.
+factor and print the measured-results table rows of BASELINE.md.
 
 Usage: python tools/bench_baseline.py [sf_dir]
 """
@@ -8,29 +8,20 @@ from __future__ import annotations
 
 import os
 import sys
-import time
-
-import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, RUNS, materialize  # noqa: E402
+from bench import HEADLINE, RUNS, append_runs, materialize, timed_runs  # noqa: E402
 from database_importer_spark import get_spark  # noqa: E402
 from database_importer_spark.plans import REGISTRY  # noqa: E402
-
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from tools.profile_keys import duck_ctas_runs, duckdb_views  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("bench-baseline")
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'")
+    con = duckdb_views(sf_dir)
 
     # This host (virtualized, shared) shows rare multi-second stalls
     # that poison any single run; MIN of N is the standard noise-floor
@@ -41,36 +32,20 @@ def main() -> None:
     raw: dict[str, dict[str, list[float]]] = {}
     for key in HEADLINE:
         q = REGISTRY[key]
-        materialize(q.fn(spark, sf_dir))  # warm
-        stimes = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            materialize(q.fn(spark, sf_dir))
-            stimes.append(time.perf_counter() - t0)
+        timed = timed_runs({key: lambda: materialize(q.fn(spark, sf_dir))}, runs)[key]
+        stimes = [s for s, _ in timed]
         s_ms = min(stimes) * 1000
         raw[key] = {"spark": [round(x, 3) for x in stimes]}
-        print(f"  {key} spark {[round(x,3) for x in stimes]}", file=sys.stderr)
+        print(f"  {key} spark {raw[key]['spark']}", file=sys.stderr)
 
         if q.oracle is not None:
             # engine-side materialization (CREATE TABLE AS) — the fair
             # twin of Spark's noop sink: full compute of every output
             # column, no Python-object fetch cost on either side.
-            def run_duck():
-                con.execute("DROP TABLE IF EXISTS __bench_out")
-                con.execute(f"CREATE TEMP TABLE __bench_out AS ({q.oracle})")
-
-            run_duck()  # warm
-            dtimes = []
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                run_duck()
-                dtimes.append(time.perf_counter() - t0)
+            dtimes = duck_ctas_runs(con, q.oracle, runs)
             d_ms = min(dtimes) * 1000
             raw[key]["duck"] = [round(x, 3) for x in dtimes]
-            print(f"  {key} duck  {[round(x,3) for x in dtimes]}", file=sys.stderr)
-            # free the materialized output before the next query's
-            # Spark timing — holding a 6M-row table would poison it
-            con.execute("DROP TABLE IF EXISTS __bench_out")
+            print(f"  {key} duck  {raw[key]['duck']}", file=sys.stderr)
             ratio = s_ms / d_ms if d_ms else float("inf")
             rows.append((key, s_ms, d_ms, ratio))
         else:
@@ -79,32 +54,11 @@ def main() -> None:
     # Persist every raw timing so a reader can separate host-noise
     # spread from a real regression without re-running (the VERDICT r5
     # "regressions" were exactly this ambiguity).
-    import json
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        f"BENCH_RUNS_{tag}.json",
+    path, count = append_runs(
+        {"metric": "spark_vs_duckdb_runs", "unit": "sec", "n": runs, "queries": raw},
+        sf_dir,
     )
-    # APPEND an invocation instead of overwriting (r7): the judge
-    # reads the multi-invocation envelope; a plain "w" dump silently
-    # discarded the previous run's arrays.
-    doc = {"invocations": []}
-    if os.path.exists(out):
-        try:
-            with open(out) as f:
-                prev = json.load(f)
-            doc = prev if "invocations" in prev else {"invocations": [prev]}
-        except Exception:
-            pass
-    doc["invocations"].append(raw)
-    with open(out, "w") as f:
-        json.dump(doc, f, indent=1)
-    print(
-        f"  per-run arrays -> {out} "
-        f"(invocation {len(doc['invocations'])})",
-        file=sys.stderr,
-    )
+    print(f"  per-run arrays -> {path} (invocation {count})", file=sys.stderr)
 
     lines = []
     for key, s_ms, d_ms, ratio in rows:

@@ -6,8 +6,8 @@
 # checkers (front / llm-family / back ranges) finish in ~75 min with
 # ~65 GB peak RSS (measured r7; 128 GiB host). PASS lines in each log
 # are the artifact of record for a killed run — the --json file only
-# appears at a worker's clean exit — and tools/merge_sf10_sweep.py
-# (or the inline merge below) folds logs + part JSONs into one file.
+# appears at a worker's clean exit — and the inline merge below folds
+# logs + part JSONs into one file.
 #
 # CHECKLIST (VERDICT r8 item 6): FREEZE THE REGISTRY before launching
 # this sweep — keys declared after the key-lister below runs are

@@ -41,6 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from database_importer_spark.cache import fingerprint, memo
 
@@ -146,14 +147,9 @@ class Merger:
         importer.py:18-28).
     broadcast : bool
         Hint the update source as the broadcast side (default True:
-        merge sources are small relative to a 100 TB target).
-    source_join_hint : str, optional
-        A join-strategy hint (e.g. ``"merge"``) applied to the source
-        side AT the merge-join sites only. Callers must not hint the
-        ``data`` frame themselves: the Merger also runs non-join
-        queries over it (key-uniqueness validation), where a dangling
-        join hint is dropped with a HintErrorLogger warning — and a
-        dropped hint means the plan it was meant to pin isn't pinned.
+        merge sources are small relative to a 100 TB target). False
+        also makes the full MERGE (``merged(update=True,
+        insert=True)``) the single full-outer pass.
     """
 
     def __init__(
@@ -164,7 +160,6 @@ class Merger:
         subset: list[str] | None = None,
         keys: list[str] | None = None,
         broadcast: bool = True,
-        source_join_hint: str | None = None,
         validate_anchor: DataFrame | None = None,
     ):
         # Fail-fast on an empty source (reference importer.py:131-139)
@@ -191,7 +186,6 @@ class Merger:
         self._data_master = data
         self._keys = list(keys or [])
         self._broadcast = broadcast
-        self._source_join_hint = source_join_hint
 
         self._check_dup_columns(data.columns)
 
@@ -399,129 +393,83 @@ class Merger:
 
     # --- execution ---------------------------------------------------
 
-    def _hinted_source(self, df: DataFrame) -> DataFrame:
-        """Apply the configured join-strategy hint to a source frame
-        that is about to become a join input (hints survive the
-        projections the arms add above it)."""
-        return df.hint(self._source_join_hint) if self._source_join_hint else df
-
     def _updates_frame(self) -> DataFrame:
-        u = self._hinted_source(self._data).withColumn(_MATCH_FLAG, F.lit(True))
+        u = self._data.withColumn(_MATCH_FLAG, F.lit(True))
         return F.broadcast(u) if self._broadcast else u
 
-    def merged(
-        self,
-        update: bool = True,
-        insert: bool = False,
-        strategy: str = "two_arm",
-    ) -> DataFrame:
-        """Return the post-merge target as one lazy DataFrame plan.
+    def _update_arm(self, how: str) -> DataFrame:
+        """MERGE's update arm: the target joined with the update
+        source on the keys, every output column cast to the target
+        column's type (the reference stages into a schema-only copy of
+        the target, so its UPDATE never widens a column; a no-op cast
+        folds away). ``how`` picks the shape:
+
+          * ``"left"`` — every target row, matched rows updated
+            (``merged``);
+          * ``"inner"`` — only the matched rows' post-images
+            (``merged_delta``);
+          * ``"full_outer"`` — the single-pass MERGE: target-only rows
+            pass through, source-only rows become the inserts, their
+            typed-NULL padding falling out of the join itself.
+
+        ``UPDATE SET a.c = b.c``: the match flag (never NULL on a
+        source-present row) drives the branch, so a NULL source value
+        still overwrites. Target rows with NULL join keys can never
+        match the null-rejecting join, preserving the reference's
+        never-match semantics in every shape."""
+        joined = self._target.alias("a").join(
+            self._updates_frame().alias("b"), on=self._join_on, how=how
+        )
+        matched = F.col(_MATCH_FLAG).isNotNull()
+        cols = []
+        for f in self._target.schema.fields:
+            c = f.name
+            if c in self._join_on:
+                v = _qcol(c)  # USING join: coalesced key on full_outer
+            elif c in self._subset:
+                v = F.when(matched, _qcol(c, "b")).otherwise(_qcol(c, "a"))
+            else:
+                v = _qcol(c, "a")
+            cols.append(v.cast(f.dataType).alias(c))
+        return joined.select(*cols)
+
+    def _inserts(self) -> DataFrame:
+        return _insert_arm(
+            self._target,
+            self._data,
+            self._join_on,
+            self._target.schema,
+            self._updates_frame() if self._broadcast else None,
+        )
+
+    def _validate_action(self, update: bool, insert: bool) -> None:
+        if not (update or insert):
+            raise ValueError("at least one action must be performed")
+        self.validate_unique_keys()
+
+    def merged(self, update: bool = True, insert: bool = False) -> DataFrame:
+        """Return the post-merge target as one lazy DataFrame plan,
+        in the target's schema.
 
         ``update``: matched rows take source values (NULLs included).
         ``insert``: unmatched source rows are appended, null-padding
         target columns absent from the source (completes the
         reference's importer.py:361-362).
 
-        ``strategy`` (update+insert only):
-          * ``"two_arm"`` (default) — update arm (left join) ∪ insert
-            arm (semi+anti). With ``broadcast=True`` the target side
-            is SCANNED twice but never shuffled: the right default
-            when the target is 100 TB and the batch broadcasts.
-          * ``"full_outer"`` — ONE full-outer join, one target scan,
-            no union. A full outer join cannot broadcast (no
-            preserved side), so the target must either shuffle or —
-            the case this strategy exists for — already satisfy the
-            join's distribution via a BUCKETED layout, where the
-            target side plans exchange-free and sort-free and only
-            the batch moves. Row-identical to two_arm (same
-            match-flag NULL-overwrite semantics; property-tested).
-        """
-        if not (update or insert):
-            raise ValueError("at least one action must be performed")
-        if strategy not in ("two_arm", "full_outer"):
-            raise ValueError(f"unknown merge strategy: {strategy!r}")
-        if strategy == "full_outer":
-            if not (update and insert):
-                raise ValueError(
-                    "full_outer strategy implements the full MERGE "
-                    "(update=True, insert=True)"
-                )
-            self.validate_unique_keys()
-            return self._merged_full_outer()
-        self.validate_unique_keys()
-
-        keys = self._join_on
-        out = self._target
-        u = self._updates_frame()
-
-        if update:
-            a, b = self._target.alias("a"), u.alias("b")
-            joined = a.join(b, on=keys, how="left")
-
-            cols = []
-            for c in self._target.columns:
-                if c in keys:
-                    cols.append(_qcol(c))
-                elif c in self._subset:
-                    # UPDATE SET a.c = b.c — source value wins on
-                    # match even when NULL; match flag (never NULL on
-                    # a matched row) drives the branch.
-                    cols.append(
-                        F.when(F.col(_MATCH_FLAG), _qcol(c, "b"))
-                        .otherwise(_qcol(c, "a"))
-                        .alias(c)
-                    )
-                else:
-                    cols.append(_qcol(c, "a").alias(c))
-            out = joined.select(*cols)
-
-        if insert:
-            if self._broadcast:
-                # Direct data-ANTI-target would shuffle every target
-                # key. Instead: semi-join target keys against the
-                # broadcast source (target scanned, nothing shuffled;
-                # result ≤ |source|), then anti-join the source
-                # against that small matched-key set — two broadcast
-                # joins, the 100 TB side never moves.
-                #
-                # The semi probes the SAME broadcast frame the update
-                # arm joins (not a keys-only projection): identical
-                # subplans canonicalize equal, so AQE's exchange reuse
-                # builds ONE hash relation for both arms instead of
-                # two — measured 2.7 s → 2.4 s on the sf10 full merge.
-                # A semi join only reads the build side's keys, so the
-                # extra payload columns cost broadcast bytes already
-                # being shipped for the update arm anyway.
-                matched_keys = self._target.select(
-                    *[_qcol(k).alias(k) for k in keys]
-                ).join(
-                    self._updates_frame() if update else F.broadcast(
-                        self._data.select(*[_qcol(k).alias(k) for k in keys])
-                    ),
-                    keys,
-                    "left_semi",
-                )
-                unmatched = self._data.join(
-                    F.broadcast(matched_keys), on=keys, how="left_anti"
-                )
-            else:
-                unmatched = self._hinted_source(self._data).join(
-                    self._target.select(*[_qcol(k).alias(k) for k in keys]),
-                    on=keys,
-                    how="left_anti",
-                )
-            # pad to the full target schema with typed NULLs
-            pad = unmatched.select(
-                *[
-                    _qcol(c).cast(self._target.schema[c].dataType).alias(c)
-                    if c in unmatched.columns
-                    else F.lit(None).cast(self._target.schema[c].dataType).alias(c)
-                    for c in self._target.columns
-                ]
-            )
-            out = out.unionByName(pad)
-
-        return out
+        With ``broadcast=True`` the full MERGE is the update arm (left
+        join) ∪ the insert arm: the target is SCANNED twice but never
+        shuffled — right when the target is 100 TB and the batch
+        broadcasts. With ``broadcast=False`` it is ONE full-outer join,
+        one target scan, no union: a full outer join cannot broadcast
+        anyway, and the two-arm shape would shuffle the target twice.
+        Against a BUCKETED target the full-outer side plans
+        exchange-free and sort-free and only the batch moves. Both
+        shapes are row-identical (property-tested)."""
+        self._validate_action(update, insert)
+        if update and insert and not self._broadcast:
+            return self._update_arm("full_outer")
+        out = self._update_arm("left") if update else self._target
+        return out.unionByName(self._inserts()) if insert else out
 
     def merged_delta(self, update: bool = True, insert: bool = True) -> DataFrame:
         """Only the rows a MERGE would WRITE: the post-update image of
@@ -540,149 +488,68 @@ class Merger:
         Plan: the update arm probes the target with an INNER join
         against the (broadcast, by default) source — the target only
         ever streams through a hash probe, nothing target-sized
-        shuffles or is output; the insert arm is the same anti-join as
-        ``merged()``. Row-identity property vs merged() is pytest-
+        shuffles or is output; the insert arm is the same as
+        ``merged()``'s. Row-identity property vs merged() is pytest-
         pinned: merged() minus untouched target rows == merged_delta().
         """
-        if not (update or insert):
-            raise MergerError("at least one action must be performed")
-        self.validate_unique_keys()
-
-        keys = self._join_on
-        arms = []
-        if update:
-            a, b = self._target.alias("a"), self._updates_frame().alias("b")
-            joined = a.join(b, on=keys, how="inner")
-            cols = []
-            for c in self._target.columns:
-                if c in keys:
-                    cols.append(_qcol(c))
-                elif c in self._subset:
-                    cols.append(_qcol(c, "b").alias(c))
-                else:
-                    cols.append(_qcol(c, "a").alias(c))
-            arms.append(joined.select(*cols))
-        if insert:
-            if self._broadcast:
-                # same two-broadcast shape as merged()'s insert arm:
-                # semi-probe target keys against the broadcast source
-                # (≤|source| rows out, target only streams), then
-                # anti against that small set — a direct anti would
-                # shuffle every target key, the exact cost this
-                # delta-output surface exists to avoid. The semi
-                # probes the SAME broadcast frame the update arm
-                # joins so AQE builds one shared hash relation.
-                matched_keys = self._target.select(
-                    *[_qcol(k).alias(k) for k in keys]
-                ).join(
-                    self._updates_frame() if update else F.broadcast(
-                        self._data.select(*[_qcol(k).alias(k) for k in keys])
-                    ),
-                    keys,
-                    "left_semi",
-                )
-                unmatched = self._data.join(
-                    F.broadcast(matched_keys), on=keys, how="left_anti"
-                )
-            else:
-                unmatched = self._hinted_source(self._data).join(
-                    self._target.select(*[_qcol(k).alias(k) for k in keys]),
-                    on=keys,
-                    how="left_anti",
-                )
-            arms.append(
-                unmatched.select(
-                    *[
-                        _qcol(c).cast(self._target.schema[c].dataType).alias(c)
-                        if c in unmatched.columns
-                        else F.lit(None)
-                        .cast(self._target.schema[c].dataType)
-                        .alias(c)
-                        for c in self._target.columns
-                    ]
-                )
-            )
-        out = arms[0]
-        for extra in arms[1:]:
-            out = out.unionByName(extra)
-        return out
-
-    def _merged_full_outer(self) -> DataFrame:
-        """Single-pass MERGE: target FULL OUTER JOIN source on the
-        keys, then per-row arbitration — matched rows take source
-        values (the match flag, never NULL on a source-present row,
-        drives the branch so a NULL source value still overwrites),
-        target-only rows pass through, source-only rows become the
-        inserts with typed-NULL padding falling out of the join
-        itself. Target rows with NULL join keys survive as
-        target-only rows (the null-rejecting join condition can
-        never match them), preserving the reference's never-match
-        semantics."""
-        keys = self._join_on
-        b = (
-            self._hinted_source(self._data)
-            .withColumn(_MATCH_FLAG, F.lit(True))
-            .alias("b")
-        )
-        a = self._target.alias("a")
-        cond = None
-        for k in keys:
-            c = _qcol(k, "a") == _qcol(k, "b")
-            cond = c if cond is None else (cond & c)
-        joined = a.join(b, cond, "full_outer")
-        cols = []
-        for c in self._target.columns:
-            if c in keys:
-                cols.append(F.coalesce(_qcol(c, "a"), _qcol(c, "b")).alias(c))
-            elif c in self._subset:
-                cols.append(
-                    F.when(F.col(_MATCH_FLAG).isNotNull(), _qcol(c, "b"))
-                    .otherwise(_qcol(c, "a"))
-                    .cast(self._target.schema[c].dataType)
-                    .alias(c)
-                )
-            else:
-                cols.append(_qcol(c, "a").alias(c))
-        return joined.select(*cols)
+        self._validate_action(update, insert)
+        if not insert:
+            return self._update_arm("inner")
+        ins = self._inserts()
+        return self._update_arm("inner").unionByName(ins) if update else ins
 
     def updated_rowcount(self) -> int:
         """Number of target rows a merge(update=True) touches — the
-        reference's ``cur.rowcount`` surface (importer.py:359). Equals
-        the semi-join count because source keys are unique."""
-        return self._target.join(
-            self._updates_frame().select(
-                *[_qcol(k).alias(k) for k in self._join_on]
-            ),
-            self._join_on,
-            "left_semi",
-        ).count()
+        reference's ``cur.rowcount`` surface (importer.py:359): the
+        rows of the inner update arm, one per matched target row once
+        the source keys are validated unique."""
+        self.validate_unique_keys()
+        return self._update_arm("inner").count()
 
     def inserted_rowcount(self) -> int:
         """Number of rows a merge(insert=True) appends — completes the
         reference's ``row_count_inserted`` surface (importer.py:85,138),
         which the reference initializes to -1 and can never set because
         its ``_insert`` body is NotImplementedError (importer.py:361).
-        This engine ships the insert arm, so the count is real: source
-        rows whose keys match no target row — exactly the rows the
-        insert arm emits (source keys are unique by the validated
-        merge contract). Same broadcast discipline as the arm itself
-        (merged()'s insert arm): the target never shuffles — its keys
-        semi-probe the broadcast source, then the source antis the
-        small matched-key set."""
-        keys = self._join_on
-        key_cols = [_qcol(k).alias(k) for k in keys]
-        if self._broadcast:
-            matched_keys = self._target.select(*key_cols).join(
-                F.broadcast(self._data.select(*key_cols)), keys, "left_semi"
-            )
-            unmatched = self._data.join(
-                F.broadcast(matched_keys), on=keys, how="left_anti"
-            )
-        else:
-            unmatched = self._hinted_source(self._data).join(
-                self._target.select(*key_cols), on=keys, how="left_anti"
-            )
-        return unmatched.count()
+        This engine ships the insert arm, so the count is real: the
+        rows the insert arm emits, under the same key validation as
+        the merge itself."""
+        self.validate_unique_keys()
+        return self._inserts().count()
+
+
+def _insert_arm(
+    target: DataFrame,
+    data: DataFrame,
+    keys: list[str],
+    schema: StructType,
+    probe: DataFrame | None = None,
+) -> DataFrame:
+    """MERGE's insert arm: the rows of ``data`` whose keys match no
+    ``target`` row, cast to ``schema`` and padded to it with typed
+    NULLs.
+
+    Without a ``probe`` it is the direct data-ANTI-target join, which
+    shuffles every target key. With ``probe`` — the broadcast frame the
+    update arm joins — the target's keys first semi-probe it (target
+    scanned, nothing shuffled, result ≤ |source|), and ``data`` antis
+    that small matched-key set: two broadcast joins, the 100 TB side
+    never moves. Probing the SAME frame the update arm joins (not a
+    keys-only projection) lets AQE's exchange reuse build ONE hash
+    relation for both arms — measured 2.7 s → 2.4 s on the sf10 full
+    merge; a semi join only reads the build side's keys."""
+    other = target.select(*[_qcol(k).alias(k) for k in keys])
+    if probe is not None:
+        other = F.broadcast(other.join(probe, keys, "left_semi"))
+    unmatched = data.join(other, keys, "left_anti")
+    return unmatched.select(
+        *[
+            (_qcol(f.name) if f.name in unmatched.columns else F.lit(None))
+            .cast(f.dataType)
+            .alias(f.name)
+            for f in schema.fields
+        ]
+    )
 
 
 def candidate_key_check(df: DataFrame, cols: list[str]) -> bool:

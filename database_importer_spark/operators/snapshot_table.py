@@ -61,7 +61,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from database_importer_spark.cache import fingerprint, memo
-from database_importer_spark.operators.merge import Merger
+from database_importer_spark.operators.merge import Merger, _insert_arm
 from database_importer_spark.operators.partitioning import _layout_lock
 
 _FORMAT = "dbis-snapshot/1"
@@ -431,11 +431,12 @@ def _merge_cdf_frame(
     rewrites, so the materialized feed must too); matched+changed
     rows emit update_preimage/update_postimage via one struct-array
     explode (single scan, codegen — the r4 CDC shape); unmatched
-    batch rows emit as inserts through the same two-broadcast-join
-    anti shape as Merger (the table side never shuffles)."""
+    batch rows emit as inserts through Merger's own insert arm (two
+    broadcast joins, the table side never shuffles)."""
     data_cols = [c for c in schema.names if c != part_col]
     subset = [c for c in batch.columns if c not in join_on]
-    b = F.broadcast(batch.na.drop(subset=join_on))
+    keyed = batch.na.drop(subset=join_on)
+    b = F.broadcast(keyed)
     joined = base.alias("a").join(b.alias("b"), on=join_on, how="inner")
     # flat pre/post projection so part_of (which reads table column
     # names) can derive the POST partition value from post columns;
@@ -474,20 +475,10 @@ def _merge_cdf_frame(
         .select(F.explode(F.array(pre_s, post_s)).alias("r"))
         .select("r.*")
     )
-    # insert arm: Merger's two-broadcast discipline — semi-probe the
-    # base keys against the broadcast batch (≤|batch| rows out, the
-    # base only streams), anti the batch against that small set.
-    matched_keys = base.select(*join_on).join(b, join_on, "left_semi")
-    unmatched = batch.na.drop(subset=join_on).join(
-        F.broadcast(matched_keys), on=join_on, how="left_anti"
-    )
-    ins_flat = unmatched.select(
-        *[
-            F.col(c).cast(schema[c].dataType).alias(c)
-            if c in unmatched.columns
-            else F.lit(None).cast(schema[c].dataType).alias(c)
-            for c in data_cols
-        ]
+    # insert rows: Merger's insert arm, semi-probing the base keys
+    # against the same broadcast batch the update rows join
+    ins_flat = _insert_arm(
+        base, keyed, join_on, T.StructType([schema[c] for c in data_cols]), b
     )
     ins = ins_flat.withColumn(part_col, part_of(ins_flat)).select(
         F.lit("insert").alias("_change_type"), *data_cols, part_col

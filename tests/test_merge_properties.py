@@ -3,6 +3,8 @@ hypothesis-generated key/null/duplicate patterns into the Merger:
 
   * update never changes cardinality;
   * update+insert cardinality = |target| + |unmatched source keys|;
+  * the broadcast two-arm and the single-pass full-outer MERGE agree,
+    and so do the row counts of both broadcast modes;
   * NULL-key source rows never touch the target;
   * a key is never multiplied;
   * non-subset columns are bit-for-bit unchanged.
@@ -60,11 +62,18 @@ def test_merge_invariants(spark, tgt, src):
     both = m.merged(update=True, insert=True)
     assert both.count() == len(tgt) + len(unmatched)
 
-    # the single-pass full-outer strategy is row-identical to the
-    # two-arm shape on every generated key/null/duplicate pattern
-    fo = m.merged(update=True, insert=True, strategy="full_outer")
+    # the single-pass full-outer MERGE (broadcast=False) is
+    # row-identical to the broadcast two-arm shape on every generated
+    # key/null/duplicate pattern
+    m_fo = Merger(target, source_u, join_on=["k"], subset=["a"], broadcast=False)
+    fo = m_fo.merged(update=True, insert=True)
     assert fo.exceptAll(both).count() == 0
     assert both.exceptAll(fo).count() == 0
+
+    # the count methods share the arms: same counts in both modes
+    for mm in (m, m_fo):
+        assert mm.inserted_rowcount() == len(unmatched)
+        assert mm.updated_rowcount() == len(src_keys & tgt_keys)
 
     # no key ever multiplied
     assert (

@@ -3,6 +3,9 @@
 same seed rows, same expected outputs, same error messages.
 """
 
+import ast
+import os
+
 import pytest
 from pyspark.sql import Row
 
@@ -216,17 +219,43 @@ def test_duplicate_key_values(spark, groceries):
         SCHEMA,
     )
     m = Merger(groceries, src, join_on=["id"])
-    with pytest.raises(
-        MergerError, match="data contains duplicate values in join on column: 'id'"
-    ):
-        m.merged(update=True)
+    for run in (m.merged, m.updated_rowcount, m.inserted_rowcount):
+        with pytest.raises(
+            MergerError,
+            match="data contains duplicate values in join on column: 'id'",
+        ):
+            run()
 
 
-def test_no_action(spark, groceries):
+@pytest.mark.parametrize("method", ["merged", "merged_delta"])
+def test_no_action(spark, groceries, method):
     src = spark.createDataFrame(SEED, SCHEMA)
     m = Merger(groceries, src, join_on=["id"])
     with pytest.raises(ValueError, match="at least one action must be performed"):
-        m.merged(update=False, insert=False)
+        getattr(m, method)(update=False, insert=False)
+
+
+def test_every_merge_shape_keeps_target_schema(spark):
+    """A wider source (bigint into int) never widens the target: every
+    MERGE shape returns exactly the target's schema, as the reference's
+    UPDATE through a schema-only staging copy of the target would."""
+    target = spark.createDataFrame(
+        [(1, 10, "x"), (2, 20, "y")], "k int, a int, s string"
+    )
+    src = spark.createDataFrame([(1, 11), (3, 33)], "k bigint, a bigint")
+    for broadcast in (True, False):
+        m = Merger(target, src, join_on=["k"], broadcast=broadcast)
+        shapes = {
+            "update": m.merged(update=True),
+            "update+insert": m.merged(update=True, insert=True),
+            "insert": m.merged(update=False, insert=True),
+            "delta": m.merged_delta(),
+        }
+        for name, df in shapes.items():
+            assert df.schema == target.schema, (broadcast, name, df.schema)
+        assert rows(shapes["update+insert"]) == [
+            (1, 11, "x"), (2, 20, "y"), (3, 33, None)
+        ]
 
 
 def test_default_join_from_keys(spark, groceries):
@@ -501,3 +530,90 @@ def test_jdbc_dsn_registry(spark, tmp_path):
     finally:
         _JDBC_DSNS.clear()
         _JDBC_DSNS.update(saved)
+
+
+# --- one MERGE implementation (source scan) -------------------------
+
+_PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "database_importer_spark",
+)
+
+
+def _package_sources() -> dict[str, str]:
+    out = {}
+    for dp, _d, fs in os.walk(_PKG):
+        for f in fs:
+            if f.endswith(".py"):
+                with open(os.path.join(dp, f)) as fh:
+                    out[os.path.relpath(os.path.join(dp, f), _PKG)] = fh.read()
+    return out
+
+
+def _sites(src: str, what: str, func: str | None = None) -> int:
+    """Count ``what`` — a string literal or a name — in ``src`` (inside
+    every function named ``func`` when given)."""
+    roots = [ast.parse(src)]
+    if func is not None:
+        roots = [
+            n for n in ast.walk(roots[0])
+            if isinstance(n, ast.FunctionDef) and n.name == func
+        ]
+    return sum(
+        (isinstance(n, ast.Constant) and n.value == what)
+        or (isinstance(n, ast.Name) and n.id == what)
+        for r in roots
+        for n in ast.walk(r)
+    )
+
+
+def _merge_arm_violations(sources: dict[str, str]) -> list[str]:
+    """merge.py builds the insert arm once (one semi probe, one anti
+    join), the cdf commit reuses it instead of hand-building another
+    or constructing a second Merger (whose construction runs jobs),
+    and the removed MERGE knobs stay gone."""
+    out = []
+    for how in ("left_semi", "left_anti"):
+        n = _sites(sources["operators/merge.py"], how)
+        if n != 1:
+            out.append(f"operators/merge.py: {n} {how} sites, want 1")
+    for what in ("left_anti", "Merger"):
+        n = _sites(
+            sources["operators/snapshot_table.py"], what, "_merge_cdf_frame"
+        )
+        if n:
+            out.append(f"_merge_cdf_frame: {n} {what} sites, want 0")
+    for rel, src in sorted(sources.items()):
+        out += [f"{rel}: {w}" for w in ("strategy=", "source_join_hint") if w in src]
+    return out
+
+
+def test_one_update_arm_one_insert_arm():
+    assert _merge_arm_violations(_package_sources()) == []
+
+
+def test_merge_arm_scan_flags_seeded_second_insert_arm():
+    sources = _package_sources()
+    second_arm = (
+        "\n\ndef _merge_cdf_frame(base, batch, keys):\n"
+        "    matched = base.select(*keys).join(batch, keys, 'left_semi')\n"
+        "    Merger(base, batch, join_on=keys).validate_unique_keys()\n"
+        "    return batch.join(matched, keys, how='left_anti')\n"
+    )
+    seeded = {
+        **sources,
+        "operators/merge.py": sources["operators/merge.py"] + second_arm,
+        "operators/snapshot_table.py": (
+            sources["operators/snapshot_table.py"] + second_arm
+        ),
+        "plans/x.py": "m = Merger(t, d, source_join_hint='merge')\n"
+        "m.merged(strategy='full_outer')\n",
+    }
+    assert _merge_arm_violations(seeded) == [
+        "operators/merge.py: 2 left_semi sites, want 1",
+        "operators/merge.py: 2 left_anti sites, want 1",
+        "_merge_cdf_frame: 1 left_anti sites, want 0",
+        "_merge_cdf_frame: 1 Merger sites, want 0",
+        "plans/x.py: strategy=",
+        "plans/x.py: source_join_hint",
+    ]

@@ -100,6 +100,35 @@ def test_merge_commit_is_copy_on_write(spark, tmp_path):
     assert got[16] == ("v16", 1) and len(got) == 41
 
 
+def test_merge_of_wider_batch_keeps_version_readable(spark, tmp_path):
+    """A bigint batch merged into an int column is written as int: the
+    committed files match the manifest schema, so the new version reads
+    back (a widened file fails the read with a parquet type mismatch)."""
+    loc = str(tmp_path / "tbl")
+
+    def src():
+        return spark.range(20).select(
+            F.col("id").cast("int").alias("k"),
+            F.col("id").cast("int").alias("qty"),
+            F.floor(F.col("id") / 10).cast("int").alias("m"),
+        )
+
+    st.create_snapshot_table(spark, loc, src, "m", "k", files=2)
+    batch = spark.createDataFrame(
+        [(5, 500), (15, 1500), (25, 2500)], "k bigint, qty bigint"
+    )
+    v = st.merge_snapshot_commit(
+        spark, loc, batch, ["k"], _part_of, touched=[0, 1, 2]
+    )
+    assert v == 1
+    got = {
+        r["k"]: r["qty"] for r in st.read_snapshot(spark, loc).collect()
+    }
+    assert len(got) == 21
+    assert got[5] == 500 and got[15] == 1500 and got[25] == 2500
+    assert got[6] == 6
+
+
 def test_time_travel_after_commits(spark, tmp_path):
     loc = _mk_table(spark, tmp_path)
     st.merge_snapshot_commit(

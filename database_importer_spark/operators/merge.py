@@ -215,7 +215,9 @@ class Merger:
         equality (two different RDDs canonicalize alike). Callers
         that checkpoint their staging batch pass the pre-checkpoint
         plan; validation then runs (and memoizes) on the anchor
-        — same rows by construction, so the verdict transfers."""
+        — same rows by construction, so the verdict transfers. The
+        snapshot merge likewise passes its batch as the anchor of the
+        touched-set-checked projection, which adds only a raise."""
         cols = [
             _qcol(c).alias(c) for c in (*self._join_on, *self._subset)
         ]

@@ -3,16 +3,13 @@ parquet — versioned manifests, file-granular copy-on-write MERGE,
 optimistic concurrency, time travel, snapshot-isolated readers, and
 vacuum.
 
-Why this exists. ``upsert_merge_partitioned`` already rewrites only
-the partitions a batch touches, but its commit primitive (dynamic
-partition overwrite) DELETES the replaced directory in place — it is
-not crash-atomic and a concurrent reader of the old files fails
-mid-job (the r8 cross-process sweep caught exactly that:
-FAILED_READ_FILE when a peer's commit deleted files this process had
-planned over; the stopgap was process-scoping the table). Delta Lake
-and Iceberg solve both problems with the same structure, and this
-module implements that structure natively since the container ships
-no lakehouse jars (carried verdict item since r3):
+Why this exists. A MERGE at scale should rewrite only the part of
+the table its batch touches. Spark's own primitive for that, dynamic
+partition overwrite, DELETES each replaced directory in place: it is
+not crash-atomic, and a concurrent reader planned over the old files
+fails mid-job with FAILED_READ_FILE. Delta Lake and Iceberg solve both
+problems with the same structure, and this module implements that
+structure natively, with no lakehouse jars:
 
 * data files are IMMUTABLE and never deleted by a commit — a commit
   only writes NEW files plus a NEW manifest;
@@ -700,6 +697,24 @@ def read_snapshot(
     return spark.read.schema(schema).parquet(*paths)
 
 
+def touched_partitions(batch: DataFrame, part_expr) -> list:
+    """The sorted distinct values of ``part_expr`` over ``batch`` — the
+    touched set of a merge whose batch months are not known up front.
+    One job; the collected result is bounded by the table's partition
+    count, never by the data. A NULL value is an error: no partition
+    holds it."""
+    vals = [
+        r[0]
+        for r in batch.select(part_expr.alias("__part")).distinct().collect()
+    ]
+    if any(v is None for v in vals):
+        raise ValueError(
+            "merge batch contains rows with a NULL partition value — "
+            "every batch row must map to a concrete target partition"
+        )
+    return sorted(vals)
+
+
 def merge_snapshot_prewrite(
     spark: SparkSession,
     loc: str,
@@ -711,9 +726,11 @@ def merge_snapshot_prewrite(
     """The merge's pre-write frame against the CURRENT latest version:
     manifest-pruned base (only files whose stats range intersects the
     touched values — selected driver-side, metadata-only) merged with
-    the broadcast batch, partition column re-derived. Returns (frame,
-    base manifest, candidate file entries) — split out so plan dumps
-    and tests can pin the shape without performing a commit."""
+    the broadcast batch, partition column re-derived. Every batch row
+    must map into ``touched``; the frame raises on one that does not.
+    Returns (frame, base manifest, candidate file entries) — split out
+    so plan dumps and tests can pin the shape without performing a
+    commit."""
     base_v = latest_version(loc)
     if base_v is None:
         raise FileNotFoundError(f"no snapshot table at {loc}")
@@ -727,9 +744,28 @@ def merge_snapshot_prewrite(
         if e["min"] is None or any(e["min"] <= v <= e["max"] for v in vals)
     ]
     base = _read_with_deletes(spark, loc, schema, candidates, _delete_entries(m))
-    merged = Merger(base.drop(part_col), batch, join_on=join_on).merged(
-        update=True, insert=True
+    # A batch row outside ``touched`` would miss the file holding its
+    # key and be inserted a second time, so the write job raises on it.
+    # The check rides a projection of the first non-key column. On a
+    # key, the join's and Merger's not-null filters over it would be
+    # pushed below the batch's own filters (a window partitioned by
+    # the key, say), and a filter form is copied across the equi-join
+    # onto the base side. Key validation runs on the unchecked batch.
+    p, allowed = part_of(batch), sorted(vals)
+    col = next(c for c in batch.columns if c not in join_on)
+    outside = F.raise_error(
+        F.format_string(
+            "merge batch row in partition %s outside the touched set %s",
+            p,
+            F.lit(str(allowed)),
+        )
     )
+    checked = batch.withColumn(
+        col, F.when(p.isNull() | ~p.isin(allowed), outside).otherwise(F.col(col))
+    )
+    merged = Merger(
+        base.drop(part_col), checked, join_on=join_on, validate_anchor=batch
+    ).merged(update=True, insert=True)
     return merged.withColumn(part_col, part_of(merged)), m, candidates
 
 

@@ -619,102 +619,13 @@ def _pm_batch_from_v0(spark, sf_dir, loc):
     return _pm_batch_core(base, key_base)
 
 
-def _pm_parts(spark, sf_dir):
-    """Shared by the declared key and its plan/filesystem tests:
-    (live table loc, full layout schema, pre-write merged frame)."""
-    from pyspark.sql import types as T
-
-    from database_importer_spark.operators.merge_partitioned import (
-        ensure_live_target,
-        merge_touched_only,
-        touched_partitions,
-    )
-
-    target_schema = t(spark, sf_dir, "orders").schema
-
-    def live_src():
-        o = t(spark, sf_dir, "orders")
-        return o.withColumn(_PM_PART_COL, _pm_month_of(o))
-
-    loc = ensure_live_target(
-        spark, sf_dir, "orders", live_src, _PM_PART_COL, "upsert_pm"
-    )
-    schema = T.StructType(
-        list(target_schema.fields)
-        + [T.StructField(_PM_PART_COL, T.IntegerType())]
-    )
-    batch = _pm_batch_df(spark, sf_dir)
-    touched = touched_partitions(
-        spark, batch, _pm_month_of(batch), ("upsert_merge_partitioned", loc)
-    )
-    out = merge_touched_only(
-        spark,
-        loc,
-        schema,
-        _PM_PART_COL,
-        _pm_month_of,
-        batch,
-        ["o_orderkey"],
-        touched,
-    )
-    return loc, schema, out, touched
-
-
-@declare("upsert_merge_partitioned", oracle=_PART_MERGE_ORACLE)
-def upsert_merge_partitioned(spark, sf_dir):
-    """The flagship MERGE at its 100 TB shape (VERDICT r7 item 1):
-    copy-on-write against a month-partitioned live table, rewriting
-    ONLY the partitions the batch touches.
-
-    ``upsert_merge_full`` re-emits all target rows per merge because
-    the reference rewrites its DBMS table server-side
-    (importer.py:293-362) — at 100 TB a megabyte batch must not cost a
-    table rewrite. Here the batch (one month of updates + inserts,
-    carrying its partition column) drives the lakehouse copy-on-write
-    protocol on plain parquet: touched-partition set from the batch
-    (one bounded memoized job), a partition-PRUNED scan of only those
-    directories (PartitionFilters plan-pinned), broadcast-batch merge
-    arms over |partition| rows, and a dynamic-partition-overwrite
-    commit that replaces exactly those directories. Untouched
-    partitions are never scanned for the write and never rewritten
-    (filesystem-pinned). Write cost is |touched| + |batch| — a 10 TB
-    table with a one-month batch merges at one-month cost.
-
-    The merge is IDEMPOTENT (absolute SET values; re-applied inserts
-    become same-value updates), so the live table converges and every
-    invocation returns the same post-merge state — the returned frame
-    is the full final table, hash-matched against the pure-SQL oracle,
-    which is what proves untouched partitions kept their bytes."""
-    loc, schema, out, touched = _pm_parts(spark, sf_dir)
-    from database_importer_spark.operators.merge_partitioned import (
-        commit_dynamic_overwrite,
-        read_live_table,
-    )
-
-    commit_dynamic_overwrite(spark, out, _PM_PART_COL, loc)
-    # audit read of the FINAL table state (committed bytes, not the
-    # pre-write frame): full scan, but a plain column scan, not the
-    # merge's join work — the verification read a warehouse would do
-    # anyway. Incremental listing: only the touched dirs re-list.
-    final = read_live_table(spark, loc, schema, _PM_PART_COL, touched)
-    return final.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        "o_orderdate",
-        "o_orderpriority",
-    )
-
-
 # --- snapshot table: native lakehouse commit protocol -----------------
 # The carried "Delta/Iceberg MERGE INTO if jars appear" item, built
 # natively (operators/snapshot_table.py): immutable data files,
 # versioned manifests with file-level stats, atomic link(2) commits
 # with optimistic retry, snapshot-isolated readers, time travel.
-# Same batch/oracle family as upsert_merge_partitioned, so the two
-# commit primitives (dynamic overwrite vs manifest swap) are directly
-# comparable in BASELINE.md.
+# upsert_merge_snapshot and upsert_merge_partitioned merge the same
+# month batch, checked by one oracle, at two file granularities.
 
 
 # Creation contract per declared snapshot table: (v0 files fan-out,
@@ -722,9 +633,10 @@ def upsert_merge_partitioned(spark, sf_dir):
 # the directory name (ADVICE r10: flipping a table's creation params
 # must mint a FRESH table, never silently reuse a stale one under the
 # create-once contract; the manual dbis_snap_* deletion gotcha class
-# dies here), and the creation sites assert their params against it.
+# dies here); _snap_create_named creates each table with its entry.
 _SNAP_CONTRACT = {
     "upsert": (16, False),
+    "pm": (84, False),
     "inc": (16, False),
     "feed": (72, True),
     "replica": (16, False),
@@ -764,33 +676,11 @@ def _snap_loc(spark, sf_dir, name="upsert"):
     return os.path.join(wh, f"dbis_snap_{name}_{fp}_{token}")
 
 
-def _snap_batch_touched(spark, sf_dir, loc):
-    from database_importer_spark.operators.merge_partitioned import (
-        touched_partitions,
-    )
-
-    batch = _pm_batch_df(spark, sf_dir)
-    touched = touched_partitions(
-        spark, batch, _pm_month_of(batch), ("upsert_merge_snapshot", loc)
-    )
-    return batch, touched
-
-
-def _snap_create(spark, sf_dir, loc):
-    from database_importer_spark.operators.snapshot_table import (
-        create_snapshot_table,
-    )
-
-    def src():
-        o = t(spark, sf_dir, "orders")
-        return o.withColumn(_PM_PART_COL, _pm_month_of(o))
-
-    # files=16 pins the v0 fan-out: ~84 order months / 16 ≈ 5-month
-    # range slices per file at any sf — sharp manifest pruning even
-    # where AQE would coalesce a small corpus to one file.
-    return create_snapshot_table(
-        spark, loc, src, _PM_PART_COL, "o_orderkey", files=16
-    )
+def _snap_batch_touched(spark, sf_dir):
+    """The month batch and its touched set, which is static: updates
+    are filtered to the batch month and inserts are dated inside it.
+    merge_snapshot_prewrite checks every row against it in the write."""
+    return _pm_batch_df(spark, sf_dir), list(_PM_TOUCHED)
 
 
 def _snap_ensure_merged(spark, sf_dir):
@@ -806,8 +696,8 @@ def _snap_ensure_merged(spark, sf_dir):
     loc = _snap_loc(spark, sf_dir)
     hit = cache.get(loc)
     if hit is None:
-        _snap_create(spark, sf_dir, loc)
-        batch, touched = _snap_batch_touched(spark, sf_dir, loc)
+        _snap_create_named(spark, sf_dir, "upsert")
+        batch, touched = _snap_batch_touched(spark, sf_dir)
         if latest_version(loc) == 0:
             merge_snapshot_commit(
                 spark, loc, batch, ["o_orderkey"], _pm_month_of, touched
@@ -827,42 +717,54 @@ _SNAP_OUT_COLS = [
 ]
 
 
+def _snap_merge_readback(spark, sf_dir, name):
+    """Merge the month batch into the contract-named table ``name`` as
+    one real commit, then read the committed version back in full."""
+    from database_importer_spark.operators.snapshot_table import (
+        merge_snapshot_commit,
+        read_snapshot,
+    )
+
+    loc = _snap_create_named(spark, sf_dir, name)
+    batch, touched = _snap_batch_touched(spark, sf_dir)
+    v = merge_snapshot_commit(
+        spark, loc, batch, ["o_orderkey"], _pm_month_of, touched
+    )
+    return read_snapshot(spark, loc, version=v).select(*_SNAP_OUT_COLS)
+
+
 @declare("upsert_merge_snapshot", oracle=_PART_MERGE_ORACLE)
 def upsert_merge_snapshot(spark, sf_dir):
     """The flagship MERGE on the native snapshot-table commit protocol
     (operators/snapshot_table.py) — the lakehouse-MERGE-INTO
     equivalent, jar-free.
 
-    ``upsert_merge_partitioned`` already bounds the WORK to the
-    touched slice; this key also fixes its two protocol gaps: the
-    commit is ATOMIC (staged manifest published by link(2) — no
-    window where a partition directory is half-replaced) and readers
-    are SNAPSHOT-ISOLATED (commits never delete files, so a concurrent
-    scan of the previous version cannot hit FAILED_READ_FILE — the
-    exact cross-process failure the r8 sweep caught on the
-    dynamic-overwrite table, which is why that one must stay
-    process-scoped while this table is shared). Conflicting writers
-    serialize via optimistic retry on the version link, and idempotent
-    merge content (absolute SET values) makes any writer interleaving
-    converge. Every invocation performs a real commit: manifest-pruned
-    read of only the files overlapping the batch's touched months,
-    broadcast-batch merge arms, new files + new manifest. Per-commit
+    Every invocation performs a real commit: a manifest-pruned read of
+    only the files overlapping the batch's touched month, broadcast-
+    batch merge arms, new files and a new manifest. The commit is
+    ATOMIC (the staged manifest is published by link(2), so no reader
+    sees a half-replaced slice) and readers are SNAPSHOT-ISOLATED
+    (commits never delete files, so a concurrent scan of the previous
+    version cannot hit FAILED_READ_FILE, and the table is shared
+    across processes). Conflicting writers serialize via optimistic
+    retry on the version link, and idempotent merge content (absolute
+    SET values) makes any writer interleaving converge. Per-commit
     cost — data AND metadata — scales with the commit, not the table.
     The returned frame is the full final state read from the committed
-    manifest, hash-matched against the same pure-SQL oracle as the
-    partitioned twin."""
-    from database_importer_spark.operators.snapshot_table import (
-        merge_snapshot_commit,
-        read_snapshot,
-    )
+    manifest, hash-matched against the pure-SQL oracle. files=16: each
+    v0 file holds about five months."""
+    return _snap_merge_readback(spark, sf_dir, "upsert")
 
-    loc = _snap_loc(spark, sf_dir)
-    _snap_create(spark, sf_dir, loc)
-    batch, touched = _snap_batch_touched(spark, sf_dir, loc)
-    v = merge_snapshot_commit(
-        spark, loc, batch, ["o_orderkey"], _pm_month_of, touched
-    )
-    return read_snapshot(spark, loc, version=v).select(*_SNAP_OUT_COLS)
+
+@declare("upsert_merge_partitioned", oracle=_PART_MERGE_ORACLE)
+def upsert_merge_partitioned(spark, sf_dir):
+    """The same MERGE at month granularity, the 100 TB shape: the
+    table's v0 is written as files=84, so each file holds about one
+    month and a one-month batch rewrites about one month of rows, not
+    a five-month file. A megabyte batch never costs a table rewrite:
+    write cost is |touched files| + |batch|, and untouched files are
+    carried into the new manifest by reference."""
+    return _snap_merge_readback(spark, sf_dir, "pm")
 
 
 @declare(
@@ -996,7 +898,7 @@ def _ref_table(spark, sf_dir):
     )
 
     if latest_version(loc) == 0:
-        batch, touched = _snap_batch_touched(spark, sf_dir, loc)
+        batch, touched = _snap_batch_touched(spark, sf_dir)
         merge_snapshot_commit(
             spark,
             loc,
@@ -1062,26 +964,19 @@ def table_branch_head_read(spark, sf_dir):
     return read_snapshot(spark, loc, ref="main").select(*_SNAP_OUT_COLS)
 
 
-def _snap_create_named(spark, sf_dir, name, files=16, cdf=False):
-    """Create-once v0 = orders + o_month on a per-key snapshot table
-    (the DELETE keys mutate destructively, so they each own a table
-    instead of sharing the merge family's). Same fan-out contract as
-    _snap_create: files=16 range-clustered on (month, orderkey) —
-    every file covers a contiguous ~5-month slice, which is what
-    makes the delete classification sharp. Keys whose per-commit cost
-    is bounded by the files INTERSECTING one month pass files≈84
-    (month-pure-ish slices): a copy-on-write rewrite then touches
-    ~1 month of rows instead of a 5-month file — the granularity a
-    real table would choose when its merge batches are month-scoped.
-    ``cdf`` enables the change-data-feed write contract (merge commits
-    materialize their row delta — the tables the CDF keys consume)."""
-    from database_importer_spark.operators.snapshot_table import (
-        create_snapshot_table,
-    )
-
-    assert _SNAP_CONTRACT[name] == (files, cdf), (
-        f"creation params for {name!r} drifted from _SNAP_CONTRACT"
-    )
+def _snap_create_named(spark, sf_dir, name):
+    """Create-once v0 = orders + o_month on the contract-named table
+    ``name``, with the fan-out and cdf flag its _SNAP_CONTRACT entry
+    declares; returns its location. files=16, range-clustered on
+    (month, orderkey), gives every file a contiguous ~5-month slice,
+    which keeps manifest pruning and the delete classification sharp
+    even where AQE would coalesce a small corpus to one file. Keys
+    whose per-commit cost is bounded by the files INTERSECTING one
+    month declare files=84 (about one month per file): a copy-on-write
+    rewrite then touches ~1 month of rows instead of a 5-month file.
+    A cdf table materializes each merge's row delta (the tables the
+    CDF keys consume)."""
+    files, cdf = _SNAP_CONTRACT[name]
     return _snap_create_at(
         spark, sf_dir, _snap_loc(spark, sf_dir, name), files=files, cdf=cdf
     )
@@ -1264,9 +1159,9 @@ def table_changes_merge(spark, sf_dir):
     # `_change_data` design), so this read is a plain scan of them;
     # pre-cdf tables fall back to the read-time digest diff,
     # test-pinned equal.
-    loc = _snap_create_named(spark, sf_dir, "cdc", cdf=True)
+    loc = _snap_create_named(spark, sf_dir, "cdc")
     if latest_version(loc) == 0:
-        batch, touched = _snap_batch_touched(spark, sf_dir, loc)
+        batch, touched = _snap_batch_touched(spark, sf_dir)
         merge_snapshot_commit(
             spark, loc, batch, ["o_orderkey"], _pm_month_of, touched
         )
@@ -1378,7 +1273,7 @@ def _feed_table(spark, sf_dir):
             expected_parent=0,
         )
     if latest_version(loc) == 1:
-        batch, touched = _snap_batch_touched(spark, sf_dir, loc)
+        batch, touched = _snap_batch_touched(spark, sf_dir)
         merge_snapshot_commit(
             spark,
             loc,
@@ -1482,12 +1377,9 @@ def table_changes_cursor(spark, sf_dir):
     same merged-state oracle as the flagship merge keys, which is
     what proves the feed carried EVERY row effect. The cursor also
     pins its version against vacuum (a paused consumer can always
-    resume). Bounded driver-side steps: cursor/catalog file reads and
-    the memoized touched-months collect (the fenced
-    touched_partitions class)."""
-    from database_importer_spark.operators.merge_partitioned import (
-        touched_partitions,
-    )
+    resume). Bounded driver-side steps: cursor/catalog file reads and,
+    while the cursor lags, the touched-months collect of the change
+    range (touched_partitions)."""
     from database_importer_spark.operators.snapshot_table import (
         advance_cursor,
         apply_changes_commit,
@@ -1497,6 +1389,7 @@ def table_changes_cursor(spark, sf_dir):
         cursor_entry,
         read_changes,
         read_snapshot,
+        touched_partitions,
     )
 
     loc, head = _feed_table(spark, sf_dir)
@@ -1517,10 +1410,8 @@ def table_changes_cursor(spark, sf_dir):
             break
         ch = read_changes(spark, loc, pos, head, ["o_orderkey"])
         touched = touched_partitions(
-            spark,
             ch.filter(F.col("_change_type") != "update_preimage"),
             F.col(_PM_PART_COL),
-            ("table_changes_cursor", loc, pos, head),
         )
         rv = apply_changes_commit(
             spark, rloc, ch, ["o_orderkey"], _pm_month_of, touched,
@@ -1641,7 +1532,7 @@ def _feedc_table(spark, sf_dir):
         merge_snapshot_commit,
     )
 
-    loc = _snap_create_named(spark, sf_dir, "feedc", files=84, cdf=True)
+    loc = _snap_create_named(spark, sf_dir, "feedc")
     for i, (lo, hi, ins) in enumerate(_CC_MONTHS):
         if latest_version(loc) == i:
             batch = _pm_batch_df(spark, sf_dir, lo, hi, ins)
@@ -1735,7 +1626,7 @@ def table_vacuum_retention(spark, sf_dir):
     create_tag(loc, "audit_v0", version=0)
     for parent in (0, 1):
         if latest_version(loc) == parent:
-            batch, touched = _snap_batch_touched(spark, sf_dir, loc)
+            batch, touched = _snap_batch_touched(spark, sf_dir)
             merge_snapshot_commit(
                 spark, loc, batch, ["o_orderkey"], _pm_month_of,
                 touched, expected_parent=parent,
@@ -1812,8 +1703,8 @@ def catalog_multi_table_txn(spark, sf_dir):
     version — emitted as (stored, live) column pairs that the oracle
     states once. Any torn state (summary missing the merge's month,
     detail at the wrong version) breaks the hash. Bounded driver-side
-    steps: catalog/manifest file reads + the memoized touched-months
-    collect (the fenced touched_partitions class); at 100 TB the
+    steps: catalog/manifest file reads (the batch's touched month is
+    static, and the merge checks it in the write); at 100 TB the
     writer's data work is |touched months|, the catalog entry is one
     small JSON publish, and the consistency read here stands in for
     the downstream query a warehouse would run at the entry's pinned
@@ -1833,7 +1724,7 @@ def catalog_multi_table_txn(spark, sf_dir):
     #    month-batch merge (expected_parent: one racer lands it).
     dloc = _snap_create_named(spark, sf_dir, "catd")
     if latest_version(dloc) == 0:
-        batch, touched = _snap_batch_touched(spark, sf_dir, dloc)
+        batch, touched = _snap_batch_touched(spark, sf_dir)
         merge_snapshot_commit(
             spark, dloc, batch, ["o_orderkey"], _pm_month_of, touched,
             expected_parent=0,
@@ -1854,8 +1745,7 @@ def catalog_multi_table_txn(spark, sf_dir):
         spark, sloc, s_src, "o_year", "o_month", files=4
     )
     if latest_version(sloc) == 0:
-        _b, touched = _snap_batch_touched(spark, sf_dir, dloc)
-        months = sorted(touched)
+        months = list(_PM_TOUCHED)
         tslice = read_snapshot_keyrange(
             spark, dloc, _PM_PART_COL, months[0], months[-1], version=dv
         ).filter(F.col(_PM_PART_COL).isin(months))
@@ -2131,7 +2021,7 @@ def upsert_merge_commit_only(spark, sf_dir):
     # own immutable v0, manifest-pruned to the month (the staging
     # shape: |month| derivation cost, no per-merge source rescan), and
     # its touched set is the statically-known batch month.
-    loc = _snap_create_named(spark, sf_dir, "cm", files=84)
+    loc = _snap_create_named(spark, sf_dir, "cm")
     batch = _pm_batch_from_v0(spark, sf_dir, loc)
     touched = list(_PM_TOUCHED)
     v = merge_snapshot_commit(

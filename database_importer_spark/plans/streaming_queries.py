@@ -236,21 +236,18 @@ def stream_snapshot_ingest(spark, sf_dir):
     from database_importer_spark.operators.snapshot_table import read_snapshot
     from database_importer_spark.plans.part_a import (
         _SNAP_OUT_COLS,
+        _pm_batch_df,
         _pm_month_of,
-        _snap_batch_touched,
-        _snap_create,
-        _snap_loc,
+        _snap_create_named,
     )
     from database_importer_spark.streaming.upsert import (
         streaming_snapshot_ingest,
     )
 
-    loc = _snap_loc(spark, sf_dir)
-    _snap_create(spark, sf_dir, loc)
-    batch, _touched = _snap_batch_touched(spark, sf_dir, loc)
+    loc = _snap_create_named(spark, sf_dir, "upsert")
     streaming_snapshot_ingest(
-        spark, loc, batch, ["o_orderkey"], _pm_month_of, batches=4,
-        cursor="ingest",
+        spark, loc, _pm_batch_df(spark, sf_dir), ["o_orderkey"],
+        _pm_month_of, batches=4, cursor="ingest",
     )
     return read_snapshot(spark, loc).select(*_SNAP_OUT_COLS)
 

@@ -9,9 +9,7 @@ writers produced mixed row counts / doubled checksums / vanished
 files). A real user would point each job at its own table path; the
 engine-side equivalent is per-PROCESS scratch. Dead processes'
 scratch roots are garbage-collected on first use, so repeated sweeps
-don't accumulate corpus-sized litter — the same pid-scope + dead-pid
-GC contract as the mutable merge target
-(operators/merge_partitioned.ensure_live_target).
+don't accumulate corpus-sized litter.
 """
 
 from __future__ import annotations

@@ -122,6 +122,7 @@ def streaming_snapshot_ingest(
         cursor_entry,
         latest_version,
         merge_snapshot_commit,
+        touched_partitions,
     )
     from database_importer_spark.scratch import scratch_dir
 
@@ -149,12 +150,7 @@ def streaming_snapshot_ingest(
                 return
             # the commit-protocol step: touched partitions of THIS
             # micro-batch (bounded collect, ≤ |partitions|)
-            touched = [
-                r[0]
-                for r in batch_df.select(part_of(batch_df).alias("__p"))
-                .distinct()
-                .collect()
-            ]
+            touched = touched_partitions(batch_df, part_of(batch_df))
             v = merge_snapshot_commit(
                 spark, loc, batch_df, keys, part_of, touched
             )

@@ -741,14 +741,17 @@ def test_numeric_profile_aggregate_is_pushed_to_footers(spark):
     assert "PushedAggregation: [COUNT(*)" in plan
 
 
-def test_snapshot_merge_never_shuffles_the_table(spark):
-    """upsert_merge_snapshot: the merge arms over the manifest-pruned
+@pytest.mark.parametrize(
+    "key", ["upsert_merge_snapshot", "upsert_merge_partitioned"]
+)
+def test_snapshot_merge_never_shuffles_the_table(spark, key):
+    """Both snapshot merge keys: the merge arms over the manifest-pruned
     base must be broadcast joins only — no SortMergeJoin and no hash
     exchange anywhere in the commit's write plan or the final-state
     read. (The table side is file-pruned to the touched slice; the
     batch is the broadcast side; the full-state read is a plain
     union of immutable file scans.)"""
-    plan = physical(spark, "upsert_merge_snapshot")
+    plan = physical(spark, key)
     assert "SortMergeJoin" not in plan
     assert "Exchange hashpartitioning" not in plan
 

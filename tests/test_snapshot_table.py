@@ -21,10 +21,12 @@ claims the module makes:
   retained versions need.
 """
 
+import ast
 import glob
 import os
 import sys
 import threading
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -127,6 +129,44 @@ def test_merge_of_wider_batch_keeps_version_readable(spark, tmp_path):
     assert len(got) == 21
     assert got[5] == 500 and got[15] == 1500 and got[25] == 2500
     assert got[6] == 6
+
+
+def _part_of_val(df):
+    """A partition function of a nullable batch column."""
+    return F.when(F.col("val").isNotNull(), F.floor(F.col("k") / 10)).cast("int")
+
+
+@pytest.mark.parametrize(
+    "rows,part_of,anchored",
+    [
+        ([(15, "UPD15"), (25, "UPD25")], _part_of, False),
+        ([(15, "UPD15"), (25, "UPD25")], _part_of, True),
+        ([(15, "UPD15"), (25, None)], _part_of_val, False),
+    ],
+    ids=["outside", "outside_validated_file_batch", "null_partition"],
+)
+def test_merge_raises_on_batch_row_outside_touched(
+    spark, tmp_path, rows, part_of, anchored
+):
+    """Merging key 25 with ``touched=[1]`` would miss the file holding
+    it and insert it a second time. The write raises instead, also for
+    a NULL partition value, and nothing is published: no version, no
+    commit dir. The file-anchored batch is first merged with its full
+    touched set, so its key validation is memoized and the check must
+    fire in the write job."""
+    loc = _mk_table(spark, tmp_path)
+    batch = _batch(spark, rows)
+    if anchored:
+        batch.write.parquet(str(tmp_path / "batch"))
+        batch = spark.read.parquet(str(tmp_path / "batch"))
+        st.merge_snapshot_commit(spark, loc, batch, ["k"], part_of, [1, 2])
+    head = st.latest_version(loc)
+    dirs = sorted(os.listdir(os.path.join(loc, "data")))
+    with pytest.raises(Exception, match="outside the touched set"):
+        st.merge_snapshot_commit(spark, loc, batch, ["k"], part_of, [1])
+    assert st.latest_version(loc) == head
+    assert sorted(os.listdir(os.path.join(loc, "data"))) == dirs
+    assert _state(spark, loc)[15][0] == ("UPD15" if anchored else "v15")
 
 
 def test_time_travel_after_commits(spark, tmp_path):
@@ -397,6 +437,89 @@ def test_publish_guard_flags_seeded_second_link():
     assert got[1] == "operators/x.py: max_attempts"
 
 
+def _distinct_collect_sites(src: str) -> list:
+    """The enclosing function name of every ``.distinct().collect()``."""
+    out = []
+
+    def visit(node, func):
+        if isinstance(node, ast.FunctionDef):
+            func = node.name
+        f = getattr(node, "func", None)
+        if (
+            isinstance(f, ast.Attribute)
+            and f.attr == "collect"
+            and isinstance(getattr(f.value, "func", None), ast.Attribute)
+            and f.value.func.attr == "distinct"
+        ):
+            out.append(func)
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(ast.parse(src), None)
+    return out
+
+
+def _imports_merge_partitioned(src: str) -> bool:
+    names = []
+    for n in ast.walk(ast.parse(src)):
+        if isinstance(n, ast.ImportFrom):
+            names.append(n.module or "")
+        if isinstance(n, (ast.Import, ast.ImportFrom)):
+            names += [a.name for a in n.names]
+    return any(x.split(".")[-1] == "merge_partitioned" for x in names)
+
+
+def _cow_table_violations(sources: dict[str, str]) -> list[str]:
+    """One copy-on-write table protocol: no dynamic-overwrite merge
+    module, no import of it, partitionOverwriteMode only in the
+    standalone sink demo, no process-scoped live tables, and one
+    touched-set collect (``touched_partitions``)."""
+    out = []
+    for rel, src in sorted(sources.items()):
+        if os.path.basename(rel) == "merge_partitioned.py":
+            out.append(f"{rel}: merge_partitioned module")
+        if _imports_merge_partitioned(src):
+            out.append(f"{rel}: imports merge_partitioned")
+        if "partitionOverwriteMode" in src and rel != "plans/relational.py":
+            out.append(f"{rel}: partitionOverwriteMode")
+        if "dbis_live_" in src:
+            out.append(f"{rel}: dbis_live_")
+        out += [
+            f"{rel}: distinct().collect() in {func}"
+            for func in _distinct_collect_sites(src)
+            if (rel, func) != ("operators/snapshot_table.py", "touched_partitions")
+        ]
+    return out
+
+
+def test_one_copy_on_write_table_protocol():
+    assert _cow_table_violations(_package_sources()) == []
+
+
+def test_cow_guard_flags_seeded_dynamic_overwrite_merge():
+    seeded = {
+        **_package_sources(),
+        "operators/merge_partitioned.py": (
+            "def commit(spark, out, loc):\n"
+            "    spark.conf.set('spark.sql.sources.partitionOverwriteMode',"
+            " 'dynamic')\n"
+            "    out.write.mode('overwrite').parquet(loc + '/dbis_live_t')\n"
+            "def touched(batch, part):\n"
+            "    return [r[0] for r in batch.select(part).distinct().collect()]\n"
+        ),
+        "plans/x.py": (
+            "from database_importer_spark.operators import merge_partitioned\n"
+        ),
+    }
+    assert _cow_table_violations(seeded) == [
+        "operators/merge_partitioned.py: merge_partitioned module",
+        "operators/merge_partitioned.py: partitionOverwriteMode",
+        "operators/merge_partitioned.py: dbis_live_",
+        "operators/merge_partitioned.py: distinct().collect() in touched",
+        "plans/x.py: imports merge_partitioned",
+    ]
+
+
 def test_manifest_pruning_hands_engine_fewer_files(spark, tmp_path):
     loc = _mk_table(spark, tmp_path, n=400)  # months 0..39 over 4 files
     _m, all_files = st.snapshot_files(loc, 0)
@@ -442,13 +565,79 @@ def test_declared_prune_read_is_file_pruned(spark):
     assert 0 < len(pruned_df.inputFiles()) < len(all_files)
 
 
-def test_declared_merge_converges(spark):
+@pytest.mark.parametrize(
+    "key", ["upsert_merge_snapshot", "upsert_merge_partitioned"]
+)
+def test_declared_merge_converges(spark, key):
     """Idempotent convergence: two fresh commits of the same batch
     produce identical full states (and bump the version each time)."""
-    key = REGISTRY["upsert_merge_snapshot"].fn
-    a = {r["o_orderkey"]: r for r in key(spark, SF).collect()}
-    b = {r["o_orderkey"]: r for r in key(spark, SF).collect()}
+    fn = REGISTRY[key].fn
+    a = {r["o_orderkey"]: r for r in fn(spark, SF).collect()}
+    b = {r["o_orderkey"]: r for r in fn(spark, SF).collect()}
     assert a == b
+
+
+def _month_prewrite(spark):
+    """upsert_merge_partitioned's table and its pre-write frame:
+    (loc, frame, head manifest, candidate entries)."""
+    from database_importer_spark.plans.part_a import (
+        _pm_month_of,
+        _snap_batch_touched,
+        _snap_create_named,
+    )
+
+    loc = _snap_create_named(spark, SF, "pm")
+    batch, touched = _snap_batch_touched(spark, SF)
+    return (loc,) + st.merge_snapshot_prewrite(
+        spark, loc, batch, ["o_orderkey"], _pm_month_of, touched
+    )
+
+
+def test_month_merge_scans_only_candidate_files(spark):
+    """The month merge's write reads exactly its candidate files: each
+    one's [min, max] holds the batch month, and they are fewer than
+    the table's files (the rest are never listed or read). Its plan
+    has no shuffle."""
+    loc, out, m, candidates = _month_prewrite(spark)
+    assert 0 < len(candidates) < len(m["files"])
+    assert all(e["min"] <= 199703 <= e["max"] for e in candidates)
+    root = os.path.realpath(loc) + os.sep
+    scanned = {
+        os.path.relpath(p, root)
+        for p in (os.path.realpath(urlparse(f).path) for f in out.inputFiles())
+        if p.startswith(root)
+    }
+    assert scanned == {e["path"] for e in candidates}
+    # the batch broadcasts; the table side never shuffles
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan
+    assert "Exchange hashpartitioning" not in plan
+
+
+def test_month_merge_never_rewrites_untouched_files(spark):
+    """After a second invocation, every non-candidate file of v_n is in
+    v_{n+1} under the same entry with the same bytes on disk, and
+    every candidate is replaced."""
+    key = REGISTRY["upsert_merge_partitioned"].fn
+    key(spark, SF).collect()
+    loc, _out, m, candidates = _month_prewrite(spark)
+
+    def on_disk(e):
+        info = os.stat(os.path.join(loc, e["path"]))
+        return info.st_size, info.st_mtime_ns
+
+    before = {e["path"]: on_disk(e) for e in m["files"]}
+    key(spark, SF).collect()
+    nxt = st.load_manifest(loc, m["version"] + 1)
+    assert nxt["parent"] == m["version"] and nxt["commit"]["op"] == "merge"
+    after = {e["path"]: e for e in nxt["files"]}
+    cand = {e["path"] for e in candidates}
+    for e in m["files"]:
+        if e["path"] in cand:
+            assert e["path"] not in after, "candidate file carried"
+        else:
+            assert after.get(e["path"]) == e, "untouched file rewritten"
+            assert on_disk(e) == before[e["path"]]
 
 
 def test_compact_preserves_content_and_reduces_files(spark, tmp_path):

@@ -55,7 +55,7 @@ ANNOTATED = {
     "scd2_versioned_merge": "SCD2 merge (r6 hardening): three explicit broadcast joins (left_outer close/carry + semi-probe of the same broadcast frame + anti for brand-new keys) — the dimension NEVER shuffles; a full-outer broadcast hint could never bind.",
     "profile_numeric_stats_pushdown": "Footer-stats profiler (r7): the whole MIN/MAX/COUNT aggregate pushed into the V2 parquet scan (PushedAggregation) — answered from row-group footer statistics, zero data pages decoded.",
     "agg_count_distinct_bucketed": "Distinct over the custkey-bucketed layout (r8): hashpartitioning(custkey) satisfies the inner GROUP BY (priority, custkey) outright — the pair collapse runs IN PLACE off the scan; the only exchange carries 5 priority groups.",
-    "upsert_merge_partitioned": "Partition-scoped copy-on-write MERGE (r8), PRE-WRITE frame: the live table enters through a directory-scoped read of ONLY the touched month (untouched partitions never listed), the batch broadcasts through the standard two-arm merge, and the dynamic-partition-overwrite commit rewrites exactly the touched directories.",
+    "upsert_merge_partitioned": "Month-granular snapshot-table MERGE, COMMIT frame: the same commit as upsert_merge_snapshot on a files=84 table (about one month per file), so the manifest-pruned scan reads only the file(s) holding the touched month; the batch broadcasts through the two-arm merge, its first non-key column wrapped in the touched-set check (a raise_error projection).",
     "upsert_merge_snapshot": "Snapshot-table MERGE (r8), COMMIT frame: the base enters through a MANIFEST-pruned explicit file list (only files whose stats range overlaps the touched months — pruned driver-side before the engine lists anything), the batch broadcasts through the two-arm merge, and the commit is an atomic manifest link; no SortMergeJoin, no hash exchange anywhere.",
     "table_snapshot_prune_read": "Manifest file pruning (r8): the scan's file list is resolved driver-side from the snapshot manifest's per-file partition min/max — the engine receives 1-2 files of the month, not the table; the residual exact filter trims range-boundary files.",
     "table_delete_mor": "Merge-on-read equality delete (r8): the final-state read applies the delete file as a BROADCAST left-anti join on the key — the 15M-row data side never shuffles; files newer than every delete (seq) scan with no anti-join at all.",
@@ -85,38 +85,31 @@ def main() -> None:
         "These shapes are frozen as assertions in `tests/test_plans.py`.",
         "",
     ]
-    # upsert_merge_partitioned's declared fn WRITES then returns the
-    # audit readback; the plan worth freezing is the pre-write merged
-    # frame (partition-scoped scan + broadcast arms).
-    def _pm_prewrite(spark, sf_dir):
-        from database_importer_spark.plans.part_a import _pm_parts
-
-        return _pm_parts(spark, sf_dir)[2]
-
-    # upsert_merge_snapshot likewise commits then returns the full
-    # readback; freeze the pre-write commit frame (manifest-pruned
-    # file-list scan + broadcast arms).
-    def _snap_prewrite(spark, sf_dir):
+    # upsert_merge_snapshot and upsert_merge_partitioned commit, then
+    # return the full readback; freeze each one's pre-write commit
+    # frame (manifest-pruned file-list scan + broadcast arms).
+    def _snap_prewrite(name):
         from database_importer_spark.operators.snapshot_table import (
             merge_snapshot_prewrite,
         )
         from database_importer_spark.plans.part_a import (
             _pm_month_of,
             _snap_batch_touched,
-            _snap_create,
-            _snap_loc,
+            _snap_create_named,
         )
 
-        loc = _snap_loc(spark, sf_dir)
-        _snap_create(spark, sf_dir, loc)
-        batch, touched = _snap_batch_touched(spark, sf_dir, loc)
-        return merge_snapshot_prewrite(
-            spark, loc, batch, ["o_orderkey"], _pm_month_of, touched
-        )[0]
+        def prewrite(spark, sf_dir):
+            loc = _snap_create_named(spark, sf_dir, name)
+            batch, touched = _snap_batch_touched(spark, sf_dir)
+            return merge_snapshot_prewrite(
+                spark, loc, batch, ["o_orderkey"], _pm_month_of, touched
+            )[0]
+
+        return prewrite
 
     special = {
-        "upsert_merge_partitioned": _pm_prewrite,
-        "upsert_merge_snapshot": _snap_prewrite,
+        "upsert_merge_partitioned": _snap_prewrite("pm"),
+        "upsert_merge_snapshot": _snap_prewrite("upsert"),
     }
     for key, note in ANNOTATED.items():
         df = special.get(key, REGISTRY[key].fn)(spark, SF)

@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from database_importer_spark.cache import fingerprint, memo
-from database_importer_spark.operators.merge import Merger, _insert_arm
+from database_importer_spark.operators.merge import Merger, _as, _insert_arm, _q
 from database_importer_spark.operators.partitioning import _layout_lock
 
 _FORMAT = "dbis-snapshot/1"
@@ -275,6 +275,25 @@ def _applied_tags(m: dict) -> list[str]:
     return m.get("tags", [])
 
 
+def _scan(spark: SparkSession, schema: T.StructType, paths: list[str]) -> DataFrame:
+    """A scan of the manifest-named parquet ``paths`` under ``schema``.
+
+    The manifest already names every file, so nothing needs listing.
+    Spark lists a path list longer than its parallel-discovery
+    threshold again, with a Spark job, while the plan is built (on a
+    4-core host a 40-file read planned in 0.34-0.42 s with 1 job,
+    against 0.05-0.06 s with none). The paths are therefore planned in
+    chunks of at most that threshold, as a union of scans."""
+    n = int(
+        spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+    )
+    reader = spark.read.schema(schema)
+    return functools.reduce(
+        DataFrame.unionAll,
+        [reader.parquet(*paths[i : i + n]) for i in range(0, len(paths), n)],
+    )
+
+
 def _read_with_deletes(
     spark: SparkSession,
     loc: str,
@@ -295,8 +314,8 @@ def _read_with_deletes(
     if not entries:
         return spark.createDataFrame([], schema)
     if not deletes:
-        return spark.read.schema(schema).parquet(
-            *[os.path.join(loc, e["path"]) for e in entries]
+        return _scan(
+            spark, schema, [os.path.join(loc, e["path"]) for e in entries]
         )
     key = deletes[0]["key"]
     if any(d["key"] != key for d in deletes):
@@ -314,13 +333,11 @@ def _read_with_deletes(
         classes.setdefault(appl, []).append(os.path.join(loc, e["path"]))
     parts = []
     for appl, paths in sorted(classes.items()):
-        df = spark.read.schema(schema).parquet(*paths)
+        df = _scan(spark, schema, paths)
         if appl:
-            ddf = (
-                spark.read.schema(del_schema)
-                .parquet(*[os.path.join(loc, p) for p in appl])
-                .distinct()
-            )
+            ddf = _scan(
+                spark, del_schema, [os.path.join(loc, p) for p in appl]
+            ).distinct()
             df = df.join(F.broadcast(ddf), on=key, how="left_anti")
         parts.append(df)
     return functools.reduce(DataFrame.unionAll, parts)
@@ -431,7 +448,8 @@ def _merge_cdf_frame(
     batch rows emit as inserts through Merger's own insert arm (two
     broadcast joins, the table side never shuffles)."""
     data_cols = [c for c in schema.names if c != part_col]
-    subset = [c for c in batch.columns if c not in join_on]
+    src = batch.schema
+    subset = [c for c in src.names if c not in join_on]
     keyed = batch.na.drop(subset=join_on)
     b = F.broadcast(keyed)
     joined = base.alias("a").join(b.alias("b"), on=join_on, how="inner")
@@ -439,37 +457,29 @@ def _merge_cdf_frame(
     # names) can derive the POST partition value from post columns;
     # post values cast to the table schema's types (no-op when equal)
     # so the change files read back under the manifest schema exactly
-    post_cols = []
-    for c in data_cols:
-        side = "b" if c in subset else "a"
-        post_cols.append(
-            F.col(f"{side}.{c}").cast(schema[c].dataType).alias(c)
-        )
-    flat = joined.select(
-        *[F.col(f"a.{c}").alias(f"_pre_{c}") for c in data_cols],
-        F.col(f"a.{part_col}").alias(f"_pre_{part_col}"),
-        *post_cols,
+    out_cols = (*data_cols, part_col)
+    pre = {c: _q(f"_pre_{c}") for c in out_cols}
+    flat = joined.selectExpr(
+        *[f"a.{_q(c)} AS {q}" for c, q in pre.items()],
+        *[
+            _as(f"b.{_q(c)}", c, src[c].dataType, schema[c].dataType)
+            if c in subset
+            else f"a.{_q(c)}"
+            for c in data_cols
+        ],
     )
     flat = flat.withColumn("_post_part", part_of(flat))
-    changed = functools.reduce(
-        lambda acc, c: acc
-        | ~F.col(f"_pre_{c}").eqNullSafe(F.col(c)),
-        subset,
-        F.lit(False),
-    )
-    pre_s = F.struct(
-        F.lit("update_preimage").alias("_change_type"),
-        *[F.col(f"_pre_{c}").alias(c) for c in data_cols],
-        F.col(f"_pre_{part_col}").alias(part_col),
-    )
-    post_s = F.struct(
-        F.lit("update_postimage").alias("_change_type"),
-        *[F.col(c).alias(c) for c in data_cols],
-        F.col("_post_part").alias(part_col),
-    )
+    changed = " OR ".join(f"NOT ({pre[c]} <=> {_q(c)})" for c in subset)
+
+    def image(kind: str, exprs: list[str]) -> str:
+        named = ", ".join(f"{e} AS {_q(c)}" for e, c in zip(exprs, out_cols))
+        return f"struct('{kind}' AS _change_type, {named})"
+
+    pre_s = image("update_preimage", [pre[c] for c in out_cols])
+    post_s = image("update_postimage", [*map(_q, data_cols), "_post_part"])
     upd = (
-        flat.filter(changed)
-        .select(F.explode(F.array(pre_s, post_s)).alias("r"))
+        flat.filter(changed or "false")
+        .selectExpr(f"explode(array({pre_s}, {post_s})) AS r")
         .select("r.*")
     )
     # insert rows: Merger's insert arm, semi-probing the base keys
@@ -477,8 +487,8 @@ def _merge_cdf_frame(
     ins_flat = _insert_arm(
         base, keyed, join_on, T.StructType([schema[c] for c in data_cols]), b
     )
-    ins = ins_flat.withColumn(part_col, part_of(ins_flat)).select(
-        F.lit("insert").alias("_change_type"), *data_cols, part_col
+    ins = ins_flat.withColumn(part_col, part_of(ins_flat)).selectExpr(
+        "'insert' AS _change_type", *map(_q, out_cols)
     )
     return upd.unionByName(ins)
 
@@ -694,7 +704,7 @@ def read_snapshot(
         rel = {os.path.relpath(p, loc) for p in paths}
         entries = [e for e in m["files"] if e["path"] in rel]
         return _read_with_deletes(spark, loc, schema, entries, deletes)
-    return spark.read.schema(schema).parquet(*paths)
+    return _scan(spark, schema, paths)
 
 
 def touched_partitions(batch: DataFrame, part_expr) -> list:
@@ -1036,9 +1046,7 @@ def read_incremental(
     entries = incremental_entries(loc, from_version, to_version)
     if not entries:
         return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(
-        *[os.path.join(loc, e["path"]) for e in entries]
-    )
+    return _scan(spark, schema, [os.path.join(loc, e["path"]) for e in entries])
 
 
 def read_changes(
@@ -1161,8 +1169,8 @@ def read_changes(
             [T.StructField(_CHANGE_TYPE_COL, T.StringType())]
             + list(schema.fields)
         )
-        ch = spark.read.schema(ch_schema).parquet(
-            *[os.path.join(loc, e["path"]) for e in entries]
+        ch = _scan(
+            spark, ch_schema, [os.path.join(loc, e["path"]) for e in entries]
         )
         return ch.select(
             _CHANGE_TYPE_COL,
@@ -1176,8 +1184,8 @@ def read_changes(
             + list(schema.fields)
             + [T.StructField("_commit_version", T.IntegerType())]
         )
-        ch = spark.read.schema(cch).parquet(
-            *[os.path.join(loc, e["path"]) for e in entry["files"]]
+        ch = _scan(
+            spark, cch, [os.path.join(loc, e["path"]) for e in entry["files"]]
         )
         # version filter reaches the scan: files are range-clustered
         # and sorted on _commit_version, so subrange reads prune row
@@ -1643,8 +1651,7 @@ def compact_changes_commit(
         )
         out_dir = _commit_dir(loc, version, "cc")
         frames = [
-            spark.read.schema(ch_schema)
-            .parquet(*[os.path.join(loc, e["path"]) for e in entries])
+            _scan(spark, ch_schema, [os.path.join(loc, e["path"]) for e in entries])
             .withColumn("_commit_version", F.lit(v).cast("int"))
             for v, entries in covered
         ]

@@ -409,6 +409,170 @@ def test_validate_anchor_covers_checkpointed_source(spark, tmp_path):
     assert len(memo) == 1  # the failure was not recorded
 
 
+NAN = float("nan")
+
+# (id, DDL schema of the source, rows, key columns, duplicate under groupBy)
+KEY_CASES = [
+    ("two_nans", "k double, v int", [(NAN, 1), (NAN, 2)], ["k"], True),
+    ("nan_and_number", "k double, v int", [(NAN, 1), (1.0, 2)], ["k"], False),
+    ("zero_negzero", "k double, v int", [(0.0, 1), (-0.0, 2)], ["k"], True),
+    ("float_nans", "k float, v int", [(NAN, 1), (NAN, 2)], ["k"], True),
+    ("null_keys_ignored", "k double, v int", [(None, 1), (None, 2), (1.0, 3)], ["k"], False),
+    ("array_equal", "k array<int>, v int", [([1, 2], 1), ([1, 2], 2)], ["k"], True),
+    ("array_order", "k array<int>, v int", [([1, 2], 1), ([2, 1], 2)], ["k"], False),
+    ("array_null_elem", "k array<int>, v int", [([1, None], 1), ([1, None], 2)], ["k"], True),
+    ("array_nan_elem", "k array<double>, v int", [([NAN], 1), ([NAN], 2)], ["k"], True),
+    ("struct_equal", "k struct<a:int,b:string>, v int", [((1, "x"), 1), ((1, "x"), 2)], ["k"], True),
+    ("struct_differs", "k struct<a:int,b:string>, v int", [((1, "x"), 1), ((1, "y"), 2)], ["k"], False),
+    ("struct_nan_negzero", "k struct<a:double,b:double>, v int", [((NAN, 0.0), 1), ((NAN, -0.0), 2)], ["k"], True),
+    ("struct_null_field", "k struct<a:int,b:string>, v int", [((1, None), 1), ((1, None), 2)], ["k"], True),
+    ("composite_differs", "k1 int, k2 string, v int", [(1, "a", 1), (1, "b", 2)], ["k1", "k2"], False),
+    ("composite_equal", "k1 int, k2 string, v int", [(1, "a", 1), (1, "a", 2)], ["k1", "k2"], True),
+    ("composite_nan", "k1 double, k2 int, v int", [(NAN, 1, 1), (NAN, 1, 2)], ["k1", "k2"], True),
+    ("composite_partial_null", "k1 int, k2 string, v int", [(1, None, 1), (1, None, 2)], ["k1", "k2"], False),
+]
+
+
+def _naive_check(keys) -> bool:
+    """Python equality over the collected keys — the seeded negative."""
+    rows = [tuple(r) for r in keys.collect()]
+    return any(a == b for i, a in enumerate(rows) for b in rows[i + 1 :])
+
+
+def _key_check_disagreements(spark, check) -> list[str]:
+    """Case ids on which ``check`` and Spark's groupBy aggregate give
+    different verdicts over a case's non-NULL keys (Merger drops a
+    NULL-key row before its check); each case's groupBy verdict is
+    also pinned."""
+    out = []
+    for name, schema, rows, keys, want in KEY_CASES:
+        src = spark.createDataFrame(rows, schema)
+        frame = src.select(*keys).where(
+            " AND ".join(f"{k} IS NOT NULL" for k in keys)
+        )
+        agg = frame.groupBy(*keys).count().filter("count > 1").count() > 0
+        assert agg == want, name
+        if check(frame) != agg:
+            out.append(name)
+    return out
+
+
+def test_driver_key_check_agrees_with_groupby(spark):
+    """The broadcast key check runs on the driver and must put two
+    keys together exactly when Spark's groupBy does: NaN with NaN,
+    0.0 with -0.0, nested too; NULL-key rows never count; array,
+    struct and composite keys work. Every case takes the driver path.
+    Through Merger, which also drops a row with a NULL or NaN key (the
+    reference's ``dropna``), the verdict is groupBy's over that slice."""
+    from database_importer_spark.operators.merge import _duplicate_keys
+
+    assert _key_check_disagreements(spark, _duplicate_keys) == []
+    for name, schema, rows, keys, _ in KEY_CASES:
+        src = spark.createDataFrame(rows, schema)
+        m = Merger(src, src, join_on=keys)
+        sliced = m.data.groupBy(*keys).count().filter("count > 1").count() > 0
+        try:
+            m.validate_unique_keys()
+            raised = False
+        except MergerError:
+            raised = True
+        assert raised == sliced, name
+
+
+def test_key_check_semantics_flags_seeded_naive_check(spark):
+    """Seeded negative control: plain Python equality misses every
+    NaN case, and the semantics test must say so."""
+    assert _key_check_disagreements(spark, _naive_check) == [
+        "two_nans",
+        "float_nans",
+        "array_nan_elem",
+        "struct_nan_negzero",
+        "composite_nan",
+    ]
+
+
+def test_broadcast_key_check_of_in_memory_batch_runs_no_job(spark, groceries):
+    """An in-memory (pandas, so LocalRelation) broadcast source has its
+    keys checked on the driver with no Spark job, a duplicate included;
+    the aggregate it replaces ran 3 jobs."""
+    import pandas as pd
+
+    cols = ["id", "item", "quantity", "price"]
+    st = spark.sparkContext.statusTracker()
+    for rows, dup in ((SEED, False), (SEED + SEED[:1], True)):
+        src = spark.createDataFrame(pd.DataFrame(rows, columns=cols), SCHEMA)
+        m = Merger(groceries, src, join_on=["id"])
+        before = set(st.getJobIdsForGroup())
+        if dup:
+            with pytest.raises(MergerError, match="duplicate values"):
+                m.validate_unique_keys()
+        else:
+            m.validate_unique_keys()
+        assert set(st.getJobIdsForGroup()) == before, dup
+
+
+def test_sql_projections_keep_target_schema(spark):
+    """The arms' SQL projections quote every name and render every cast
+    type: each merged() shape, and the cdf change rows, keep the
+    target's schema for names with a space, a dot and a backtick, a
+    struct field named with a space, decimal(12,2), timestamp_ntz and
+    array<struct>, from a source whose types all differ."""
+    import datetime as dt
+    from decimal import Decimal
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from database_importer_spark.operators.snapshot_table import _merge_cdf_frame
+
+    target = spark.createDataFrame(
+        [
+            (1, Decimal("1.50"), "x", (10,), dt.datetime(2024, 1, 1), [(1, "a")], 1),
+            (2, Decimal("2.50"), "y", (20,), dt.datetime(2024, 1, 2), [], 2),
+        ],
+        "`the key` int, `v.x` decimal(12,2), `b``t` string, "
+        "s struct<`a b`: int>, ts timestamp_ntz, "
+        "arr array<struct<x: int, y: string>>, m int",
+    )
+    src = spark.createDataFrame(
+        [
+            (1, 9.25, "X", (11,), dt.datetime(2025, 1, 1), [(7, "q")]),
+            (3, 3.75, "Z", (33,), dt.datetime(2025, 1, 3), None),
+        ],
+        "`the key` bigint, `v.x` double, `b``t` string, "
+        "s struct<`a b`: bigint>, ts timestamp_ntz, "
+        "arr array<struct<x: bigint, y: string>>",
+    )
+    for broadcast in (True, False):
+        m = Merger(target, src, join_on=["the key"], broadcast=broadcast)
+        shapes = {
+            "update": m.merged(update=True),
+            "update+insert": m.merged(update=True, insert=True),
+            "insert": m.merged(update=False, insert=True),
+            "delta": m.merged_delta(),
+            "delta_update": m.merged_delta(insert=False),
+        }
+        for name, df in shapes.items():
+            assert df.schema == target.schema, (broadcast, name, df.schema)
+        got = {r["the key"]: r for r in shapes["update+insert"].collect()}
+        assert got[1]["v.x"] == Decimal("9.25") and got[1]["b`t"] == "X"
+        assert got[1]["s"]["a b"] == 11 and got[1]["arr"][0]["x"] == 7
+        assert got[2]["v.x"] == Decimal("2.50") and got[3]["m"] is None
+    cdf = _merge_cdf_frame(
+        target,
+        src,
+        ["the key"],
+        "m",
+        lambda df: (F.col("`the key`") % 10).cast("int"),
+        target.schema,
+    )
+    assert T.StructType(cdf.schema.fields[1:]) == target.schema, cdf.schema
+    kinds = sorted((r["_change_type"], r["the key"]) for r in cdf.collect())
+    assert kinds == [
+        ("insert", 3), ("update_postimage", 1), ("update_preimage", 1)
+    ]
+
+
 def test_inserted_rowcount(spark, groceries):
     """Reference parity for ``row_count_inserted`` (importer.py:138):
     the reference initializes it to -1 and can never set it (its

@@ -169,6 +169,76 @@ def test_merge_raises_on_batch_row_outside_touched(
     assert _state(spark, loc)[15][0] == ("UPD15" if anchored else "v15")
 
 
+def _jobs_during(spark, fn):
+    """(result, Spark jobs launched while ``fn`` ran)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    out = fn()
+    return out, len(set(tracker.getJobIdsForGroup()) - before)
+
+
+def _pandas_batch(spark, rows):
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["k", "val"]), "k int, val string"
+    )
+
+
+def test_warm_in_memory_merge_commit_job_budget(spark, tmp_path):
+    """A warm merge commit of an in-memory batch checks its keys on the
+    driver: the commit runs the write's jobs only (6 here, at most 7
+    allowed; with the key-check aggregate it ran 9)."""
+    loc = _mk_table(spark, tmp_path)
+    for i, rows in enumerate(([(5, "a"), (15, "b")], [(6, "c"), (16, "d"), (105, "e")])):
+        v, jobs = _jobs_during(
+            spark,
+            lambda: st.merge_snapshot_commit(
+                spark, loc, _pandas_batch(spark, rows), ["k"], _part_of, [0, 1, 10]
+            ),
+        )
+        assert v == i + 1
+    assert jobs <= 7, jobs
+    got = _state(spark, loc)
+    assert got[16] == ("d", 1) and got[105] == ("e", 10) and len(got) == 41
+
+
+def test_duplicate_keyed_in_memory_batch_publishes_nothing(spark, tmp_path):
+    """The driver-side key check still fails the commit on a duplicate
+    key, before anything is written: no version, no commit dir."""
+    from database_importer_spark.operators.merge import MergerError
+
+    loc = _mk_table(spark, tmp_path)
+    head = st.latest_version(loc)
+    dirs = sorted(os.listdir(os.path.join(loc, "data")))
+    batch = _pandas_batch(spark, [(15, "a"), (15, "b"), (25, "c")])
+    with pytest.raises(MergerError, match="duplicate values"):
+        st.merge_snapshot_commit(spark, loc, batch, ["k"], _part_of, [1, 2])
+    assert st.latest_version(loc) == head
+    assert sorted(os.listdir(os.path.join(loc, "data"))) == dirs
+
+
+def test_read_of_many_files_plans_without_listing_job(spark, tmp_path):
+    """A read over more files than Spark's parallel-discovery threshold
+    (32) plans with no Spark job: the manifest already names the files,
+    so they are not listed again. The plan then reads every row."""
+    loc = str(tmp_path / "tbl40")
+
+    def src():
+        return spark.range(400).select(
+            F.col("id").cast("int").alias("k"),
+            (F.col("id") % 40).cast("int").alias("m"),
+        )
+
+    st.create_snapshot_table(spark, loc, src, "m", "k", files=40)
+    assert len(st.load_manifest(loc, 0)["files"]) == 40
+    st.read_snapshot(spark, loc)  # first plan of the session pays warm-up
+    df, jobs = _jobs_during(spark, lambda: st.read_snapshot(spark, loc))
+    assert jobs == 0
+    assert len(df.inputFiles()) == 40
+    assert sorted(r["k"] for r in df.collect()) == list(range(400))
+
+
 def test_time_travel_after_commits(spark, tmp_path):
     loc = _mk_table(spark, tmp_path)
     st.merge_snapshot_commit(

@@ -22,8 +22,16 @@ Scale design at 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from database_importer_spark.operators.similarity import (
+    block_and_verify,
+    cosine,
+    hyperplane_buckets,
+    random_hyperplanes,
+    with_norm,
+)
 
 
 def content_key(df: DataFrame, text_col: str) -> DataFrame:
@@ -168,45 +176,24 @@ def minhash_signatures_portable(
     return df.select(F.col(id_col), sig.alias("minhash_sig"))
 
 
-def lsh_banded_rows(
-    sigs: DataFrame, id_col: str, bands: int, rows_per_band: int
-) -> DataFrame:
-    """(id, band_id, band_key) rows of a signature frame — the LSH
-    band INDEX representation: one fixed-width 60-bit md5 digest per
-    band slice (see lsh_candidate_pairs_portable for the portability
-    argument). This is the frame a steady-state dedup service
-    PERSISTS for its corpus: ~bands × |distinct docs| fixed-width
-    rows, maintained incrementally as batches are admitted."""
-    return sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.conv(
-                            F.md5(
-                                F.concat_ws(
-                                    "_",
-                                    *[
-                                        F.element_at(
-                                            "minhash_sig", b * rows_per_band + r + 1
-                                        )
-                                        for r in range(rows_per_band)
-                                    ],
-                                )
-                            ).substr(1, 15),
-                            16,
-                            10,
-                        )
-                        .cast("bigint")
-                        .alias("band_key"),
-                    )
-                    for b in range(bands)
-                ]
+def lsh_band_keys(bands: int, rows_per_band: int) -> list[Column]:
+    """One block key per LSH band of the ``minhash_sig`` column: a
+    fixed-width 60-bit md5 digest of the band's '_'-joined slice (see
+    lsh_candidate_pairs_portable for the portability argument).
+    Stacked by `block_and_verify`, these are the band INDEX a
+    steady-state dedup service persists for its corpus: ~bands ×
+    |distinct docs| fixed-width (band, key, id) rows, maintained
+    incrementally as batches are admitted."""
+    return [
+        F.expr(
+            "cast(conv(substr(md5(concat_ws('_', %s)), 1, 15), 16, 10) as bigint)"
+            % ", ".join(
+                f"element_at(minhash_sig, {b * rows_per_band + r + 1})"
+                for r in range(rows_per_band)
             )
-        ).alias("band"),
-    ).select(id_col, "band.band_id", "band.band_key")
+        )
+        for b in range(bands)
+    ]
 
 
 def lsh_candidate_pairs_cross(
@@ -221,18 +208,14 @@ def lsh_candidate_pairs_cross(
     batch) against ids from ``sigs_b`` (the indexed corpus) that share
     any band bucket — the incremental-dedup probe. Work is
     |batch banded rows| joined against the corpus index on fixed
-    8-byte (band_id, band_key); the corpus NEVER self-joins. Caller
+    8-byte (band, key); the corpus NEVER self-joins. Caller
     guarantees the two id domains are disjoint."""
-    a = lsh_banded_rows(sigs_a, id_a, bands, rows_per_band).alias("a")
-    b = lsh_banded_rows(sigs_b, id_b, bands, rows_per_band).alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key")),
-        )
-        .select(F.col(f"a.{id_a}").alias(id_a), F.col(f"b.{id_b}").alias(id_b))
-        .distinct()
+    return block_and_verify(
+        sigs_a.select(id_a, "minhash_sig"),
+        id_a,
+        lsh_band_keys(bands, rows_per_band),
+        right=sigs_b.select(id_b, "minhash_sig"),
+        right_id=id_b,
     )
 
 
@@ -244,7 +227,7 @@ def lsh_candidate_pairs_portable(
     engine-specific hash) is collapsed map-side to
     ``conv(substr(md5(s),1,15),16,10)`` — the same portable md5
     trick as the signature's base hash — so the exchange and the
-    self-join carry (band_id, band_key BIGINT, id) instead of an
+    self-join carry (band, key BIGINT, id) instead of an
     arbitrary-length string: fixed 8-byte keys on the wire and in
     the join hash table at any corpus size. DuckDB computes the
     IDENTICAL digest from the identical string
@@ -252,20 +235,10 @@ def lsh_candidate_pairs_portable(
     — including any 2^-60 digest collision — is the same on both
     engines, and the downstream exact-Jaccard verify filters
     spurious candidates anyway: the oracle stays exact."""
-    banded = lsh_banded_rows(sigs, id_col, bands, rows_per_band)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
+    return block_and_verify(
+        sigs.select(id_col, "minhash_sig"),
+        id_col,
+        lsh_band_keys(bands, rows_per_band),
     )
 
 
@@ -368,29 +341,24 @@ def simhash_portable(
     are exact-oracle checkable. One explode + one nbits-sum
     aggregation, all JVM-side; output is a 64-bit long whose top
     64-nbits bits are zero (band blocking over 64 bits remains
-    pigeonhole-complete)."""
+    pigeonhole-complete).
+
+    The vote sums and the OR of the fingerprint bits are SQL strings,
+    one parse each: as Column trees they cost ~1.3 s of py4j to build.
+    (Measured negatives: the votes as one HOF per row over the token
+    hashes, 120 s, and all sums as one ``array(sum …)`` aggregate,
+    1.7 s against 0.9 s.)"""
     toks = df.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).withColumn(
-        "h", F.expr("cast(conv(substr(md5(tok), 1, 15), 16, 10) as bigint)")
-    )
+    ).selectExpr(id_col, "cast(conv(substr(md5(tok), 1, 15), 16, 10) as bigint) AS h")
     votes = toks.groupBy(id_col).agg(
         *[
-            F.sum(
-                F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1)
-                .otherwise(-1)
-            ).alias(f"b{b}")
+            F.expr(f"sum(CASE WHEN shiftright(h, {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}")
             for b in range(nbits)
         ]
     )
-    fp = None
-    for b in range(nbits):
-        bit = F.when(F.col(f"b{b}") > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        term = F.shiftleft(bit, b)
-        fp = term if fp is None else fp.bitwiseXOR(term)
-    return votes.select(F.col(id_col), fp.alias("simhash64"))
+    fp = " | ".join(f"IF(b{b} > 0, {1 << b}L, 0L)" for b in range(nbits))
+    return votes.selectExpr(id_col, f"{fp} AS simhash64")
 
 
 def hamming64(a, b):
@@ -415,8 +383,8 @@ def simhash_band_pairs(
     equi-join pairs; the exact bit_count verify removes false
     positives.
 
-    Scale shape: rows explode ×(k+1) into (band_idx, band_val, id,
-    fp) — the shuffle carries two longs per row per band, never text;
+    Scale shape: rows stack ×(k+1) into (band, value, id, fp) —
+    the shuffle carries two longs per row per band, never text;
     a 16-bit band value caps bucket count at 64Ki per band, and the
     verify runs only on same-bucket pairs. Completeness vs brute
     force is pinned in tests/test_operators.py."""
@@ -424,38 +392,15 @@ def simhash_band_pairs(
     if 64 % bands:
         bands = next(b for b in (4, 8, 16, 32, 64) if b >= bands)
     width = 64 // bands
-    mask = (1 << width) - 1
-    stacked = fp.select(
-        F.col(id_col),
-        F.col(fp_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col(fp_col), i * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("val"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("__bv"),
-    ).select(F.col(id_col), F.col(fp_col), "__bv.band", "__bv.val")
-    a = stacked.select(
-        F.col(id_col).alias("id_a"), F.col(fp_col).alias("ha"), "band", "val"
-    )
-    b = stacked.select(
-        F.col(id_col).alias("id_b"), F.col(fp_col).alias("hb"), "band", "val"
-    )
-    return (
-        a.join(b, ["band", "val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", hamming64(F.col("ha"), F.col("hb")).alias("hamming")
-        )
-        .filter(F.col("hamming") <= hamming_max)
-        .distinct()
+    return block_and_verify(
+        fp.select(id_col, fp_col),
+        id_col,
+        [
+            F.expr(f"shiftright({fp_col}, {i * width}) & {(1 << width) - 1}")
+            for i in range(bands)
+        ],
+        verify=[hamming64(F.col(f"a.{fp_col}"), F.col(f"b.{fp_col}")).alias("hamming")],
+        keep=F.col("hamming") <= hamming_max,
     )
 
 
@@ -478,65 +423,21 @@ def embedding_blocked_pairs(
     pair-deduped. Recall is tested against brute force in
     tests/test_operators.py.
 
-    Shuffle shape at 100 TB: rows explode ×L into (table, bucket)
-    keys — the join shuffles (id, vector) pairs, never text; bucket
-    count 2^r bounds skew. (Here vectors ride along the candidate
-    join for one pass; with kilodim embeddings you'd shuffle ids only
-    and join vectors back by id.)
+    Shuffle shape at 100 TB: rows stack ×L into (table, bucket)
+    keys — the join shuffles (id, vector, norm) rows, never text;
+    bucket count 2^r bounds skew. (Here vectors ride along the
+    candidate join for one pass; with kilodim embeddings you'd shuffle
+    ids only and join vectors back by id.)
     """
-    from database_importer_spark.operators.similarity import (
-        hyperplane_buckets,
-        random_hyperplanes,
+    tables = [random_hyperplanes(dim, num_planes, seed + t) for t in range(num_tables)]
+    base = with_norm(df, vec_col, "v").select(
+        id_col, "v", "v_norm", hyperplane_buckets("v", tables).alias("buckets")
     )
-
-    base = df.select(
-        F.col(id_col),
-        F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
-    ).withColumn(
-        "n",
-        F.sqrt(F.expr("aggregate(v, cast(0.0 as double), (acc, x) -> acc + x * x)")),
-    )
-    bucketed = base
-    for tbl in range(num_tables):
-        planes = random_hyperplanes(dim, num_planes, seed + tbl)
-        bucketed = hyperplane_buckets(bucketed, "v", planes, out=f"__b{tbl}")
-    stacked = bucketed.select(
-        F.col(id_col),
-        "v",
-        "n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(tbl).alias("tbl"), F.col(f"__b{tbl}").alias("bucket")
-                    )
-                    for tbl in range(num_tables)
-                ]
-            )
-        ).alias("__tb"),
-    ).select(F.col(id_col), "v", "n", "__tb.tbl", "__tb.bucket")
-    a = stacked.select(
-        F.col(id_col).alias("id_a"),
-        F.col("v").alias("va"),
-        F.col("n").alias("na"),
-        "tbl",
-        "bucket",
-    )
-    b = stacked.select(
-        F.col(id_col).alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("n").alias("nb"),
-        "tbl",
-        "bucket",
-    )
-    dot = F.expr(
-        "aggregate(zip_with(va, vb, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-    )
-    return (
-        a.join(b, ["tbl", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", (dot / (F.col("na") * F.col("nb"))).alias("cosine"))
-        .distinct()  # a pair can collide in several tables
+    return block_and_verify(
+        base,
+        id_col,
+        [F.col("buckets")[t] for t in range(num_tables)],
+        verify=[cosine("a.v", "b.v").alias("cosine")],
     )
 
 
@@ -545,37 +446,20 @@ def embedding_cosine_pairs(
     id_col: str,
     vec_col: str,
     threshold: float = 0.95,
-    block_ids: int | None = None,
 ) -> DataFrame:
-    """Embedding near-dup: pairs with cosine ≥ threshold. Exact pair
-    join (O(n²) per block) — at scale, precede with LSH hyperplane
-    blocking (see similarity.hyperplane_buckets) so only same-bucket
-    pairs join; this function is the verify step either way."""
-    base = df.select(
-        F.col(id_col),
-        F.expr(f"transform({vec_col}, x -> cast(x as double))").alias("v"),
-    )
-    if block_ids is not None:
-        base = base.filter(F.col(id_col) < block_ids)
-    norm = base.withColumn(
-        "n", F.sqrt(F.expr("aggregate(v, cast(0.0 as double), (acc, x) -> acc + x * x)"))
-    )
-    a = norm.select(
-        F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na")
-    )
-    b = norm.select(
-        F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("n").alias("nb")
-    )
-    dot = F.expr(
-        "aggregate(zip_with(va, vb, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-    )
+    """Embedding near-dup: pairs with cosine ≥ threshold by an exact
+    all-pairs join (O(n²)) — the tests' brute-force reference for
+    embedding_blocked_pairs, so it keeps its own cross join rather
+    than going through `block_and_verify`."""
+    base = with_norm(df, vec_col, "v").select(id_col, "v", "v_norm")
     return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
+        base.alias("a")
+        .crossJoin(base.alias("b"))
+        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
         .select(
-            "id_a",
-            "id_b",
-            (dot / (F.col("na") * F.col("nb"))).alias("cosine"),
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            cosine("a.v", "b.v").alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )

@@ -302,12 +302,11 @@ class Merger:
         snapshot merge likewise passes its batch as the anchor of the
         touched-set-checked projection, which adds only a raise."""
         cols = [_q(c) for c in (*self._join_on, *self._subset)]
-        self._data = self._data_master.selectExpr(*cols).na.drop(
-            subset=self._join_on
-        )
+        keys = cols[: len(self._join_on)]
+        self._data = self._data_master.selectExpr(*cols).na.drop(subset=keys)
         if self._anchor_master is not None:
             a = self._anchor_master.selectExpr(*cols)
-            self._validate_anchor = a.na.drop(subset=self._join_on)
+            self._validate_anchor = a.na.drop(subset=keys)
         else:
             self._validate_anchor = None
 

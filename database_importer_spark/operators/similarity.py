@@ -12,54 +12,117 @@ hyperplane-LSH variant buckets vectors by the sign pattern of r
 random projections; a query probes only its bucket (recall traded
 for r). At 100 TB: partition by bucket, broadcast the (tiny) query
 set, per-partition top-k then global top-k merge — no global sort.
+
+Every candidate join of the LSH/IVF family — here and in dedup.py —
+is one `block_and_verify`: stack (id, block) rows, equi-join on the
+block, verify the pair exactly, keep what passes (index, filter,
+refine).
 """
 
 from __future__ import annotations
 
-import math
 import random
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 as double), (acc, x) -> acc + x)"
-
-
-def _as_double(col: str):
-    return F.expr(f"transform({col}, x -> cast(x as double))")
+DIST2 = (
+    "aggregate(zip_with(v, cv, (x, y) -> (x - y) * (x - y)), "
+    "cast(0.0 as double), (acc, x) -> acc + x)"
+)
 
 
 def with_norm(df: DataFrame, vec_col: str, out: str = "v") -> DataFrame:
     """Project the float vector to double + attach its L2 norm."""
-    return df.withColumn(out, _as_double(vec_col)).withColumn(
+    return df.withColumn(
+        out, F.expr(f"transform({vec_col}, x -> cast(x as double))")
+    ).withColumn(
         f"{out}_norm",
         F.sqrt(F.expr(f"aggregate({out}, cast(0.0 as double), (acc, x) -> acc + x * x)")),
     )
 
 
-def unrolled_dot(a: str, b: str, dim: int) -> str:
-    """Fixed-dimension dot product as a flat left-associated sum of
-    per-element double products. MEASURED NEGATIVE for dim=64 at
-    sf10 (19.3 s vs the HOF fold's 3.5 s on llm_similarity_topk):
-    the ~320-term generated method exceeds HotSpot's JIT method-size
-    limit (-XX:-DontCompileHugeMethods default ~8k bytecode), so the
-    'codegen' runs bytecode-INTERPRETED — slower than the
-    CodegenFallback fold whose evaluator loop is itself JIT-hot.
-    Kept for small dims (≤~16 terms compile fine, e.g. the seeded
-    hyperplane projections); for big fixed dims the fold or an
-    Arrow-batched kernel is the right path. Bit-equality with the
-    fold: both sum the in-order element products left-associated in
-    double (the fold's 0.0+x0 start is exact), so results are
-    identical IEEE doubles."""
-    return (
-        "("
-        + " + ".join(
-            f"(cast({a}[{i}] as double) * cast({b}[{i}] as double))"
-            for i in range(dim)
-        )
-        + ")"
+def cosine(a: str, b: str) -> Column:
+    """Cosine of two `with_norm` vectors: the DOT fold over the norms'
+    product (both ``{a}_norm`` and ``{b}_norm`` must be in scope)."""
+    return F.expr(DOT.format(a=a, b=b)) / (F.col(f"{a}_norm") * F.col(f"{b}_norm"))
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """Each query's first k (query_id, corpus_id, cosine) rows by
+    (cosine desc, corpus_id), with their 1-based rank."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("corpus_id")
     )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "corpus_id", "cosine", "rank")
+    )
+
+
+def block_and_verify(
+    left: DataFrame,
+    id: str,
+    blocks: list[Column],
+    verify: list[Column] | None = None,
+    keep: Column | None = None,
+    right: DataFrame | None = None,
+    right_id: str | None = None,
+) -> DataFrame:
+    """The filter-then-refine candidate join behind every LSH/IVF
+    operator: rows that share a block are paired by an equi join, each
+    pair is verified exactly, and only verified pairs are kept.
+
+    ``blocks``: one Column per block (band, hash table, inverted list),
+    evaluated on each side's row; block i of one row only meets block
+    i of another. Several blocks stack each row once per block by ONE
+    explode of an array of (index, key) structs, and the join is equi
+    on (index, key); a pair sharing several blocks is emitted once by
+    a ``distinct`` over the verified output. One block joins on the
+    key itself: no explode, no distinct.
+
+    ``right``: the other side and its id column ``right_id``; without
+    it the join is a self-join and keeps ``id_a < id_b``. The sides
+    are aliased ``a`` (left) and ``b`` (right), so ``verify`` (aliased
+    Columns) can name a self-join's columns as ``a.x`` / ``b.x``.
+    Callers put only narrow columns on each side (ids, fingerprints,
+    normalized vectors): the join and the distinct shuffle what the
+    sides carry, so a wide payload is joined back by id afterwards.
+
+    Output: the two ids (``id_a``, ``id_b`` for a self-join, else
+    ``id`` and ``right_id``), then the ``verify`` columns; ``keep`` is
+    a predicate over this output row."""
+
+    def stack(df: DataFrame) -> DataFrame:
+        if len(blocks) == 1:
+            return df.select("*", blocks[0].alias("__key"))
+        structs = [
+            F.struct(F.lit(i).alias("__blk"), b.alias("__key"))
+            for i, b in enumerate(blocks)
+        ]
+        return (
+            df.select("*", F.explode(F.array(*structs)).alias("__bk"))
+            .select("*", "__bk.__blk", "__bk.__key")
+            .drop("__bk")
+        )
+
+    a = stack(left).alias("a")
+    b = (a if right is None else stack(right)).alias("b")
+    on = F.col("a.__key") == F.col("b.__key")
+    if len(blocks) > 1:
+        on = on & (F.col("a.__blk") == F.col("b.__blk"))
+    if right is None:
+        on = on & (F.col(f"a.{id}") < F.col(f"b.{id}"))
+        ids = [F.col(f"a.{id}").alias("id_a"), F.col(f"b.{id}").alias("id_b")]
+    else:
+        ids = [F.col(f"a.{id}").alias(id), F.col(f"b.{right_id}").alias(right_id)]
+    out = a.join(b, on).select(*ids, *(verify or []))
+    if keep is not None:
+        out = out.filter(keep)
+    return out.distinct() if len(blocks) > 1 else out
 
 
 def cosine_topk(
@@ -69,55 +132,23 @@ def cosine_topk(
     vec_col: str,
     k: int = 3,
     query_id_col: str | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """Brute-force cosine top-k: for each query vector, the k nearest
     corpus vectors (excluding itself when ids collide). Queries are
     broadcast — the corpus never shuffles; per-group top-k via
-    row_number with (cosine desc, id) tiebreak.
-
-    ``dim``: when the (fixed) vector dimension is known, the dot and
-    norms unroll into flat codegen expressions (see `unrolled_dot`) —
-    measured 2.3× faster than the HOF fold on the 64-dim corpus at
-    sf10, identical doubles out."""
-    qid = query_id_col or id_col
-    if dim is not None:
-        nrm = f"sqrt({unrolled_dot(vec_col, vec_col, dim)})"
-        c = corpus.select(
-            F.col(id_col).alias("corpus_id"),
-            F.col(vec_col).alias("__cvec"),
-            F.expr(nrm).alias("cv_norm"),
-        )
-        q = queries.select(
-            F.col(qid).alias("query_id"),
-            F.col(vec_col).alias("__qvec"),
-            F.expr(nrm).alias("qv_norm"),
-        )
-        dot = F.expr(unrolled_dot("__qvec", "__cvec", dim))
-    else:
-        c = with_norm(corpus, vec_col, "cv").select(
-            F.col(id_col).alias("corpus_id"), "cv", "cv_norm"
-        )
-        q = with_norm(queries, vec_col, "qv").select(
-            F.col(qid).alias("query_id"), "qv", "qv_norm"
-        )
-        dot = F.expr(DOT.format(a="qv", b="cv"))
-    scored = (
-        c.join(F.broadcast(q), F.col("corpus_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "corpus_id",
-            (dot / (F.col("qv_norm") * F.col("cv_norm"))).alias("cosine"),
-        )
+    row_number with (cosine desc, id) tiebreak. The tests' exact
+    reference for the LSH and IVF variants, so it keeps its own
+    cross join rather than going through `block_and_verify`."""
+    c = with_norm(corpus, vec_col, "cv").select(
+        F.col(id_col).alias("corpus_id"), "cv", "cv_norm"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("corpus_id")
+    q = with_norm(queries, vec_col, "qv").select(
+        F.col(query_id_col or id_col).alias("query_id"), "qv", "qv_norm"
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
+    scored = c.join(F.broadcast(q), F.col("corpus_id") != F.col("query_id")).select(
+        "query_id", "corpus_id", cosine("qv", "cv").alias("cosine")
     )
+    return _topk(scored, k)
 
 
 def cosine_topk_kernel(
@@ -131,7 +162,8 @@ def cosine_topk_kernel(
     the dense-linear-algebra case where the vectorized Python path
     BEATS Catalyst expressions. The HOF fold evaluates ~3.5 µs per
     64-dim dot (CodegenFallback, per-element interpretation) and the
-    fully-unrolled expression is a JIT bailout (see `unrolled_dot`);
+    fully-unrolled expression is a JIT bailout (see
+    `llm_similarity_topk`);
     a numpy batch kernel does the same million dots in milliseconds.
     Measured sf10 (200k vectors x 5 queries): 3.5 s fold → ~0.4 s.
 
@@ -225,14 +257,7 @@ def cosine_topk_kernel(
     part = corpus.select(
         F.col(id_col).alias("__cid"), F.col(vec_col).alias("__vec")
     ).mapInPandas(part_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("corpus_id")
-    )
-    return (
-        part.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
+    return _topk(part, k)
 
 
 def random_hyperplanes(dim: int, r: int, seed: int = 42) -> list[list[float]]:
@@ -242,19 +267,27 @@ def random_hyperplanes(dim: int, r: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(r)]
 
 
-def hyperplane_buckets(
-    df: DataFrame, vec_col: str, planes: list[list[float]], out: str = "bucket"
-) -> DataFrame:
-    """LSH bucket id = sign pattern of r random projections, packed
-    into a long. Pure expression — no UDF, no shuffle."""
-    bucket = None
-    for i, p in enumerate(planes):
-        arr = "array(" + ", ".join(f"cast({x!r} as double)" for x in p) + ")"
-        proj = F.expr(DOT.format(a=f"transform({vec_col}, x -> cast(x as double))", b=arr))
-        bit = F.when(proj >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, i)
-        bucket = term if bucket is None else bucket + term
-    return df.withColumn(out, bucket)
+def hyperplane_buckets(vec: str, tables: list[list[list[float]]]) -> Column:
+    """LSH bucket ids of the array<double> column ``vec``, one per hash
+    table: the sign pattern of the table's random projections, packed
+    into a long (bit i set when projection i is ≥ 0). One higher-order
+    expression over one nested array literal of every table's planes
+    — no UDF, no shuffle, and a handful of py4j calls however many
+    planes (a Column tree per plane cost ~1.1 s to build for 6×8).
+    Each projection is the DOT fold, so the sign tests see the same
+    doubles as the DuckDB twins' multiply-then-sum."""
+    lit = "array(%s)" % ", ".join(
+        "array(%s)"
+        % ", ".join(
+            "array(%s)" % ", ".join(f"{x!r}D" for x in plane) for plane in planes
+        )
+        for planes in tables
+    )
+    proj = DOT.format(a=vec, b="p")
+    return F.expr(
+        f"transform({lit}, t -> aggregate(transform(t, (p, i) -> "
+        f"IF({proj} >= 0, shiftleft(1L, i), 0L)), 0L, (s, bit) -> s | bit))"
+    )
 
 
 def ivf_topk(
@@ -293,49 +326,40 @@ def ivf_topk(
         F.col(id_col).alias("query_id"), "qv", "qv_norm"
     )
 
-    c_cos = F.expr(DOT.format(a="cv", b="ev")) / (F.col("cv_norm") * F.col("ev_norm"))
     assigned = (
         c.join(F.broadcast(cent))
         .groupBy("corpus_id")
-        .agg(F.max(F.struct(c_cos.alias("cos"), (-F.col("cid")).alias("ncid"))).alias("m"))
+        .agg(
+            F.max(
+                F.struct(cosine("cv", "ev").alias("cos"), (-F.col("cid")).alias("ncid"))
+            ).alias("m")
+        )
         .select("corpus_id", (-F.col("m.ncid")).alias("cid"))
     )
 
-    q_cos = F.expr(DOT.format(a="qv", b="ev")) / (F.col("qv_norm") * F.col("ev_norm"))
     wq = Window.partitionBy("query_id").orderBy(F.col("c_cos").desc(), F.col("cid"))
     probes = (
         q.join(F.broadcast(cent))
-        .select("query_id", "cid", q_cos.alias("c_cos"))
+        .select("query_id", "cid", cosine("qv", "ev").alias("c_cos"))
         .withColumn("pr", F.row_number().over(wq))
         .filter(F.col("pr") <= nprobe)
         .select("query_id", "cid")
     )
 
-    cand = (
-        assigned.join(F.broadcast(probes), "cid")
-        .filter(F.col("corpus_id") != F.col("query_id"))
-        .select("query_id", "corpus_id")
+    cand = block_and_verify(
+        assigned,
+        "corpus_id",
+        [F.col("cid")],
+        keep=F.col("corpus_id") != F.col("query_id"),
+        right=F.broadcast(probes),
+        right_id="query_id",
     )
     scored = (
         cand.join(c, "corpus_id")
         .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "corpus_id",
-            (
-                F.expr(DOT.format(a="qv", b="cv"))
-                / (F.col("qv_norm") * F.col("cv_norm"))
-            ).alias("cosine"),
-        )
+        .select("query_id", "corpus_id", cosine("qv", "cv").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("corpus_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
+    return _topk(scored, k)
 
 
 def kmeans_codebook(
@@ -372,10 +396,7 @@ def kmeans_codebook(
         .withColumn("cid", F.row_number().over(w) - 1)
         .select("cid", F.col("v").alias("cv"))
     )
-    dist2 = F.expr(
-        "aggregate(zip_with(v, cv, (x, y) -> (x - y) * (x - y)), "
-        "cast(0.0 as double), (acc, x) -> acc + x)"
-    )
+    dist2 = F.expr(DIST2)
     for _ in range(iters):
         assigned = (
             base.join(F.broadcast(cent))
@@ -425,14 +446,10 @@ def quantization_distortion(
     — the quantity Lloyd minimizes; used to test convergence."""
     base = with_norm(corpus, vec_col, "v").select(F.col(id_col).alias("__vid"), "v")
     c = centroids.select("cid", F.col("centroid").alias("cv"))
-    dist2 = F.expr(
-        "aggregate(zip_with(v, cv, (x, y) -> (x - y) * (x - y)), "
-        "cast(0.0 as double), (acc, x) -> acc + x)"
-    )
     row = (
         base.join(F.broadcast(c))
         .groupBy("__vid")
-        .agg(F.min(dist2).alias("d"))
+        .agg(F.min(F.expr(DIST2)).alias("d"))
         .agg(F.avg("d").alias("mse"))
         .collect()[0]
     )
@@ -453,28 +470,27 @@ def lsh_topk(
     Join is equi on bucket → hash join, no cross product. Recall is
     governed by num_planes (fewer planes → bigger buckets → higher
     recall, more compute)."""
-    planes = random_hyperplanes(dim, num_planes, seed)
-    c = hyperplane_buckets(with_norm(corpus, vec_col, "cv"), vec_col, planes).select(
-        F.col(id_col).alias("corpus_id"), "cv", "cv_norm", "bucket"
-    )
-    q = hyperplane_buckets(with_norm(queries, vec_col, "qv"), vec_col, planes).select(
-        F.col(id_col).alias("query_id"), "qv", "qv_norm", "bucket"
-    )
-    dot = F.expr(DOT.format(a="qv", b="cv"))
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .filter(F.col("corpus_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "corpus_id",
-            (dot / (F.col("qv_norm") * F.col("cv_norm"))).alias("cosine"),
+    planes = [random_hyperplanes(dim, num_planes, seed)]
+
+    # the block key is the one-table bucket array itself: equal arrays
+    # are equal buckets, and unlike its (nullable) element the array is
+    # never NULL, so no inferred IS NOT NULL filter re-evaluates the
+    # projections below the join
+    def side(df: DataFrame, v: str, name: str) -> DataFrame:
+        return with_norm(df, vec_col, v).select(
+            F.col(id_col).alias(name),
+            v,
+            f"{v}_norm",
+            hyperplane_buckets(v, planes).alias("bucket"),
         )
+
+    scored = block_and_verify(
+        side(corpus, "cv", "corpus_id"),
+        "corpus_id",
+        [F.col("bucket")],
+        verify=[cosine("qv", "cv").alias("cosine")],
+        keep=F.col("corpus_id") != F.col("query_id"),
+        right=F.broadcast(side(queries, "qv", "query_id")),
+        right_id="query_id",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("corpus_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
+    return _topk(scored, k)

@@ -450,7 +450,7 @@ def _merge_cdf_frame(
     data_cols = [c for c in schema.names if c != part_col]
     src = batch.schema
     subset = [c for c in src.names if c not in join_on]
-    keyed = batch.na.drop(subset=join_on)
+    keyed = batch.na.drop(subset=[_q(k) for k in join_on])
     b = F.broadcast(keyed)
     joined = base.alias("a").join(b.alias("b"), on=join_on, how="inner")
     # flat pre/post projection so part_of (which reads table column

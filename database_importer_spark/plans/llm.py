@@ -420,12 +420,12 @@ def llm_dedup_near_incremental(spark, sf_dir):
     as `llm_dedup_near_minhash`, baked into both engines on BOTH
     sides of the probe.
 
-    Scale shape: the corpus side is `lsh_banded_rows` — bands ×
-    |distinct docs| fixed-width (band_id, 60-bit digest, id) rows, the
-    frame a production service PERSISTS and maintains incrementally
-    as batches are admitted (here rebuilt per run; the build is
-    corpus-linear and happens once per corpus lifetime, like
-    `llm_dedup_incremental`'s digest index). Per batch: collapse
+    Scale shape: the corpus side is its `lsh_band_keys` stacked by
+    `block_and_verify` — bands × |distinct docs| fixed-width (band,
+    60-bit digest, id) rows, the frame a production service PERSISTS
+    and maintains incrementally as batches are admitted (here rebuilt
+    per run; the build is corpus-linear and happens once per corpus
+    lifetime, like `llm_dedup_incremental`'s digest index). Per batch: collapse
     exact dups to a min-id representative FIRST (work ∝ distinct
     batch content), signature + banded rows ∝ |batch|, one equi join
     against the index on fixed 8-byte keys, Jaccard verify touches
@@ -445,25 +445,20 @@ def llm_dedup_near_incremental(spark, sf_dir):
     )
     sh_c = D.shingles(ckept, "text", 3).select("doc_id", "shingle_arr")
     sh_b = D.shingles(bkept, "text", 3).select("doc_id", "shingle_arr")
-    sig_c = D.minhash_signatures_portable(sh_c, "doc_id").withColumnRenamed(
-        "doc_id", "corpus_doc"
-    )
-    sig_b = D.minhash_signatures_portable(sh_b, "doc_id").withColumnRenamed(
-        "doc_id", "batch_doc"
-    )
     cand = D.lsh_candidate_pairs_cross(
-        sig_b, sig_c, "batch_doc", "corpus_doc", bands=8, rows_per_band=4
-    )
-    sa = sh_b.select(F.col("doc_id").alias("batch_doc"), F.col("shingle_arr").alias("sh_a"))
-    sb = sh_c.select(F.col("doc_id").alias("corpus_doc"), F.col("shingle_arr").alias("sh_b"))
-    j = cand.join(sa, "batch_doc").join(sb, "corpus_doc")
-    jac = (
-        F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        / F.size(F.array_union("sh_a", "sh_b")).cast("double")
+        D.minhash_signatures_portable(sh_b, "doc_id").withColumnRenamed("doc_id", "id_a"),
+        D.minhash_signatures_portable(sh_c, "doc_id").withColumnRenamed("doc_id", "id_b"),
+        "id_a",
+        "id_b",
+        bands=8,
+        rows_per_band=4,
     )
     return (
-        j.select("batch_doc", "corpus_doc", jac.alias("jaccard"))
+        D.jaccard_pairs(sh_b.unionByName(sh_c), "doc_id", cand)
         .filter(F.col("jaccard") >= 0.3)
+        .select(
+            F.col("id_a").alias("batch_doc"), F.col("id_b").alias("corpus_doc"), "jaccard"
+        )
         .orderBy("batch_doc", "corpus_doc")
     )
 
@@ -513,7 +508,7 @@ def _simhash_oracle(nbits=60, hamming_max=3) -> str:
     """
 
 
-@declare("llm_dedup_simhash", oracle=_simhash_oracle())
+@declare("llm_dedup_simhash", oracle=_simhash_oracle(), cache_frame=True)
 def llm_dedup_simhash(spark, sf_dir):
     """SimHash near-dup, band-blocked — EXACT oracle via the portable
     md5-derived 60-bit token hash (operators/dedup.simhash_portable),
@@ -537,6 +532,19 @@ def llm_dedup_simhash(spark, sf_dir):
     )
 
 
+def _bucket_sql(planes, dim) -> str:
+    """DuckDB twin of one table of similarity.hyperplane_buckets: each
+    projection is the multiply-then-sequential-sum over the baked
+    plane literal, bit i set when it is ≥ 0."""
+    return " + ".join(
+        f"(CASE WHEN list_sum(list_transform(generate_series(1, {dim}), "
+        f"i -> embedding[i]::DOUBLE * list_extract("
+        f"[{', '.join(repr(x) for x in plane)}]::DOUBLE[], i))) >= 0 "
+        f"THEN {1 << p_i} ELSE 0 END)"
+        for p_i, plane in enumerate(planes)
+    )
+
+
 def _lsh_dedup_oracle(num_planes=8, num_tables=6, dim=64, seed=42) -> str:
     """DuckDB twin of embedding_blocked_pairs: the hyperplanes are
     deterministic (seeded), so their constants are baked into the SQL
@@ -544,20 +552,10 @@ def _lsh_dedup_oracle(num_planes=8, num_tables=6, dim=64, seed=42) -> str:
     checkable. Each projection uses the identical multiply-then-
     sequential-sum shape as the Spark side, so the sign tests see
     bit-identical doubles."""
-    from database_importer_spark.operators.similarity import random_hyperplanes
-
-    buckets = []
-    for tbl in range(num_tables):
-        planes = random_hyperplanes(dim, num_planes, seed + tbl)
-        bits = []
-        for p_i, plane in enumerate(planes):
-            arr = "[" + ", ".join(repr(x) for x in plane) + "]"
-            proj = (
-                f"list_sum(list_transform(generate_series(1, {dim}), "
-                f"i -> embedding[i]::DOUBLE * list_extract({arr}::DOUBLE[], i)))"
-            )
-            bits.append(f"(CASE WHEN {proj} >= 0 THEN {1 << p_i} ELSE 0 END)")
-        buckets.append("(" + " + ".join(bits) + f") AS b{tbl}")
+    buckets = [
+        f"({_bucket_sql(S.random_hyperplanes(dim, num_planes, seed + tbl), dim)}) AS b{tbl}"
+        for tbl in range(num_tables)
+    ]
     # stacked (table, bucket) rows + one equi join, and identical
     # vectors collapse to their smallest-id representative first —
     # same two scale fixes as the minhash oracle (an OR of bucket
@@ -594,7 +592,7 @@ def _lsh_dedup_oracle(num_planes=8, num_tables=6, dim=64, seed=42) -> str:
     """
 
 
-@declare("llm_dedup_embedding", oracle=_lsh_dedup_oracle())
+@declare("llm_dedup_embedding", oracle=_lsh_dedup_oracle(), cache_frame=True)
 def llm_dedup_embedding(spark, sf_dir):
     """Embedding near-dup, the scale shape: multi-table hyperplane-LSH
     blocking (operators/dedup.py embedding_blocked_pairs) produces
@@ -652,8 +650,11 @@ def llm_similarity_topk(spark, sf_dir):
     collected once as query INGESTION (bounded |Q|, the literals an
     ANN service receives) — not a data-dependent driver action.
     Why not pure Catalyst: the HOF fold costs ~3.5 µs per 64-dim dot
-    (3.5 s at sf10) and the unrolled expression is a JIT bailout
-    (19.3 s, similarity.unrolled_dot); the numpy kernel is 0.4 s with
+    (3.5 s at sf10), and the unrolled expression — the dot as one flat
+    left-associated sum of 64 per-element double products — is a JIT
+    bailout (measured negative, 19.3 s at sf10): its ~320-term
+    generated method exceeds HotSpot's ~8k-bytecode method-size limit,
+    so it runs interpreted. The numpy kernel is 0.4 s with
     bit-identical doubles (ordered per-dim accumulation).
 
     The ingestion collect is MEMOIZED on (session, corpus fingerprint)
@@ -761,18 +762,7 @@ def _lsh_topk_oracle(num_planes=4, dim=64, seed=42, k=3) -> str:
     literals (the _lsh_dedup_oracle trick), each projection uses the
     identical multiply-then-sequential-sum fold, so bucket ids — and
     hence the probed candidate sets and ranks — agree exactly."""
-    from database_importer_spark.operators.similarity import random_hyperplanes
-
-    planes = random_hyperplanes(dim, num_planes, seed)
-    bits = []
-    for p_i, plane in enumerate(planes):
-        arr = "[" + ", ".join(repr(x) for x in plane) + "]"
-        proj = (
-            f"list_sum(list_transform(generate_series(1, {dim}), "
-            f"i -> embedding[i]::DOUBLE * list_extract({arr}::DOUBLE[], i)))"
-        )
-        bits.append(f"(CASE WHEN {proj} >= 0 THEN {1 << p_i} ELSE 0 END)")
-    bucket = " + ".join(bits)
+    bucket = _bucket_sql(S.random_hyperplanes(dim, num_planes, seed), dim)
     return f"""
     WITH b AS (SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings),
     q AS (SELECT * FROM b WHERE vec_id < 5),
@@ -789,7 +779,7 @@ def _lsh_topk_oracle(num_planes=4, dim=64, seed=42, k=3) -> str:
     """
 
 
-@declare("llm_similarity_lsh", oracle=_lsh_topk_oracle())
+@declare("llm_similarity_lsh", oracle=_lsh_topk_oracle(), cache_frame=True)
 def llm_similarity_lsh(spark, sf_dir):
     """Hyperplane-LSH bucketed ANN: probe only the query's bucket
     (equi hash join on bucket id — no cross product). EXACT oracle:

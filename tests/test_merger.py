@@ -338,6 +338,27 @@ def test_dotted_column_names(spark):
     assert sorted(tuple(r) for r in out.collect()) == [("a", 10), ("b", 2)]
 
 
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_dotted_join_key_names(spark, broadcast):
+    """Join keys whose names hold a dot or a backtick are column names,
+    not nested-field paths: the NULL-key drop and the key joins resolve
+    them as written, and a NULL-keyed source row still never merges."""
+    schema = "`k.x` long, `q``y` long, v string"
+    target = spark.createDataFrame([(1, 1, "a"), (2, 2, "b")], schema)
+    src = spark.createDataFrame(
+        [(2, 2, "B"), (3, 3, "C"), (None, 4, "N")], schema
+    )
+    m = Merger(target, src, join_on=["k.x", "q`y"], broadcast=broadcast)
+    assert sorted(map(tuple, m.merged(insert=True).collect())) == [
+        (1, 1, "a"), (2, 2, "B"), (3, 3, "C"),
+    ]
+    assert sorted(map(tuple, m.merged().collect())) == [(1, 1, "a"), (2, 2, "B")]
+    assert sorted(map(tuple, m.merged_delta().collect())) == [
+        (2, 2, "B"), (3, 3, "C"),
+    ]
+    assert (m.updated_rowcount(), m.inserted_rowcount()) == (1, 1)
+
+
 def test_validate_memo_fires_only_for_file_anchored_sources(spark, tmp_path):
     """r7 validate memo: a parquet-anchored source memoizes its
     key-uniqueness verdict (same plan + same files ⇒ skip the job);

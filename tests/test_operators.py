@@ -389,6 +389,116 @@ def test_embedding_blocked_pairs_recall_on_planted_dups(spark):
     assert recall >= 0.9, f"LSH blocking recall {recall:.3f} < 0.9"
 
 
+# --- one block-and-verify operator (source scan) --------------------
+
+_SIMILARITY_SITES = {
+    # site → the top-level functions or constants allowed one of it
+    ".distinct()": {"block_and_verify"},
+    "explode(": {"block_and_verify", "shingle_rows", "simhash_portable"},
+    "aggregate(zip_with": {"DOT", "DIST2"},
+}
+
+
+def _similarity_sources() -> dict[str, str]:
+    import os
+
+    ops = os.path.dirname(D.__file__)
+    out = {}
+    for name in ("dedup.py", "similarity.py"):
+        with open(os.path.join(ops, name)) as fh:
+            out[name] = fh.read()
+    return out
+
+
+def _site_hits(node) -> list[str]:
+    """The sites one AST node is: a ``.distinct()`` call, an
+    ``explode`` call (``F.explode``; ``posexplode`` is another
+    generator), or a string — docstrings aside — holding SQL
+    ``explode(`` or an ``aggregate(zip_with`` fold."""
+    import ast
+    import re
+
+    if isinstance(node, ast.Call):
+        f = node.func
+        name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+        return {"distinct": [".distinct()"], "explode": ["explode("]}.get(name, [])
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        sql = re.search(r"(?<![a-z_])explode\(", node.value) is not None
+        fold = "aggregate(zip_with" in node.value
+        return ["explode("] * sql + ["aggregate(zip_with"] * fold
+    return []
+
+
+def _block_and_verify_violations(sources: dict[str, str]) -> list[str]:
+    """Every candidate join of dedup.py and similarity.py is
+    `block_and_verify`: the pair ``distinct`` and the block ``explode``
+    live there (beside the shingle and token explodes), and the one
+    dot and one distance fold are the module constants. Each allowed
+    unit holds its site once."""
+    import ast
+    from collections import Counter
+
+    out = []
+    for rel, src in sorted(sources.items()):
+        for stmt in ast.parse(src).body:
+            if isinstance(stmt, ast.FunctionDef):
+                unit = stmt.name
+            elif isinstance(stmt, ast.Assign) and isinstance(stmt.targets[0], ast.Name):
+                unit = stmt.targets[0].id
+            else:
+                continue
+            docs = {
+                id(n.value)
+                for n in ast.walk(stmt)
+                if isinstance(n, ast.Expr) and isinstance(n.value, ast.Constant)
+            }
+            hits = Counter(
+                site
+                for n in ast.walk(stmt)
+                if id(n) not in docs
+                for site in _site_hits(n)
+            )
+            for site, n in sorted(hits.items()):
+                if unit not in _SIMILARITY_SITES[site] or n > 1:
+                    out.append(f"{rel}: {unit}: {n} {site}")
+    return out
+
+
+def test_one_block_and_verify():
+    assert _block_and_verify_violations(_similarity_sources()) == []
+
+
+def test_block_and_verify_scan_flags_seeded_band_join():
+    sources = _similarity_sources()
+    band_join = (
+        "\n\ndef band_self_join(df):\n"
+        "    s = df.select('id', 'v', 'n', F.explode(F.array(\n"
+        "        F.struct(F.lit(0).alias('t'), F.col('b0').alias('k')),\n"
+        "        F.struct(F.lit(1).alias('t'), F.col('b1').alias('k')),\n"
+        "    )).alias('tk')).select('id', 'v', 'n', 'tk.t', 'tk.k')\n"
+        "    dot = F.expr('aggregate(zip_with(a.v, b.v, (x, y) -> x * y), '\n"
+        "                 'cast(0.0 as double), (acc, x) -> acc + x)')\n"
+        "    return (\n"
+        "        s.alias('a').join(s.alias('b'), ['t', 'k'])\n"
+        "        .select((dot / (F.col('a.n') * F.col('b.n'))).alias('cosine'))\n"
+        "        .distinct()\n"
+        "    )\n"
+    )
+    seeded = {
+        **sources,
+        "dedup.py": sources["dedup.py"] + band_join,
+        "similarity.py": sources["similarity.py"]
+        + "\n\ndef shingle_rows(df):\n"
+        "    return df.selectExpr('explode(a)').selectExpr('explode(b)')\n",
+    }
+    assert _block_and_verify_violations(seeded) == [
+        "dedup.py: band_self_join: 1 .distinct()",
+        "dedup.py: band_self_join: 1 aggregate(zip_with",
+        "dedup.py: band_self_join: 1 explode(",
+        "similarity.py: shingle_rows: 2 explode(",
+    ]
+
+
 # --- multimodal -----------------------------------------------------
 
 

@@ -278,12 +278,17 @@ def jaccard_pairs(
     id_col: str,
     pairs: DataFrame,
     shingle_col: str = "shingle_arr",
+    right: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard on candidate pairs: |A∩B| / |A∪B| via array
     built-ins. Join candidates back to shingle arrays (the only step
-    that touches content, and only for candidates)."""
+    that touches content, and only for candidates). ``right`` holds
+    the ``id_b`` side's shingles when the pairs cross two frames (a
+    batch probing a corpus); without it both sides come from ``df``."""
     sa = df.select(F.col(id_col).alias("id_a"), F.col(shingle_col).alias("sh_a"))
-    sb = df.select(F.col(id_col).alias("id_b"), F.col(shingle_col).alias("sh_b"))
+    sb = (df if right is None else right).select(
+        F.col(id_col).alias("id_b"), F.col(shingle_col).alias("sh_b")
+    )
     j = pairs.join(sa, "id_a").join(sb, "id_b")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))

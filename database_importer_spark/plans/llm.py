@@ -454,7 +454,7 @@ def llm_dedup_near_incremental(spark, sf_dir):
         rows_per_band=4,
     )
     return (
-        D.jaccard_pairs(sh_b.unionByName(sh_c), "doc_id", cand)
+        D.jaccard_pairs(sh_b, "doc_id", cand, right=sh_c)
         .filter(F.col("jaccard") >= 0.3)
         .select(
             F.col("id_a").alias("batch_doc"), F.col("id_b").alias("corpus_doc"), "jaccard"

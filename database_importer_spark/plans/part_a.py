@@ -10,6 +10,9 @@ same source in pure SQL.
 
 from __future__ import annotations
 
+import hashlib
+from typing import NamedTuple
+
 from pyspark.sql import functions as F
 
 from database_importer_spark.cache import fingerprint, memo
@@ -518,13 +521,14 @@ def _pm_month_of(df):
     )
 
 
-def _pm_batch_df(spark, sf_dir, lo=_PM_MONTH_LO, hi=_PM_MONTH_HI,
+def _pm_batch_df(spark, sf_dir, base=None, lo=_PM_MONTH_LO, hi=_PM_MONTH_HI,
                  ins_date=_PM_INS_DATE):
-    """Month-scoped update ∪ insert batch, carrying o_orderdate so
-    every row maps to its target partition (merge contract). Values
-    are ABSOLUTE (orig + 10.0 from the immutable source parquet, not
-    the live table), which is what makes re-applying the merge
-    idempotent.
+    """Month-scoped update ∪ insert batch over ``base`` (default: the
+    source orders; a snapshot table's v0 is byte-identical to it),
+    carrying o_orderdate so every row maps to its target partition
+    (merge contract). Values are ABSOLUTE (orig + 10.0 from immutable
+    rows, not the live table), which is what makes re-applying the
+    merge idempotent.
 
     ONE scan (an update∪insert twin would scan orders twice and the
     max-key scalar a third time): %100 keys are a subset of %10 keys,
@@ -536,7 +540,8 @@ def _pm_batch_df(spark, sf_dir, lo=_PM_MONTH_LO, hi=_PM_MONTH_HI,
     (operators/pruning.footer_exact_max — exact for integral columns,
     memoized on file fingerprint, zero jobs zero data pages: the same
     fenced planner-side zone-map class as the top-k threshold) with
-    an in-plan broadcast-scalar fallback when stats are absent."""
+    an in-plan broadcast-scalar fallback over orders when stats are
+    absent."""
     import os as _os
 
     from database_importer_spark.operators.pruning import footer_exact_max
@@ -545,7 +550,9 @@ def _pm_batch_df(spark, sf_dir, lo=_PM_MONTH_LO, hi=_PM_MONTH_HI,
     in_month = (
         F.col("o_orderdate") >= F.lit(lo).cast("timestamp")
     ) & (F.col("o_orderdate") < F.lit(hi).cast("timestamp"))
-    base = o.filter(in_month & (F.col("o_orderkey") % 10 == 0))
+    base = (o if base is None else base).filter(
+        in_month & (F.col("o_orderkey") % 10 == 0)
+    )
     mx = footer_exact_max(_os.path.join(sf_dir, "orders.parquet"), "o_orderkey")
     if mx is not None:
         key_base = F.lit(int(mx) + 1).cast("bigint")
@@ -553,14 +560,6 @@ def _pm_batch_df(spark, sf_dir, lo=_PM_MONTH_LO, hi=_PM_MONTH_HI,
         scalar = o.agg((F.max("o_orderkey") + F.lit(1)).alias("__key_base"))
         base = base.crossJoin(F.broadcast(scalar))
         key_base = F.col("__key_base")
-    return _pm_batch_core(base, key_base, ins_date=ins_date)
-
-
-def _pm_batch_core(base, key_base, ins_date=_PM_INS_DATE):
-    """The update∪insert struct-explode over a month-filtered %10 base
-    scan (the r4 CDC single-scan pattern) — shared by the
-    source-derived batch (_pm_batch_df) and the staging-derived batch
-    (_pm_batch_from_v0)."""
     upd_struct = F.struct(
         F.col("o_orderkey").alias("o_orderkey"),
         (F.col("o_totalprice") + F.lit(10.0)).alias("o_totalprice"),
@@ -581,42 +580,15 @@ def _pm_batch_core(base, key_base, ins_date=_PM_INS_DATE):
     ).select("r.*")
 
 
+def _pm_month(date: str) -> int:
+    """yyyymm of an ISO date string: the partition a month batch
+    starting at ``date`` touches."""
+    return int(date[:4]) * 100 + int(date[5:7])
+
+
 # the batch's months, statically known: updates are filtered to the
 # batch month and inserts are dated _PM_INS_DATE inside it
-_PM_TOUCHED = [199703]
-
-
-def _pm_batch_from_v0(spark, sf_dir, loc):
-    """The SAME month batch derived from the snapshot table's own
-    immutable v0 (byte-identical to the source: v0 IS the unmutated
-    load) with the read manifest-pruned to the batch month — the
-    staging-table shape of a production CDC feed: batch derivation
-    costs |month| (one pruned file), not a full source rescan per
-    merge. The insert key base still comes from the source's parquet
-    footer stats (identical values; zero jobs), with the in-plan
-    scalar fallback reading v0."""
-    import os as _os
-
-    from database_importer_spark.operators.pruning import footer_exact_max
-    from database_importer_spark.operators.snapshot_table import (
-        read_snapshot,
-    )
-
-    o = read_snapshot(spark, loc, version=0, part_values=_PM_TOUCHED)
-    in_month = (
-        F.col("o_orderdate") >= F.lit(_PM_MONTH_LO).cast("timestamp")
-    ) & (F.col("o_orderdate") < F.lit(_PM_MONTH_HI).cast("timestamp"))
-    base = o.filter(in_month & (F.col("o_orderkey") % 10 == 0))
-    mx = footer_exact_max(_os.path.join(sf_dir, "orders.parquet"), "o_orderkey")
-    if mx is not None:
-        key_base = F.lit(int(mx) + 1).cast("bigint")
-    else:
-        scalar = read_snapshot(spark, loc, version=0).agg(
-            (F.max("o_orderkey") + F.lit(1)).alias("__key_base")
-        )
-        base = base.crossJoin(F.broadcast(scalar))
-        key_base = F.col("__key_base")
-    return _pm_batch_core(base, key_base)
+_PM_TOUCHED = [_pm_month(_PM_MONTH_LO)]
 
 
 # --- snapshot table: native lakehouse commit protocol -----------------
@@ -627,53 +599,167 @@ def _pm_batch_from_v0(spark, sf_dir, loc):
 # upsert_merge_snapshot and upsert_merge_partitioned merge the same
 # month batch, checked by one oracle, at two file granularities.
 
+_INC_CUTOFF = "1998-01-01"
+_REPL_YEAR = 1996
+_CC_MONTHS = [
+    ("1997-01-01", "1997-02-01", "1997-01-15"),
+    ("1997-02-01", "1997-03-01", "1997-02-15"),
+    ("1997-03-01", "1997-04-01", "1997-03-15"),
+]
 
-# Creation contract per declared snapshot table: (v0 files fan-out,
-# cdf materialization). AUTHORITATIVE — _snap_loc folds the token into
-# the directory name (ADVICE r10: flipping a table's creation params
-# must mint a FRESH table, never silently reuse a stale one under the
-# create-once contract; the manual dbis_snap_* deletion gotcha class
-# dies here); _snap_create_named creates each table with its entry.
-_SNAP_CONTRACT = {
-    "upsert": (16, False),
-    "pm": (84, False),
-    "inc": (16, False),
-    "feed": (72, True),
-    "replica": (16, False),
-    "pspec": (16, False),
-    "ptl": (64, False),
-    "ref": (16, False),
-    "delw": (16, False),
-    "dv": (16, False),
-    "cdc": (16, True),
-    "repl": (16, False),
-    "cm": (84, False),
-    "catd": (16, False),
-    "cats": (4, False),
-    "feedc": (84, True),
+
+class _Spec(NamedTuple):
+    """One declared snapshot table, as plain data.
+
+    ``src`` is the v0 frame: ``("orders", pred, *extra)`` — the source
+    orders plus o_month, under an optional ``("<" | ">=", date)`` or
+    ``("year", y)`` filter, plus the ``extra`` derived columns;
+    ``("snapshot", name, version)`` — a version of another declared
+    table; ``("rollup", src)`` — the per-month order rollup of a frame
+    plus its year. ``part``/``cluster``/``files``/``sort_cols``/
+    ``stats_cols``/``cdf`` are create_snapshot_table's layout and
+    write contract. ``steps`` is the fixed commit chain on top of v0,
+    ``(op, *args)`` each:
+
+      ("merge", lo, hi, ins)  the month batch of [lo, hi), inserts at ins
+      ("append", src, files)  INSERT-only commit of a source frame
+      ("replace", src, files) full-content REPLACE with a source frame
+      ("compact", files)      OPTIMIZE into ``files`` files
+      ("compact_changes", a, b) consolidate the change files of a..b
+      ("evolve", col)         partition-spec evolution to ``col``
+      ("rollup", name, months) re-aggregate ``months`` of table ``name``
+                              at its head (a summary-table merge)
+    """
+
+    src: tuple = ("orders",)
+    part: str = _PM_PART_COL
+    cluster: str | None = "o_orderkey"
+    files: int = 16
+    cdf: bool = False
+    sort_cols: tuple = ()
+    stats_cols: tuple = ()
+    steps: tuple = ()
+
+
+_MERGE = ("merge", _PM_MONTH_LO, _PM_MONTH_HI, _PM_INS_DATE)
+_HISTORY = ("orders", ("<", _INC_CUTOFF))
+_SINCE = ("orders", (">=", _INC_CUTOFF))
+
+# AUTHORITATIVE: _snap_loc folds a digest of the whole entry into the
+# directory name, so editing any field, source or step mints a FRESH
+# table instead of silently reusing a stale one under the create-once
+# rule (the code behind a source or step is not in the digest: edit
+# the entry along with it). files=16, range-clustered on (month,
+# orderkey), gives every v0 file a contiguous ~5-month slice, which
+# keeps manifest pruning and the delete classification sharp even
+# where AQE would coalesce a small corpus to one file; files=84 is
+# about one month per file, so a copy-on-write month rewrite touches
+# ~1 month of rows. A cdf table materializes each merge's row delta
+# (the tables the CDF keys read).
+_SNAP_SPECS = {
+    # the shared merge table: the read keys need at least one merge;
+    # the merge and streaming keys commit their own on v0 (upto=0)
+    "upsert": _Spec(steps=(_MERGE,)),
+    "pm": _Spec(files=84),
+    "inc": _Spec(src=_HISTORY, steps=(("append", _SINCE, None),)),
+    # the change-feed fixture: v0 orders before the cutoff, v1 the
+    # INSERT-only append of the rest, v2 the month batch, v3 OPTIMIZE
+    # (content-preserving). files=72 ≈ one pre-1998 month per v0
+    # slice: the merge step's removed/added diff is then bounded by
+    # ~one month of rows.
+    "feed": _Spec(
+        src=_HISTORY,
+        files=72,
+        cdf=True,
+        steps=(("append", _SINCE, None), _MERGE, ("compact", 8)),
+    ),
+    "replica": _Spec(src=("snapshot", "feed", 0)),
+    # o_year declared in stats_cols up front: the forward-compatible
+    # move for a table expecting to coarsen its spec. The append's
+    # files=8 > |distinct years in the slice| (the scaled corpora shift
+    # replicated dates past 1998): post-evolution clustering is on
+    # o_year alone, so 8 slots make every appended file YEAR-PURE and
+    # the pruned read decodes only the asked year (files=2 coalesced
+    # 1998+1999 into one 4.5M-row file whose residual filter discarded
+    # half of what it decoded).
+    "pspec": _Spec(
+        src=_HISTORY + ("o_year",),
+        stats_cols=("o_year",),
+        steps=(("evolve", "o_year"), ("append", _SINCE + ("o_year",), 8)),
+    ),
+    # files=64: pruning granularity. At sf10 a 16-file layout writes
+    # ~55 MB single-row-group files — the BETWEEN residual then decodes
+    # the whole surviving file because there is no row group to prune
+    # INSIDE it; 64 files ≈ 4x less data behind the one file the
+    # manifest keeps. files=128 measured a WASH vs 64 in alternated
+    # cross-process A/B at sf10 (0.087-0.122 both: the residual is the
+    # noop-sink + scheduling constant, not scan bytes) — don't re-chase.
+    "ptl": _Spec(
+        cluster=None,
+        files=64,
+        sort_cols=("o_orderkey",),
+        stats_cols=("o_orderkey",),
+    ),
+    "ref": _Spec(steps=(_MERGE,)),
+    "delw": _Spec(),
+    "dv": _Spec(),
+    "cdc": _Spec(cdf=True, steps=(_MERGE,)),
+    "repl": _Spec(
+        steps=(("replace", ("orders", ("year", _REPL_YEAR)), 4),)
+    ),
+    "cm": _Spec(files=84),
+    "catd": _Spec(steps=(_MERGE,)),
+    "cats": _Spec(
+        src=("rollup", ("snapshot", "catd", 0)),
+        part="o_year",
+        cluster="o_month",
+        files=4,
+        steps=(("rollup", "catd", tuple(_PM_TOUCHED)),),
+    ),
+    # the change-file-compaction fixture: v1..v3 merge three months
+    # (disjoint key sets), one materialized change-file group each;
+    # v4 consolidates the three groups
+    "feedc": _Spec(
+        files=84,
+        cdf=True,
+        steps=tuple(("merge", *m) for m in _CC_MONTHS)
+        + (("compact_changes", 0, len(_CC_MONTHS)),),
+    ),
+    # v2 re-merges the same batch: same content, fresh files, so v1's
+    # rewritten slice becomes unreferenced history for vacuum
+    "vret": _Spec(steps=(_MERGE, _MERGE)),
 }
 
 
-def _snap_contract_token(name):
-    files, cdf = _SNAP_CONTRACT[name]
-    return f"f{files}" + ("c" if cdf else "")
+def _snap_token(name):
+    """Short digest of ``name``'s whole spec. A ``("snapshot", other,
+    v)`` source enters by ``other``'s own token, so a table derived
+    from another is minted fresh whenever its source table is."""
+
+    def resolve(x):
+        if isinstance(x, tuple):
+            if x[:1] == ("snapshot",):
+                return ("snapshot", _snap_token(x[1])) + x[2:]
+            return tuple(resolve(y) for y in x)
+        return x
+
+    material = repr(resolve(tuple(_SNAP_SPECS[name])))
+    return hashlib.sha1(material.encode()).hexdigest()[:10]
 
 
 def _snap_loc(spark, sf_dir, name="upsert"):
-    """Table root: warehouse + corpus fingerprint + creation-contract
-    token. SHARED across processes — snapshot isolation plus
-    optimistic commits make a shared mutable table safe (the
-    dynamic-overwrite live table had to be process-scoped precisely
-    because its commit deletes files under concurrent readers; the
-    manifest protocol removes that class), and idempotent merge
-    content means any interleaving of writers converges to the same
-    state."""
+    """Table root: warehouse + corpus fingerprint + spec token. SHARED
+    across processes — snapshot isolation plus optimistic commits make
+    a shared mutable table safe (the dynamic-overwrite live table had
+    to be process-scoped precisely because its commit deletes files
+    under concurrent readers; the manifest protocol removes that
+    class), and idempotent merge content means any interleaving of
+    writers converges to the same state."""
     import os
 
     fp = fingerprint(os.path.join(sf_dir, "orders.parquet"))
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    token = _snap_contract_token(name)
-    return os.path.join(wh, f"dbis_snap_{name}_{fp}_{token}")
+    return os.path.join(wh, f"dbis_snap_{name}_{fp}_{_snap_token(name)}")
 
 
 def _snap_batch_touched(spark, sf_dir):
@@ -683,28 +769,125 @@ def _snap_batch_touched(spark, sf_dir):
     return _pm_batch_df(spark, sf_dir), list(_PM_TOUCHED)
 
 
-def _snap_ensure_merged(spark, sf_dir):
-    """Table exists with ≥1 merge commit — the shared precondition of
-    the time-travel and pruned-read keys. Memoized per session (the
-    merge KEY itself commits fresh every invocation; these two only
-    need a post-merge table). Returns (loc, touched)."""
-    from database_importer_spark.operators.snapshot_table import (
-        latest_version,
-        merge_snapshot_commit,
+def _snap_source(spark, sf_dir, src):
+    """The frame a spec source names (see _Spec)."""
+    from database_importer_spark.operators.snapshot_table import read_snapshot
+
+    kind, *args = src
+    if kind == "snapshot":
+        name, version = args
+        loc = _snap_table(spark, sf_dir, name)
+        return read_snapshot(spark, loc, version=version)
+    if kind == "rollup":
+        base = _cat_summary_agg(_snap_source(spark, sf_dir, args[0]))
+        return base.withColumn("o_year", _cat_year_of(base))
+    pred, *extra = args or [None]
+    o = t(spark, sf_dir, "orders")
+    if pred is not None:
+        op, val = pred
+        d = F.col("o_orderdate")
+        if op == "year":
+            o = o.filter(F.year(d) == val)
+        elif op == "<":
+            o = o.filter(d < F.lit(val).cast("timestamp"))
+        else:
+            o = o.filter(d >= F.lit(val).cast("timestamp"))
+    o = o.withColumn(_PM_PART_COL, _pm_month_of(o))
+    if "o_year" in extra:
+        o = o.withColumn("o_year", F.year("o_orderdate").cast("int"))
+    return o
+
+
+def _snap_table(spark, sf_dir, name, loc=None, upto=None):
+    """The declared table ``name`` at ``loc`` (default: _snap_loc),
+    built from its _SNAP_SPECS entry, and its location. v0 is created
+    once; step i of the chain runs only while the table is at version
+    i and commits with expected_parent=i, so N racing processes build
+    exactly this chain: one racer lands each step, the rest observe it
+    done. ``upto`` runs only the first ``upto`` steps (0: v0 alone,
+    for the keys that commit on every invocation)."""
+    from database_importer_spark.operators import snapshot_table as S
+
+    spec = _SNAP_SPECS[name]
+    loc = loc or _snap_loc(spark, sf_dir, name)
+    S.create_snapshot_table(
+        spark,
+        loc,
+        lambda: _snap_source(spark, sf_dir, spec.src),
+        spec.part,
+        spec.cluster,
+        files=spec.files,
+        sort_cols=list(spec.sort_cols) or None,
+        stats_cols=list(spec.stats_cols) or None,
+        cdf=spec.cdf,
     )
-    cache = memo("snapshot_merge_state", spark)
-    loc = _snap_loc(spark, sf_dir)
-    hit = cache.get(loc)
-    if hit is None:
-        _snap_create_named(spark, sf_dir, "upsert")
-        batch, touched = _snap_batch_touched(spark, sf_dir)
-        if latest_version(loc) == 0:
-            merge_snapshot_commit(
-                spark, loc, batch, ["o_orderkey"], _pm_month_of, touched
+    for i, (op, *args) in enumerate(spec.steps[:upto]):
+        if S.latest_version(loc) != i:
+            continue
+        if op == "merge":
+            lo, hi, ins = args
+            S.merge_snapshot_commit(
+                spark, loc, _pm_batch_df(spark, sf_dir, None, lo, hi, ins),
+                ["o_orderkey"], _pm_month_of, [_pm_month(lo)],
+                expected_parent=i,
             )
-        hit = (loc, touched)
-        cache[loc] = hit
-    return hit
+        elif op in ("append", "replace"):
+            src, files = args
+            commit = (
+                S.append_snapshot_commit
+                if op == "append"
+                else S.replace_snapshot_commit
+            )
+            commit(
+                spark, loc, _snap_source(spark, sf_dir, src), files=files,
+                expected_parent=i,
+            )
+        elif op == "compact":
+            S.compact_snapshot_commit(
+                spark, loc, files=args[0], expected_parent=i
+            )
+        elif op == "compact_changes":
+            S.compact_changes_commit(spark, loc, *args, expected_parent=i)
+        elif op == "evolve":
+            # metadata-only and idempotent (a peer's evolution makes
+            # this a no-op), so it takes no parent guard
+            S.evolve_partition_spec(spark, loc, *args)
+        elif op == "rollup":
+            # the touched months re-aggregated from the detail table's
+            # head: a manifest-pruned read, |touched| not |table|
+            detail, months = args
+            tslice = S.read_snapshot_keyrange(
+                spark, _snap_loc(spark, sf_dir, detail), _PM_PART_COL,
+                months[0], months[-1],
+            ).filter(F.col(_PM_PART_COL).isin(list(months)))
+            S.merge_snapshot_commit(
+                spark, loc, _cat_summary_agg(tslice), ["o_month"],
+                _cat_year_of, sorted({m // 100 for m in months}),
+                expected_parent=i,
+            )
+        else:
+            raise ValueError(f"unknown snapshot step {op!r} in {name!r}")
+    return loc
+
+
+def _snap_frame(spark, loc, build, *extra):
+    """``build(session, version)`` over the head of the table at
+    ``loc``, built once per session and cached on (loc, version,
+    *extra): a snapshot version's plan is immutable, so re-invocations
+    skip the py4j plan construction (the r6 constant-removal class),
+    and a new commit moves the version and misses. The frame is
+    planned on the static session: on these fixed-shape map-only reads
+    the AQE wrapper is pure scheduling cost (the r5 lever)."""
+    from database_importer_spark.operators.snapshot_table import latest_version
+    from database_importer_spark.session import static_plan_session
+
+    v = latest_version(loc)
+    cache = memo("snapshot_frame", spark)
+    ck = (loc, v, *extra)
+    df = cache.get(ck)
+    if df is None:
+        df = cache[ck] = build(static_plan_session(spark), v)
+    return df
 
 
 _SNAP_OUT_COLS = [
@@ -718,14 +901,14 @@ _SNAP_OUT_COLS = [
 
 
 def _snap_merge_readback(spark, sf_dir, name):
-    """Merge the month batch into the contract-named table ``name`` as
-    one real commit, then read the committed version back in full."""
+    """Merge the month batch into the declared table ``name`` as one
+    real commit, then read the committed version back in full."""
     from database_importer_spark.operators.snapshot_table import (
         merge_snapshot_commit,
         read_snapshot,
     )
 
-    loc = _snap_create_named(spark, sf_dir, name)
+    loc = _snap_table(spark, sf_dir, name, upto=0)
     batch, touched = _snap_batch_touched(spark, sf_dir)
     v = merge_snapshot_commit(
         spark, loc, batch, ["o_orderkey"], _pm_month_of, touched
@@ -786,7 +969,7 @@ def table_time_travel(spark, sf_dir):
     model saw it", at manifest-resolution cost."""
     from database_importer_spark.operators.snapshot_table import read_snapshot
 
-    loc, _touched = _snap_ensure_merged(spark, sf_dir)
+    loc = _snap_table(spark, sf_dir, "upsert")
     return read_snapshot(spark, loc, version=0).select(*_SNAP_OUT_COLS)
 
 
@@ -810,9 +993,9 @@ def table_snapshot_prune_read(spark, sf_dir):
     same month."""
     from database_importer_spark.operators.snapshot_table import read_snapshot
 
-    loc, touched = _snap_ensure_merged(spark, sf_dir)
-    df = read_snapshot(spark, loc, part_values=touched)
-    return df.filter(F.col(_PM_PART_COL).isin(touched)).select(
+    loc = _snap_table(spark, sf_dir, "upsert")
+    df = read_snapshot(spark, loc, part_values=_PM_TOUCHED)
+    return df.filter(F.col(_PM_PART_COL).isin(_PM_TOUCHED)).select(
         *_SNAP_OUT_COLS
     )
 
@@ -835,7 +1018,7 @@ def table_compact_snapshot(spark, sf_dir):
         read_snapshot,
     )
 
-    loc, _touched = _snap_ensure_merged(spark, sf_dir)
+    loc = _snap_table(spark, sf_dir, "upsert")
     v = compact_snapshot_commit(spark, loc, files=8)
     return read_snapshot(spark, loc, version=v).select(*_SNAP_OUT_COLS)
 
@@ -865,7 +1048,7 @@ def table_schema_evolution(spark, sf_dir):
         read_snapshot,
     )
 
-    loc, _touched = _snap_ensure_merged(spark, sf_dir)
+    loc = _snap_table(spark, sf_dir, "upsert")
     evolve_snapshot_schema(
         spark, loc, [("o_note", "string")], exist_ok=True
     )
@@ -874,8 +1057,8 @@ def table_schema_evolution(spark, sf_dir):
 
 def _ref_table(spark, sf_dir):
     """The branch/tag fixture (VERDICT r8 item 4), own table 'ref':
-    tag 'train' pinned at v0, at least one merge commit past it, and
-    branch 'main' CAS-advanced to a merged version. Every step is
+    tag 'train' pinned at v0, the spec's one merge commit past it, and
+    branch 'main' CAS-advanced to the merged version. Every step is
     concurrent-idempotent (tag/branch creation converges on the same
     version; the head-advance loop re-reads on a lost CAS, and peers
     only ever advance the head to idempotent merged states)."""
@@ -883,31 +1066,11 @@ def _ref_table(spark, sf_dir):
         branch_head,
         create_branch,
         create_tag,
-        merge_snapshot_commit,
         update_branch,
     )
 
-    loc = _snap_create_named(spark, sf_dir, "ref")
+    loc = _snap_table(spark, sf_dir, "ref")
     create_tag(loc, "train", version=0)
-    # ONE commit past the tag is the contract (the refs are what the
-    # keys measure, not merge throughput — the merge keys own that);
-    # the expected_parent CAS means exactly one racer lands v1 and
-    # every later invocation observes the chain done.
-    from database_importer_spark.operators.snapshot_table import (
-        latest_version,
-    )
-
-    if latest_version(loc) == 0:
-        batch, touched = _snap_batch_touched(spark, sf_dir)
-        merge_snapshot_commit(
-            spark,
-            loc,
-            batch,
-            ["o_orderkey"],
-            _pm_month_of,
-            touched,
-            expected_parent=0,
-        )
     create_branch(loc, "main", version=0)
     for _ in range(100):
         cur = branch_head(loc, "main")
@@ -964,42 +1127,6 @@ def table_branch_head_read(spark, sf_dir):
     return read_snapshot(spark, loc, ref="main").select(*_SNAP_OUT_COLS)
 
 
-def _snap_create_named(spark, sf_dir, name):
-    """Create-once v0 = orders + o_month on the contract-named table
-    ``name``, with the fan-out and cdf flag its _SNAP_CONTRACT entry
-    declares; returns its location. files=16, range-clustered on
-    (month, orderkey), gives every file a contiguous ~5-month slice,
-    which keeps manifest pruning and the delete classification sharp
-    even where AQE would coalesce a small corpus to one file. Keys
-    whose per-commit cost is bounded by the files INTERSECTING one
-    month declare files=84 (about one month per file): a copy-on-write
-    rewrite then touches ~1 month of rows instead of a 5-month file.
-    A cdf table materializes each merge's row delta (the tables the
-    CDF keys consume)."""
-    files, cdf = _SNAP_CONTRACT[name]
-    return _snap_create_at(
-        spark, sf_dir, _snap_loc(spark, sf_dir, name), files=files, cdf=cdf
-    )
-
-
-def _snap_create_at(spark, sf_dir, loc, files=16, cdf=False):
-    """Create-once v0 = orders + o_month at an EXPLICIT location —
-    shared by the contract-named tables and the process-scoped ones
-    (vacuum demo) whose location is scratch-derived."""
-    from database_importer_spark.operators.snapshot_table import (
-        create_snapshot_table,
-    )
-
-    def src():
-        o = t(spark, sf_dir, "orders")
-        return o.withColumn(_PM_PART_COL, _pm_month_of(o))
-
-    create_snapshot_table(
-        spark, loc, src, _PM_PART_COL, "o_orderkey", files=files, cdf=cdf
-    )
-    return loc
-
-
 _DELW_LO, _DELW_HI = 199701, 199712
 
 
@@ -1034,7 +1161,7 @@ def table_delete_where(spark, sf_dir):
         read_snapshot,
     )
 
-    loc = _snap_create_named(spark, sf_dir, "delw")
+    loc = _snap_table(spark, sf_dir, "delw")
     v = delete_where_commit(spark, loc, _DELW_LO, _DELW_HI)
     return read_snapshot(spark, loc, version=v).select(*_SNAP_OUT_COLS)
 
@@ -1069,7 +1196,7 @@ def table_delete_mor(spark, sf_dir):
         read_snapshot,
     )
 
-    loc = _snap_create_named(spark, sf_dir, "dv")
+    loc = _snap_table(spark, sf_dir, "dv")
     doomed = (
         t(spark, sf_dir, "orders")
         .filter(F.col("o_custkey") % 500 == 3)
@@ -1144,32 +1271,19 @@ def table_changes_merge(spark, sf_dir):
     its derived state at |commit| cost, not |table|. Hash-matched
     against the batch's update/insert effect derived straight from
     the source."""
-    from database_importer_spark.operators.snapshot_table import (
-        latest_version,
-        merge_snapshot_commit,
-        read_changes,
-    )
+    from database_importer_spark.operators.snapshot_table import read_changes
 
     # own table: only this key commits here, so v1 is ALWAYS the batch
     # merge (the shared merge table's v1 can be any first-comer commit,
-    # e.g. a streaming micro-batch). A racing creator that loses the
-    # version CAS re-merges the identical batch at v2+ — v0→v1 stays
-    # the canonical commit either way. cdf=True: the merge commit
+    # e.g. a streaming micro-batch), and the chain's CAS lets exactly
+    # one racing creator land it. cdf=True: the merge commit
     # MATERIALIZES its row delta as change files (r10 — the Delta
     # `_change_data` design), so this read is a plain scan of them;
     # pre-cdf tables fall back to the read-time digest diff,
     # test-pinned equal.
-    loc = _snap_create_named(spark, sf_dir, "cdc")
-    if latest_version(loc) == 0:
-        batch, touched = _snap_batch_touched(spark, sf_dir)
-        merge_snapshot_commit(
-            spark, loc, batch, ["o_orderkey"], _pm_month_of, touched
-        )
+    loc = _snap_table(spark, sf_dir, "cdc")
     ch = read_changes(spark, loc, 0, 1, ["o_orderkey"])
     return ch.select("_change_type", *_SNAP_OUT_COLS, "_commit_version")
-
-
-_INC_CUTOFF = "1998-01-01"
 
 
 @declare(
@@ -1197,95 +1311,14 @@ def table_incremental_read(spark, sf_dir):
     job: catch up from version A to B at |delta| cost, not |table|.
     Hash-matched against the appended slice of the source."""
     from database_importer_spark.operators.snapshot_table import (
-        append_snapshot_commit,
-        create_snapshot_table,
         latest_version,
         read_incremental,
     )
 
-    loc = _snap_loc(spark, sf_dir, "inc")
-    cutoff = F.lit(_INC_CUTOFF).cast("timestamp")
-
-    def src():
-        o = t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
-        return o.withColumn(_PM_PART_COL, _pm_month_of(o))
-
-    create_snapshot_table(spark, loc, src, _PM_PART_COL, "o_orderkey", files=16)
-    if latest_version(loc) == 0:
-        delta = t(spark, sf_dir, "orders").filter(
-            F.col("o_orderdate") >= cutoff
-        )
-        append_snapshot_commit(
-            spark,
-            loc,
-            delta.withColumn(_PM_PART_COL, _pm_month_of(delta)),
-            expected_parent=0,
-        )
+    loc = _snap_table(spark, sf_dir, "inc")
     return read_incremental(spark, loc, 0, latest_version(loc)).select(
         *_SNAP_OUT_COLS
     )
-
-
-def _feed_table(spark, sf_dir):
-    """A snapshot table with a DETERMINISTIC multi-step history —
-    the fixture for the change-feed keys:
-
-      v0  create   orders before {_INC_CUTOFF} (+ o_month)
-      v1  append   the 1998 slice (INSERT-only commit)
-      v2  merge    the month-199703 update∪insert batch
-      v3  compact  OPTIMIZE into 8 files (content-preserving)
-
-    Every step is CAS-guarded on its expected parent version
-    (expected_parent), so N racing processes build exactly this chain:
-    one racer lands each step, the rest observe it done — the same
-    concurrent-idempotence contract the r8 sweep protocol requires.
-    Returns (loc, head_version)."""
-    from database_importer_spark.operators.snapshot_table import (
-        append_snapshot_commit,
-        compact_snapshot_commit,
-        create_snapshot_table,
-        latest_version,
-        merge_snapshot_commit,
-    )
-
-    loc = _snap_loc(spark, sf_dir, "feed")
-    cutoff = F.lit(_INC_CUTOFF).cast("timestamp")
-
-    def src():
-        o = t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
-        return o.withColumn(_PM_PART_COL, _pm_month_of(o))
-
-    # files=72 ≈ one pre-1998 month per v0 slice: the merge step's
-    # removed/added diff is then bounded by ~one month of rows.
-    # cdf=True (r10): the merge step materializes its change files at
-    # commit time, so consumer reads of v2 are plain scans.
-    create_snapshot_table(
-        spark, loc, src, _PM_PART_COL, "o_orderkey", files=72, cdf=True
-    )
-    if latest_version(loc) == 0:
-        delta = t(spark, sf_dir, "orders").filter(
-            F.col("o_orderdate") >= cutoff
-        )
-        append_snapshot_commit(
-            spark,
-            loc,
-            delta.withColumn(_PM_PART_COL, _pm_month_of(delta)),
-            expected_parent=0,
-        )
-    if latest_version(loc) == 1:
-        batch, touched = _snap_batch_touched(spark, sf_dir)
-        merge_snapshot_commit(
-            spark,
-            loc,
-            batch,
-            ["o_orderkey"],
-            _pm_month_of,
-            touched,
-            expected_parent=1,
-        )
-    if latest_version(loc) == 2:
-        compact_snapshot_commit(spark, loc, files=8, expected_parent=2)
-    return loc, 3
 
 
 @declare(
@@ -1310,7 +1343,7 @@ def table_changes_append(spark, sf_dir):
     is deterministic forever."""
     from database_importer_spark.operators.snapshot_table import read_changes
 
-    loc, _head = _feed_table(spark, sf_dir)
+    loc = _snap_table(spark, sf_dir, "feed")
     ch = read_changes(spark, loc, 0, 1, ["o_orderkey"])
     return ch.select("_change_type", *_SNAP_OUT_COLS, "_commit_version")
 
@@ -1346,7 +1379,8 @@ def table_changes_feed(spark, sf_dir):
     (version 2)."""
     from database_importer_spark.operators.snapshot_table import read_changes
 
-    loc, head = _feed_table(spark, sf_dir)
+    loc = _snap_table(spark, sf_dir, "feed")
+    head = len(_SNAP_SPECS["feed"].steps)
     ch = read_changes(spark, loc, 0, head, ["o_orderkey"])
     return ch.select("_change_type", *_SNAP_OUT_COLS, "_commit_version")
 
@@ -1385,23 +1419,15 @@ def table_changes_cursor(spark, sf_dir):
         apply_changes_commit,
         catalog_commit,
         create_cursor,
-        create_snapshot_table,
         cursor_entry,
         read_changes,
         read_snapshot,
         touched_partitions,
     )
 
-    loc, head = _feed_table(spark, sf_dir)
-    rloc = _snap_loc(spark, sf_dir, "replica")
-    create_snapshot_table(
-        spark,
-        rloc,
-        lambda: read_snapshot(spark, loc, version=0),
-        _PM_PART_COL,
-        "o_orderkey",
-        files=16,
-    )
+    loc = _snap_table(spark, sf_dir, "feed")
+    head = len(_SNAP_SPECS["feed"].steps)
+    rloc = _snap_table(spark, sf_dir, "replica")
     create_cursor(loc, "replica", version=0)
     cat_loc = rloc + "_catalog"
     for _ in range(8):
@@ -1429,23 +1455,12 @@ def table_changes_cursor(spark, sf_dir):
                 },
             )
     # warm path after convergence = full replica readback of an
-    # immutable version: static session + frame cache (r9 pattern),
-    # keyed on the replica's version so any new apply invalidates.
-    from database_importer_spark.operators.snapshot_table import (
-        latest_version,
+    # immutable version; any new apply moves the version and misses.
+    return _snap_frame(
+        spark,
+        rloc,
+        lambda s, v: read_snapshot(s, rloc, version=v).select(*_SNAP_OUT_COLS),
     )
-    from database_importer_spark.session import static_plan_session
-
-    rv_now = latest_version(rloc)
-    cache = memo("replica_frame", spark)
-    ck = (rloc, rv_now)
-    df = cache.get(ck)
-    if df is None:
-        df = read_snapshot(
-            static_plan_session(spark), rloc, version=rv_now
-        ).select(*_SNAP_OUT_COLS)
-        cache[ck] = df
-    return df
 
 
 @declare(
@@ -1491,7 +1506,8 @@ def table_cursor_lag(spark, sf_dir):
         cursor_lag_report,
     )
 
-    loc, head = _feed_table(spark, sf_dir)
+    loc = _snap_table(spark, sf_dir, "feed")
+    head = len(_SNAP_SPECS["feed"].steps)
     create_cursor(loc, "analytics", version=head)
     create_cursor(loc, "ml_train", version=1)
     create_cursor(loc, "cold_start", version=0)
@@ -1511,39 +1527,6 @@ def table_cursor_lag(spark, sf_dir):
         "consumer string, position int, head int, versions_behind int, "
         "pending_commits int, pending_change_rows bigint",
     )
-
-
-_CC_MONTHS = [
-    ("1997-01-01", "1997-02-01", "1997-01-15"),
-    ("1997-02-01", "1997-03-01", "1997-02-15"),
-    ("1997-03-01", "1997-04-01", "1997-03-15"),
-]
-
-
-def _feedc_table(spark, sf_dir):
-    """The change-file-compaction fixture: a cdf table accumulating
-    one materialized change-file group per commit — v1/v2/v3 = three
-    month-batch merges (disjoint key sets), v4 = compact_changes over
-    the whole range. Every step expected_parent-guarded: N racing
-    processes build this exact chain once. Returns (loc, head=4)."""
-    from database_importer_spark.operators.snapshot_table import (
-        compact_changes_commit,
-        latest_version,
-        merge_snapshot_commit,
-    )
-
-    loc = _snap_create_named(spark, sf_dir, "feedc")
-    for i, (lo, hi, ins) in enumerate(_CC_MONTHS):
-        if latest_version(loc) == i:
-            batch = _pm_batch_df(spark, sf_dir, lo, hi, ins)
-            month = int(lo[:4]) * 100 + int(lo[5:7])
-            merge_snapshot_commit(
-                spark, loc, batch, ["o_orderkey"], _pm_month_of,
-                [month], expected_parent=i,
-            )
-    if latest_version(loc) == 3:
-        compact_changes_commit(spark, loc, 0, 3, expected_parent=3)
-    return loc, 4
 
 
 @declare(
@@ -1576,7 +1559,8 @@ def table_changes_compacted(spark, sf_dir):
         read_changes,
     )
 
-    loc, head = _feedc_table(spark, sf_dir)
+    loc = _snap_table(spark, sf_dir, "feedc")
+    head = len(_SNAP_SPECS["feedc"].steps)
     ch = read_changes(spark, loc, 0, head, ["o_orderkey"])
     return ch.select("_change_type", *_SNAP_OUT_COLS, "_commit_version")
 
@@ -1612,8 +1596,6 @@ def table_vacuum_retention(spark, sf_dir):
     path is exercised for real without racing peers."""
     from database_importer_spark.operators.snapshot_table import (
         create_tag,
-        latest_version,
-        merge_snapshot_commit,
         read_snapshot,
         vacuum_snapshot,
     )
@@ -1621,16 +1603,10 @@ def table_vacuum_retention(spark, sf_dir):
     import os
 
     fp = fingerprint(os.path.join(sf_dir, "orders.parquet"))
-    loc = os.path.join(scratch_dir(f"vret_{fp}"), "tbl")
-    _snap_create_at(spark, sf_dir, loc)
+    loc = _snap_table(
+        spark, sf_dir, "vret", loc=os.path.join(scratch_dir(f"vret_{fp}"), "tbl")
+    )
     create_tag(loc, "audit_v0", version=0)
-    for parent in (0, 1):
-        if latest_version(loc) == parent:
-            batch, touched = _snap_batch_touched(spark, sf_dir)
-            merge_snapshot_commit(
-                spark, loc, batch, ["o_orderkey"], _pm_month_of,
-                touched, expected_parent=parent,
-            )
     vacuum_snapshot(loc, keep_latest=1)
     return read_snapshot(spark, loc, ref="audit_v0").select(
         *_SNAP_OUT_COLS
@@ -1712,52 +1688,20 @@ def catalog_multi_table_txn(spark, sf_dir):
     from database_importer_spark.operators.snapshot_table import (
         catalog_commit,
         catalog_latest,
-        create_snapshot_table,
         latest_version,
         load_catalog,
-        merge_snapshot_commit,
         read_snapshot,
-        read_snapshot_keyrange,
     )
 
-    # 1. DETAIL table: create-once v0 = orders (+o_month), v1 = the
-    #    month-batch merge (expected_parent: one racer lands it).
-    dloc = _snap_create_named(spark, sf_dir, "catd")
-    if latest_version(dloc) == 0:
-        batch, touched = _snap_batch_touched(spark, sf_dir)
-        merge_snapshot_commit(
-            spark, dloc, batch, ["o_orderkey"], _pm_month_of, touched,
-            expected_parent=0,
-        )
+    # 1. DETAIL table: v0 = orders (+o_month), v1 = the month-batch
+    #    merge.
+    dloc = _snap_table(spark, sf_dir, "catd")
     dv = latest_version(dloc)
 
     # 2. SUMMARY table: v0 = rollup of detail@v0; v1 = the touched
     #    months re-aggregated from detail@dv (manifest-pruned read —
     #    summary maintenance costs |touched|, never |table|).
-    sloc = _snap_loc(spark, sf_dir, "cats")
-    assert _SNAP_CONTRACT["cats"] == (4, False)
-
-    def s_src():
-        base = _cat_summary_agg(read_snapshot(spark, dloc, version=0))
-        return base.withColumn("o_year", _cat_year_of(base))
-
-    create_snapshot_table(
-        spark, sloc, s_src, "o_year", "o_month", files=4
-    )
-    if latest_version(sloc) == 0:
-        months = list(_PM_TOUCHED)
-        tslice = read_snapshot_keyrange(
-            spark, dloc, _PM_PART_COL, months[0], months[-1], version=dv
-        ).filter(F.col(_PM_PART_COL).isin(months))
-        merge_snapshot_commit(
-            spark,
-            sloc,
-            _cat_summary_agg(tslice),
-            ["o_month"],
-            _cat_year_of,
-            sorted({m // 100 for m in months}),
-            expected_parent=0,
-        )
+    sloc = _snap_table(spark, sf_dir, "cats")
     sv = latest_version(sloc)
 
     # 3. The transaction COMMIT: one catalog entry binding both
@@ -1799,35 +1743,6 @@ def catalog_multi_table_txn(spark, sf_dir):
     )
 
 
-_REPL_YEAR = 1996
-
-
-def _repl_table(spark, sf_dir):
-    """The REPLACE fixture: v0 = full orders, v1 = one atomic
-    full-content REPLACE with the {_REPL_YEAR} slice (CAS-guarded on
-    expected_parent — exactly one racer lands it, later invocations
-    observe the chain done). Both replace keys read immutable
-    versions of this chain, so they are deterministic forever."""
-    from database_importer_spark.operators.snapshot_table import (
-        latest_version,
-        replace_snapshot_commit,
-    )
-
-    loc = _snap_create_named(spark, sf_dir, "repl")
-    if latest_version(loc) == 0:
-        o = t(spark, sf_dir, "orders").filter(
-            F.year("o_orderdate") == _REPL_YEAR
-        )
-        replace_snapshot_commit(
-            spark,
-            loc,
-            o.withColumn(_PM_PART_COL, _pm_month_of(o)),
-            files=4,
-            expected_parent=0,
-        )
-    return loc
-
-
 @declare(
     "table_replace_overwrite",
     oracle=f"""
@@ -1854,7 +1769,7 @@ def table_replace_overwrite(spark, sf_dir):
     visible."""
     from database_importer_spark.operators.snapshot_table import read_snapshot
 
-    loc = _repl_table(spark, sf_dir)
+    loc = _snap_table(spark, sf_dir, "repl")
     return read_snapshot(spark, loc, version=1).select(*_SNAP_OUT_COLS)
 
 
@@ -1886,7 +1801,7 @@ def table_changes_replace(spark, sf_dir):
     the replace fixture — deterministic forever."""
     from database_importer_spark.operators.snapshot_table import read_changes
 
-    loc = _repl_table(spark, sf_dir)
+    loc = _snap_table(spark, sf_dir, "repl")
     ch = read_changes(spark, loc, 0, 1, ["o_orderkey"])
     return ch.select("_change_type", *_SNAP_OUT_COLS, "_commit_version")
 
@@ -1917,65 +1832,16 @@ def table_partition_evolution(spark, sf_dir):
     stats-based design makes it free here (a path-based partitioner
     would re-layout). inputFiles-pinned in tests; hash-matched
     against the year slice."""
-    from database_importer_spark.operators.snapshot_table import (
-        append_snapshot_commit,
-        create_snapshot_table,
-        evolve_partition_spec,
-        latest_version,
-        read_snapshot,
-    )
+    from database_importer_spark.operators.snapshot_table import read_snapshot
 
-    loc = _snap_loc(spark, sf_dir, "pspec")
-    cutoff = F.lit(_INC_CUTOFF).cast("timestamp")
-
-    def src():
-        o = t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
-        o = o.withColumn(_PM_PART_COL, _pm_month_of(o))
-        return o.withColumn("o_year", F.year("o_orderdate").cast("int"))
-
-    create_snapshot_table(
+    loc = _snap_table(spark, sf_dir, "pspec")
+    return _snap_frame(
         spark,
         loc,
-        src,
-        _PM_PART_COL,
-        "o_orderkey",
-        files=16,
-        stats_cols=["o_year"],
+        lambda s, v: read_snapshot(s, loc, version=v, part_values=[1998])
+        .filter(F.col("o_year") == 1998)
+        .select(*_SNAP_OUT_COLS),
     )
-    evolve_partition_spec(spark, loc, "o_year")
-    if latest_version(loc) == 1:
-        d = t(spark, sf_dir, "orders").filter(F.col("o_orderdate") >= cutoff)
-        d = d.withColumn(_PM_PART_COL, _pm_month_of(d)).withColumn(
-            "o_year", F.year("o_orderdate").cast("int")
-        )
-        # files=8 > |distinct years in the slice| (the scaled corpora
-        # shift replicated dates past 1998): the post-evolution range
-        # clustering is on o_year alone, so the partitioner can emit
-        # at most one file per year — 8 slots make every appended file
-        # YEAR-PURE and the pruned read decodes only the asked year
-        # (files=2 coalesced 1998+1999 into one 4.5M-row file whose
-        # residual filter discarded half of what it decoded).
-        append_snapshot_commit(spark, loc, d, files=8, expected_parent=1)
-    # fixed-shape map-only read of an immutable snapshot: static
-    # session (no AQE wrapper) + frame cache per (table, version) —
-    # the r9 point-lookup warm path; version in the key invalidates
-    # on commits.
-    from database_importer_spark.session import static_plan_session
-
-    v = latest_version(loc)
-    cache = memo("pspec_frame", spark)
-    ck = (loc, v)
-    df = cache.get(ck)
-    if df is None:
-        df = (
-            read_snapshot(
-                static_plan_session(spark), loc, version=v, part_values=[1998]
-            )
-            .filter(F.col("o_year") == 1998)
-            .select(*_SNAP_OUT_COLS)
-        )
-        cache[ck] = df
-    return df
 
 
 @declare(
@@ -2008,6 +1874,7 @@ def upsert_merge_commit_only(spark, sf_dir):
         commit_added_entries,
         load_manifest,
         merge_snapshot_commit,
+        read_snapshot,
     )
     from database_importer_spark.operators.snapshot_table import (
         _read_with_deletes,
@@ -2021,8 +1888,9 @@ def upsert_merge_commit_only(spark, sf_dir):
     # own immutable v0, manifest-pruned to the month (the staging
     # shape: |month| derivation cost, no per-merge source rescan), and
     # its touched set is the statically-known batch month.
-    loc = _snap_create_named(spark, sf_dir, "cm")
-    batch = _pm_batch_from_v0(spark, sf_dir, loc)
+    loc = _snap_table(spark, sf_dir, "cm")
+    v0_month = read_snapshot(spark, loc, version=0, part_values=_PM_TOUCHED)
+    batch = _pm_batch_df(spark, sf_dir, v0_month)
     touched = list(_PM_TOUCHED)
     v = merge_snapshot_commit(
         spark, loc, batch, ["o_orderkey"], _pm_month_of, touched
@@ -2072,59 +1940,19 @@ def table_point_lookup_pruned(spark, sf_dir):
     the pruning stays sharp as the table mutates. inputFiles-pinned
     in tests/test_snapshot_table.py."""
     from database_importer_spark.operators.snapshot_table import (
-        create_snapshot_table,
-        latest_version,
         read_snapshot_keyrange,
     )
-    from database_importer_spark.session import static_plan_session
 
-    loc = _snap_loc(spark, sf_dir, "ptl")
-
-    def src():
-        o = t(spark, sf_dir, "orders")
-        return o.withColumn(_PM_PART_COL, _pm_month_of(o))
-
-    # files=64: pruning granularity. At sf10 a 16-file layout writes
-    # ~55 MB single-row-group files — the BETWEEN residual then decodes
-    # the whole surviving file because there is no row group to prune
-    # INSIDE it; 64 files ≈ 4x less data behind the one file the
-    # manifest keeps (at real scale: size files to the row-group
-    # budget you want lookups to pay — here each small file IS one
-    # row group, so file granularity is row-group granularity).
-    # files=128 measured a WASH vs 64 in alternated cross-process A/B
-    # at sf10 (0.087-0.122 both: the residual is the noop-sink +
-    # scheduling constant, not scan bytes) — don't re-chase.
-    create_snapshot_table(
+    loc = _snap_table(spark, sf_dir, "ptl")
+    return _snap_frame(
         spark,
         loc,
-        src,
-        _PM_PART_COL,
-        files=64,
-        sort_cols=["o_orderkey"],
-        stats_cols=["o_orderkey"],
+        lambda s, v: read_snapshot_keyrange(
+            s, loc, "o_orderkey", _PTL_LO, _PTL_HI, version=v
+        ).select(*_SNAP_OUT_COLS),
+        _PTL_LO,
+        _PTL_HI,
     )
-    # fixed-shape map-only read: the AQE wrapper is pure scheduling
-    # cost here (the r5 static-session lever), and the built frame is
-    # CACHED per (table, version, range) — a snapshot's plan is
-    # immutable, so re-invocations skip the ~0.1 s of py4j plan
-    # construction entirely (the r6 constant-removal class; same
-    # pattern as the layout reader caches). The version in the key
-    # invalidates if the table ever gains commits.
-    v = latest_version(loc)
-    cache = memo("ptl_frame", spark)
-    ck = (loc, v, _PTL_LO, _PTL_HI)
-    df = cache.get(ck)
-    if df is None:
-        df = read_snapshot_keyrange(
-            static_plan_session(spark),
-            loc,
-            "o_orderkey",
-            _PTL_LO,
-            _PTL_HI,
-            version=v,
-        ).select(*_SNAP_OUT_COLS)
-        cache[ck] = df
-    return df
 
 
 @declare("sink_jdbc_live_merge", oracle=_UPSERT_ORACLE)

@@ -238,13 +238,13 @@ def stream_snapshot_ingest(spark, sf_dir):
         _SNAP_OUT_COLS,
         _pm_batch_df,
         _pm_month_of,
-        _snap_create_named,
+        _snap_table,
     )
     from database_importer_spark.streaming.upsert import (
         streaming_snapshot_ingest,
     )
 
-    loc = _snap_create_named(spark, sf_dir, "upsert")
+    loc = _snap_table(spark, sf_dir, "upsert", upto=0)
     streaming_snapshot_ingest(
         spark, loc, _pm_batch_df(spark, sf_dir), ["o_orderkey"],
         _pm_month_of, batches=4, cursor="ingest",

@@ -6,6 +6,8 @@ aggregation, top-k without a global sort.
 These are the '.explain and iterate' guarantees, frozen as tests.
 """
 
+import re
+
 import pytest
 
 from database_importer_spark.plans import REGISTRY
@@ -367,14 +369,49 @@ def test_exact_dedup_shuffles_digest_not_payload(spark):
     assert plan.count("HashAggregate") >= 2
 
 
+def _blocked_join_violations(plan: str) -> list[str]:
+    """A blocked candidate join is an equi join on block_and_verify's
+    stacked (__key, __blk) columns and nothing else: every join in the
+    formatted ``plan`` must key on exactly those, and none may be a
+    nested-loop or cartesian product."""
+    out = [n for n in ("CartesianProduct", "BroadcastNestedLoopJoin") if n in plan]
+    sides = [
+        sorted(re.sub(r"#\d+L?", "", k).strip() for k in m.group(1).split(","))
+        for m in re.finditer(r"^(?:Left|Right) keys \[\d+\]: \[(.*)\]$", plan, re.M)
+    ]
+    if not sides:
+        out.append("no equi join")
+    out += [f"join keys {k}" for k in sides if k != ["__blk", "__key"]]
+    return out
+
+
 def test_embedding_dedup_is_blocked_not_allpairs(spark):
     """llm_dedup_embedding must candidate-generate via the LSH
     equi join on (table, bucket) — never a cross join of the
     embedding table against itself."""
-    plan = explain(spark, "llm_dedup_embedding")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert _blocked_join_violations(explain(spark, "llm_dedup_embedding")) == []
+
+
+def test_blocked_join_guard_flags_seeded_cross_join(spark):
+    """Negative control: an all-pairs cross join that keeps a column
+    named like a bucket must fail the guard."""
+    from pyspark.sql import functions as F
+
+    e = spark.range(8).select(F.col("id"), (F.col("id") % 2).alias("bucket"))
+    df = e.alias("a").crossJoin(e.alias("b")).filter(F.col("a.id") < F.col("b.id"))
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
     assert "bucket" in plan
+    assert _blocked_join_violations(plan) == ["BroadcastNestedLoopJoin", "no equi join"]
+
+
+def test_near_incremental_verify_reads_each_side_once(spark):
+    """llm_dedup_near_incremental's Jaccard verify joins batch ids to
+    the batch shingles and corpus ids to the corpus shingles; neither
+    join-back scans a union of both sides."""
+    df = REGISTRY["llm_dedup_near_incremental"].fn(spark, SF)
+    assert "Union" not in df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def test_no_single_partition_window_on_fact_plans(spark):

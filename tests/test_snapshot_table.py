@@ -626,9 +626,9 @@ def test_vacuum_retires_unreferenced_history(spark, tmp_path):
 def test_declared_prune_read_is_file_pruned(spark):
     """The declared pruned-read key hands the engine strictly fewer
     files than the full snapshot (manifest metadata pruning)."""
-    from database_importer_spark.plans.part_a import _snap_ensure_merged
+    from database_importer_spark.plans.part_a import _snap_table
 
-    loc, touched = _snap_ensure_merged(spark, SF)
+    loc = _snap_table(spark, SF, "upsert")
     v = st.latest_version(loc)
     _m, all_files = st.snapshot_files(loc, v)
     pruned_df = REGISTRY["table_snapshot_prune_read"].fn(spark, SF)
@@ -653,10 +653,10 @@ def _month_prewrite(spark):
     from database_importer_spark.plans.part_a import (
         _pm_month_of,
         _snap_batch_touched,
-        _snap_create_named,
+        _snap_table,
     )
 
-    loc = _snap_create_named(spark, SF, "pm")
+    loc = _snap_table(spark, SF, "pm")
     batch, touched = _snap_batch_touched(spark, SF)
     return (loc,) + st.merge_snapshot_prewrite(
         spark, loc, batch, ["o_orderkey"], _pm_month_of, touched
@@ -1321,11 +1321,11 @@ def test_expected_parent_guards_build_deterministic_chain(spark, tmp_path):
 def test_declared_feed_chain_is_deterministic(spark):
     """The feed fixture builds exactly v0..v3 (create/append/merge/
     compact) and re-invocation never extends the chain."""
-    from database_importer_spark.plans.part_a import _feed_table
+    from database_importer_spark.plans.part_a import _SNAP_SPECS, _snap_table
 
-    loc, head = _feed_table(spark, SF)
+    loc, head = _snap_table(spark, SF, "feed"), len(_SNAP_SPECS["feed"].steps)
     assert head == 3 and st.latest_version(loc) == 3
-    loc2, _ = _feed_table(spark, SF)
+    loc2 = _snap_table(spark, SF, "feed")
     assert loc2 == loc and st.latest_version(loc) == 3
     ops = [
         st.load_manifest(loc, v).get("commit", {}).get("op")
@@ -1721,21 +1721,102 @@ def test_delete_ref_kind_disambiguation(spark, tmp_path):
         st.delete_ref(loc, "x", kind="bogus")
 
 
-def test_snap_loc_contract_token_mints_fresh_table(spark):
-    """ADVICE r10: the declared tables' creation contract (files/cdf)
-    is part of the directory name — flipping a contract can never
-    silently reuse a stale table under the create-once rule."""
-    from database_importer_spark.plans.part_a import (
-        _SNAP_CONTRACT,
-        _snap_loc,
-    )
+def test_snap_loc_contract_token_mints_fresh_table(spark, monkeypatch):
+    """A declared table's directory carries a digest of its WHOLE spec:
+    flipping any one field, source filter, step or step argument mints
+    a fresh location, so the create-once rule can never silently reuse
+    a stale table; an unchanged spec keeps its location. A table built
+    from another declared table moves with it."""
+    from database_importer_spark.plans import part_a as P
 
-    assert _snap_loc(spark, SF, "cdc").endswith("_f16c")
-    assert _snap_loc(spark, SF, "feed").endswith("_f72c")
-    assert _snap_loc(spark, SF, "ptl").endswith("_f64")
-    # every declared name resolves through the authoritative map
-    for name in _SNAP_CONTRACT:
-        assert f"_snap_{name}_" in _snap_loc(spark, SF, name)
+    specs = dict(P._SNAP_SPECS)
+    for name in specs:
+        assert f"_snap_{name}_" in P._snap_loc(spark, SF, name)
+    before = {name: P._snap_loc(spark, SF, name) for name in specs}
+    feed_steps = specs["feed"].steps
+    flips = {
+        "files": ("cdc", {"files": 17}),
+        "cdf": ("cdc", {"cdf": False}),
+        "part": ("cats", {"part": "o_month"}),
+        "cluster": ("ptl", {"cluster": "o_orderkey"}),
+        "sort_cols": ("ptl", {"sort_cols": ("o_custkey",)}),
+        "stats_cols": ("pspec", {"stats_cols": ()}),
+        "v0 filter": ("inc", {"src": ("orders", ("<", "1997-01-01"))}),
+        "v0 source": ("replica", {"src": ("snapshot", "feed", 1)}),
+        "step": ("feed", {"steps": feed_steps[:2]}),
+        "step order": ("feed", {"steps": feed_steps[1::-1] + feed_steps[2:]}),
+        "step argument": ("feed", {"steps": feed_steps[:2] + (("compact", 9),)}),
+        "merge month": (
+            "upsert",
+            {"steps": (("merge", "1997-04-01", "1997-05-01", "1997-04-15"),)},
+        ),
+    }
+    for what, (name, fields) in flips.items():
+        monkeypatch.setitem(P._SNAP_SPECS, name, specs[name]._replace(**fields))
+        assert P._snap_loc(spark, SF, name) != before[name], what
+        monkeypatch.setitem(P._SNAP_SPECS, name, specs[name])
+    # a derived table moves with its source table's spec
+    monkeypatch.setitem(P._SNAP_SPECS, "feed", specs["feed"]._replace(files=71))
+    assert P._snap_loc(spark, SF, "replica") != before["replica"]
+    monkeypatch.setitem(P._SNAP_SPECS, "feed", specs["feed"])
+    # re-evaluating an unchanged (even rebuilt-equal) spec is stable
+    monkeypatch.setitem(P._SNAP_SPECS, "feed", P._Spec(*specs["feed"]))
+    assert {name: P._snap_loc(spark, SF, name) for name in specs} == before
+
+
+def _snap_protocol_violations(sources):
+    """Sites in the plans that create a snapshot table or pass
+    expected_parent outside _snap_table, the one runner of the
+    declared tables' create-once + CAS-chain protocol."""
+    out = []
+    for rel, src in sorted(sources.items()):
+        tree = ast.parse(src)
+        inside = {
+            id(n)
+            for f in ast.walk(tree)
+            if isinstance(f, ast.FunctionDef) and f.name == "_snap_table"
+            for n in ast.walk(f)
+        }
+        for n in ast.walk(tree):
+            if id(n) in inside or not isinstance(n, ast.Call):
+                continue
+            fn = getattr(n.func, "id", getattr(n.func, "attr", None))
+            if fn == "create_snapshot_table":
+                out.append(f"{rel}:{n.lineno}: create_snapshot_table(")
+            if any(k.arg == "expected_parent" for k in n.keywords):
+                out.append(f"{rel}:{n.lineno}: expected_parent=")
+    return out
+
+
+def _plans_sources():
+    out = {}
+    plans = os.path.join(os.path.dirname(os.path.dirname(st.__file__)), "plans")
+    for p in sorted(glob.glob(os.path.join(plans, "*.py"))):
+        with open(p) as f:
+            out[os.path.basename(p)] = f.read()
+    return out
+
+
+def test_declared_tables_built_only_by_snap_table():
+    assert _snap_protocol_violations(_plans_sources()) == []
+
+
+def test_snap_protocol_scan_flags_seeded_hand_chain():
+    sources = _plans_sources()
+    n = len(sources["part_a.py"].splitlines())
+    seeded = {
+        **sources,
+        "part_a.py": sources["part_a.py"]
+        + "\n\ndef _hand_table(spark, loc, batch):\n"
+        "    create_snapshot_table(spark, loc, lambda: batch, 'm')\n"
+        "    if latest_version(loc) == 0:\n"
+        "        merge_snapshot_commit(spark, loc, batch, ['k'], None, [0],\n"
+        "                              expected_parent=0)\n",
+    }
+    assert _snap_protocol_violations(seeded) == [
+        f"part_a.py:{n + 4}: create_snapshot_table(",
+        f"part_a.py:{n + 6}: expected_parent=",
+    ]
 
 
 def test_catalog_txn_two_process_race(spark, tmp_path):

@@ -95,11 +95,11 @@ def main() -> None:
         from database_importer_spark.plans.part_a import (
             _pm_month_of,
             _snap_batch_touched,
-            _snap_create_named,
+            _snap_table,
         )
 
         def prewrite(spark, sf_dir):
-            loc = _snap_create_named(spark, sf_dir, name)
+            loc = _snap_table(spark, sf_dir, name, upto=0)
             batch, touched = _snap_batch_touched(spark, sf_dir)
             return merge_snapshot_prewrite(
                 spark, loc, batch, ["o_orderkey"], _pm_month_of, touched

@@ -180,6 +180,22 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def _child_session(spark: SparkSession, attr: str, confs: dict) -> SparkSession:
+    """The child session of ``spark`` (``newSession``: shared
+    SparkContext and catalog, independent SQLConf) with ``confs`` set,
+    cached on both sessions under ``attr`` so it is built once and is
+    its own child."""
+    cached = getattr(spark, attr, None)
+    if cached is not None:
+        return cached
+    child = spark.newSession()
+    for k, v in confs.items():
+        child.conf.set(k, v)
+    setattr(child, attr, child)
+    setattr(spark, attr, child)
+    return child
+
+
 def static_plan_session(spark: SparkSession) -> SparkSession:
     """Child session (shared SparkContext, executors, and catalog —
     independent SQLConf) with adaptive execution DISABLED, for
@@ -206,14 +222,9 @@ def static_plan_session(spark: SparkSession) -> SparkSession:
     in either session are visible to both); builder-level configs
     (bucketed-scan ordering flag, parquet settings) are inherited
     from the SparkContext conf."""
-    cached = getattr(spark, "_dbis_static_child", None)
-    if cached is not None:
-        return cached
-    child = spark.newSession()
-    child.conf.set("spark.sql.adaptive.enabled", "false")
-    child._dbis_static_child = child  # idempotent: child of child = child
-    spark._dbis_static_child = child
-    return child
+    return _child_session(
+        spark, "_dbis_static_child", {"spark.sql.adaptive.enabled": "false"}
+    )
 
 
 def skew_plan_session(spark: SparkSession) -> SparkSession:
@@ -233,21 +244,18 @@ def skew_plan_session(spark: SparkSession) -> SparkSession:
     inherits the engine defaults — this is the one-knob-set a real
     cluster job would ship for a known-skewed shuffle join when the
     dim genuinely cannot broadcast."""
-    cached = getattr(spark, "_dbis_skew_child", None)
-    if cached is not None:
-        return cached
-    child = spark.newSession()
-    child.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    child.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    child.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    child.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    child.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "512k"
+    return _child_session(
+        spark,
+        "_dbis_skew_child",
+        {
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+            "spark.sql.adaptive.skewJoin.enabled": "true",
+            "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "512k",
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "512k",
+        },
     )
-    child.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "512k")
-    child._dbis_skew_child = child
-    spark._dbis_skew_child = child
-    return child
 
 
 def pushdown_plan_session(spark: SparkSession) -> SparkSession:
@@ -268,16 +276,14 @@ def pushdown_plan_session(spark: SparkSession) -> SparkSession:
     non-empty PushedAggregation) run here. AQE is off for the same
     reason as static_plan_session: a footer-stats aggregate has
     nothing to re-plan."""
-    cached = getattr(spark, "_dbis_pushdown_child", None)
-    if cached is not None:
-        return cached
-    child = spark.newSession()
-    child.conf.set("spark.sql.adaptive.enabled", "false")
-    # default list minus 'parquet' → parquet scans plan as V2 BatchScan
-    child.conf.set(
-        "spark.sql.sources.useV1SourceList", "avro,csv,json,kafka,orc,text"
+    return _child_session(
+        spark,
+        "_dbis_pushdown_child",
+        {
+            "spark.sql.adaptive.enabled": "false",
+            # default list minus 'parquet' → parquet scans plan as V2
+            # BatchScan
+            "spark.sql.sources.useV1SourceList": "avro,csv,json,kafka,orc,text",
+            "spark.sql.parquet.aggregatePushdown": "true",
+        },
     )
-    child.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    child._dbis_pushdown_child = child
-    spark._dbis_pushdown_child = child
-    return child

@@ -2089,3 +2089,184 @@ def test_declared_vacuum_retention_converges(spark):
     assert f"dbis_scratch_p{os.getpid()}" in (
         df2.inputFiles()[0] if df2.inputFiles() else ""
     )
+
+
+@pytest.fixture(scope="module")
+def vacuumed_chain(spark, tmp_path_factory):
+    """A table at head v3 whose v1 and v2 were retired by vacuum (v0
+    stays pinned by the cursor ``c``), plus a cursor ``ahead`` whose
+    entry names v5, past the head."""
+    loc = _mk_table(spark, tmp_path_factory.mktemp("chain"))
+    st.create_cursor(loc, "c", version=0)
+    for i in range(3):
+        st.append_snapshot_commit(
+            spark,
+            loc,
+            spark.createDataFrame([(100 + i, "a", 10)], "k int, val string, m int"),
+        )
+    assert st.vacuum_snapshot(loc, keep_latest=1)[0] == 2
+    st.create_cursor(loc, "ahead", version=3)
+    st._publish(
+        os.path.join(st._refs_dir(loc, "cursors"), "ahead", "r00000001.json"),
+        {"version": 5},
+    )
+    return loc
+
+
+_RANGE_READS = {
+    "read_changes": lambda spark, loc, a, b: st.read_changes(spark, loc, a, b, ["k"]),
+    "read_incremental": lambda spark, loc, a, b: st.read_incremental(spark, loc, a, b),
+    "incremental_entries": lambda spark, loc, a, b: st.incremental_entries(loc, a, b),
+    "commit_added_entries": lambda spark, loc, a, b: st.commit_added_entries(loc, b),
+    "cursor_lag_report": lambda spark, loc, a, b: st.cursor_lag_report(
+        loc, ["c" if b == 3 else "ahead"]
+    ),
+}
+
+
+@pytest.mark.parametrize("read", sorted(_RANGE_READS))
+def test_range_reads_tell_unknown_from_retired_versions(
+    spark, vacuumed_chain, read
+):
+    """Every history read resolves versions through one resolver: a
+    version past the head is unknown (FileNotFoundError "no version"),
+    a version below it whose manifest vacuum deleted is retired."""
+    fn, loc = _RANGE_READS[read], vacuumed_chain
+    with pytest.raises(FileNotFoundError, match="no version v5"):
+        fn(spark, loc, 3, 5)
+    with pytest.raises(ValueError, match="retired by vacuum"):
+        fn(spark, loc, 0, 3)
+
+
+@pytest.mark.parametrize("cdf", [False, True])
+def test_free_ops_skip_evolution_in_changes_and_lag(spark, tmp_path, cdf):
+    """merge, evolve_partition_spec, merge: the change feed over the
+    whole range is the union of the two merge steps read alone, and
+    the lag report counts two pending commits — the evolution is free
+    in both by the same op vocabulary."""
+    loc = str(tmp_path / "tbl")
+
+    def src():
+        df = spark.range(40).select(
+            F.col("id").cast("int").alias("k"),
+            F.concat(F.lit("v"), F.col("id")).alias("val"),
+        )
+        df = df.withColumn("m", F.floor(F.col("k") / 10).cast("int"))
+        return df.withColumn("g", F.floor(F.col("k") / 20).cast("int"))
+
+    st.create_snapshot_table(
+        spark, loc, src, "m", "k", files=4, stats_cols=["g"], cdf=cdf
+    )
+    st.create_cursor(loc, "c", version=0)
+    st.merge_snapshot_commit(
+        spark, loc, _batch(spark, [(5, "A"), (15, "B")]), ["k"], _part_of, [0, 1]
+    )
+    assert st.evolve_partition_spec(spark, loc, "g") == 2
+    st.merge_snapshot_commit(
+        spark,
+        loc,
+        _batch(spark, [(6, "C"), (25, "D")]),
+        ["k"],
+        lambda df: F.floor(F.col("k") / 20).cast("int"),
+        [0, 1],
+    )
+    assert _ch_rows(spark, loc, 0, 3) == sorted(
+        _ch_rows(spark, loc, 0, 1) + _ch_rows(spark, loc, 2, 3)
+    )
+    assert len(_ch_rows(spark, loc, 0, 3)) == 8
+    (rep,) = st.cursor_lag_report(loc, ["c"])
+    assert (rep["versions_behind"], rep["pending_commits"]) == (3, 2)
+
+
+_ENTRY_STATS_OK = {"_entry_range", "_file_entries", "evolve_partition_spec"}
+
+
+def _read_path_violations(src: str) -> list[str]:
+    """Sites of snapshot_table.py that re-implement the read path
+    outside its one mechanism per concern: a ``m["parent"] != v - 1``
+    chain check outside ``_history``, an ``except FileNotFoundError``
+    around ``load_manifest`` outside ``_manifest``, and a read of an
+    entry's ``["min"]``/``["max"]`` (or ``.get("min")``) outside
+    ``_entry_range`` (the pruning rule's input), ``_file_entries``
+    (writes) and ``evolve_partition_spec`` (migration)."""
+    out = []
+
+    def const(node):
+        return getattr(node, "value", None) if isinstance(node, ast.Constant) else None
+
+    def calls_load_manifest(nodes):
+        return any(
+            isinstance(n, ast.Call)
+            and getattr(n.func, "id", getattr(n.func, "attr", None))
+            == "load_manifest"
+            for s in nodes
+            for n in ast.walk(s)
+        )
+
+    for top in ast.parse(src).body:
+        name = getattr(top, "name", None)
+        for n in ast.walk(top):
+            if (
+                isinstance(n, ast.Compare)
+                and isinstance(n.left, ast.Subscript)
+                and const(n.left.slice) == "parent"
+                and any(isinstance(op, ast.NotEq) for op in n.ops)
+                and name != "_history"
+            ):
+                out.append(f"{name}:{n.lineno}: chain check")
+            if (
+                isinstance(n, ast.Try)
+                and calls_load_manifest(n.body)
+                and any(
+                    "FileNotFoundError" in ast.dump(h.type or ast.Name(""))
+                    for h in n.handlers
+                )
+                and name != "_manifest"
+            ):
+                out.append(f"{name}:{n.lineno}: except FileNotFoundError")
+            key = None
+            if isinstance(n, ast.Subscript) and isinstance(n.ctx, ast.Load):
+                key = const(n.slice)
+            elif (
+                isinstance(n, ast.Call)
+                and getattr(n.func, "attr", None) == "get"
+                and n.args
+            ):
+                key = const(n.args[0])
+            if key in ("min", "max") and name not in _ENTRY_STATS_OK:
+                out.append(f'{name}:{n.lineno}: reads ["{key}"]')
+    return out
+
+
+def _snapshot_table_source() -> str:
+    with open(st.__file__) as f:
+        return f.read()
+
+
+def test_one_resolver_one_pruning_rule_one_history_walk():
+    assert _read_path_violations(_snapshot_table_source()) == []
+
+
+def test_read_path_guard_flags_seeded_prune_loop_and_chain_walk():
+    src = _snapshot_table_source()
+    n = len(src.splitlines())
+    seeded = src + (
+        "\n\ndef _hand_prune(m, lo, hi):\n"
+        '    return [e for e in m["files"] if e["min"] is None or lo <= e["max"]]\n'
+        "\n\ndef _hand_walk(loc, a, b):\n"
+        "    for v in range(a + 1, b + 1):\n"
+        "        try:\n"
+        "            m = load_manifest(loc, v)\n"
+        "        except FileNotFoundError:\n"
+        "            raise ValueError('retired') from None\n"
+        '        if m["parent"] != v - 1:\n'
+        "            raise ValueError('broken chain')\n"
+    )
+    assert sorted(_read_path_violations(seeded)) == sorted(
+        [
+            f'_hand_prune:{n + 4}: reads ["min"]',
+            f'_hand_prune:{n + 4}: reads ["max"]',
+            f"_hand_walk:{n + 9}: except FileNotFoundError",
+            f"_hand_walk:{n + 13}: chain check",
+        ]
+    )

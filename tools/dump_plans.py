@@ -6,6 +6,7 @@ running this script.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -14,6 +15,15 @@ from database_importer_spark import get_spark  # noqa: E402
 from database_importer_spark.plans import REGISTRY  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
+
+# the 16-hex corpus fingerprint in layout and snapshot-table names
+# (``dbis_bkt_orders_<fp>_<tag>``): it changes with the corpus copy's
+# path and mtimes, so PLANS.md masks it to stay stable across copies
+_FINGERPRINT = re.compile(r"\b(dbis_(?:bkt|part|snap)_\w*?_)[0-9a-f]{16}(?=_)")
+
+
+def mask_fingerprints(text: str) -> str:
+    return _FINGERPRINT.sub(r"\1<fp>", text)
 
 ANNOTATED = {
     "scan_parquet_pushdown": "Filters + 4-column projection reach the parquet scan (PushedFilters / ReadSchema).",
@@ -135,7 +145,7 @@ def main() -> None:
         out.append("```")
         out.append("")
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
+        f.write(mask_fingerprints("\n".join(out)))
     print("wrote PLANS.md")
 
 

@@ -629,10 +629,13 @@ def _insert_arm(
     update arm joins — the target's keys first semi-probe it (target
     scanned, nothing shuffled, result ≤ |source|), and ``data`` antis
     that small matched-key set: two broadcast joins, the 100 TB side
-    never moves. Probing the SAME frame the update arm joins (not a
-    keys-only projection) lets AQE's exchange reuse build ONE hash
-    relation for both arms — measured 2.7 s → 2.4 s on the sf10 full
-    merge; a semi join only reads the build side's keys."""
+    never moves. The probe is NOT a shared hash relation: a semi join
+    reads only the build side's keys, so Catalyst prunes the probe's
+    side to the key columns and the batch broadcasts twice — the update
+    arm's ``BroadcastExchange`` with every column, the semi-probe's
+    with the keys — and the plan holds no ``ReusedExchange``. With the
+    matched-key set that makes three ``BroadcastExchange``s per merge
+    (pinned by tests/test_snapshot_table.py)."""
     other = target.selectExpr(*[_q(k) for k in keys])
     if probe is not None:
         other = F.broadcast(other.join(probe, keys, "left_semi"))

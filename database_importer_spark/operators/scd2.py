@@ -16,12 +16,12 @@ the hint silently dropped (HintErrorLogger) and the new-versions arm
 sort-merge-shuffled the whole dimension. With ``broadcast=True`` the
 plan is now three explicit broadcast joins and the dimension NEVER
 shuffles: current slice LEFT OUTER broadcast(updates) (close/carry +
-changed new versions), a key semi-probe of the SAME broadcast frame
-(≤|updates| rows, one AQE-shared hash relation), and updates
+changed new versions), a key semi-probe of the updates (≤|updates|
+rows; its broadcast is column-pruned to the keys, so it is a second
+``BroadcastExchange`` of the updates, not a reused one), and updates
 LEFT ANTI broadcast(matched keys) for brand-new keys. With
 ``broadcast=False`` the single full-outer scan is kept — the right
-shape when a bucketed layout supplies the join distribution
-(operators/merge.py full_outer strategy notes).
+shape when a bucketed layout supplies the join distribution.
 
 Change detection is null-safe (NOT (a <=> b)): NULL→value and
 value→NULL transitions are real changes.
@@ -151,10 +151,10 @@ def scd2_merge(
             [~curr[c].eqNullSafe(F.col(f"u_{c}")) for c in tracked],
         )
         # Brand-new keys without shuffling the dimension: semi-probe
-        # the SAME broadcast frame the left join builds (canonically
-        # identical subplan ⇒ AQE reuses one hash relation — the
-        # Merger insert-arm trick, operators/merge.py:342-370), then
-        # anti-join updates against that ≤|updates|-row key set. A
+        # the updates the left join builds on (the semi join reads
+        # only their keys, so this broadcast is a second, key-pruned
+        # one — the shape of Merger's insert arm, merge._insert_arm),
+        # then anti-join updates against that ≤|updates|-row key set. A
         # NULL business key in updates never semi-matches, so it
         # correctly falls through to a brand-new open version — the
         # same rows the old full-outer new_key arm produced.

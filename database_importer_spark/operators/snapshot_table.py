@@ -60,6 +60,7 @@ from pyspark.sql import types as T
 from database_importer_spark.cache import fingerprint, memo
 from database_importer_spark.operators.merge import Merger, _as, _insert_arm, _q
 from database_importer_spark.operators.partitioning import _layout_lock
+from database_importer_spark.session import parse_byte_conf
 
 _FORMAT = "dbis-snapshot/1"
 # optimistic-commit attempts before a writer gives up on a hot table
@@ -209,6 +210,50 @@ def _file_entries(
     return entries
 
 
+def _bin_bounds(
+    entries: list[dict], loc: str, col: str, part_col: str, max_bytes: int
+) -> list:
+    """The file layout of a merge write, planned on the driver from the
+    manifest alone: the lower bound on ``col`` of each bin (each bin is
+    at most one written file). The candidate ``entries`` are ordered by their
+    ``col`` range (``_entry_range``; entries with no range come first,
+    so they count toward bin 0) and packed in that order into bins of
+    at most ``max_bytes`` on-disk bytes. A bin starts only where the
+    lower bound rises, so bounds are strictly increasing. Bin 0 has no
+    lower bound (None): it takes every value below bin 1's, and the
+    last bin every value above its own, so the bins are disjoint,
+    contiguous ranges covering the whole domain — a batch value outside
+    every candidate lands in the adjacent bin."""
+    ranked = sorted(
+        ((*_entry_range(e, col, part_col), e["path"]) for e in entries),
+        key=lambda r: (r[0] is not None, *r),
+    )
+    bounds, size = [None], 0
+    for lo, _hi, path in ranked:
+        nbytes = os.path.getsize(os.path.join(loc, path))
+        if (
+            size
+            and size + nbytes > max_bytes
+            and lo is not None
+            and (bounds[-1] is None or lo > bounds[-1])
+        ):
+            bounds.append(lo)
+            size = 0
+        size += nbytes
+    return bounds
+
+
+def _bin_id(col: str, bounds: list):
+    """The partition id of a row under ``bounds`` (``_bin_bounds``): a
+    literal ``CASE WHEN col >= b_n THEN n … ELSE 0 END``. NULL goes to
+    bin 0."""
+    pid = None
+    for i in range(len(bounds) - 1, 0, -1):
+        hit = F.col(col) >= F.lit(bounds[i])
+        pid = F.when(hit, i) if pid is None else pid.when(hit, i)
+    return F.lit(0) if pid is None else pid.otherwise(0)
+
+
 def _write_commit_files(
     df: DataFrame,
     loc: str,
@@ -219,24 +264,35 @@ def _write_commit_files(
     subdir: str | None = None,
     sort_cols: list[str] | None = None,
     stats_cols: list[str] = (),
+    _bins: tuple[str, list] | None = None,
 ) -> list[dict]:
     """Write ``df`` as the data files of commit ``version`` and return
     their manifest entries, stamped with the commit SEQUENCE. Files go
-    under the attempt's ``_commit_dir`` (``subdir`` names a slice); the
-    layout is range-clustered on (partition column, cluster column) so
-    each file covers a CONTIGUOUS partition-value slice — tight footer
-    min/max = sharp manifest pruning (the r6 partitioned-layout law:
-    range placement gives fan-out AND sharp stats). ``files`` pins the
-    fan-out (an explicit repartition count bypasses AQE's small-
-    partition coalescing — needed when the table is small relative to
-    the advisory size but pruning granularity still matters); None
-    lets AQE size the files, the right default for merge slices.
-    ``sort_cols`` overrides the range-clustering columns entirely —
-    the table's declared SORT ORDER (Iceberg's write order): a table
-    point-looked-up by key clusters on the key, not the partition
-    column, so the key's per-file stats are sharp. ``stats_cols``
-    names the secondary columns whose footer min/max the manifest
-    entries carry (Iceberg per-column stats).
+    under the attempt's ``_commit_dir`` (``subdir`` names a slice).
+    Each file covers a CONTIGUOUS slice of the clustering column —
+    tight footer min/max = sharp manifest pruning (the r6
+    partitioned-layout law: range placement gives fan-out AND sharp
+    stats). The layout is either:
+
+    * PLANNED, when ``_bins`` = (column, lower bounds) is given: one
+      file per bin, rows placed by ``_bin_id`` through
+      ``repartitionById`` — no sampling job, and the layout is a pure
+      function of the bounds. Merge commits plan their bins from the
+      candidates' manifest ranges (``_bin_bounds``);
+    * SAMPLED otherwise: ``repartitionByRange`` on (partition column,
+      cluster column), or on ``sort_cols`` — the table's declared SORT
+      ORDER (Iceberg's write order: a table point-looked-up by key
+      clusters on the key, so the key's per-file stats are sharp).
+      Every other commit (create, append, compact, replace, the
+      slices of a DELETE) writes this way: the driver knows nothing of
+      how their input is distributed. ``files`` pins
+      the fan-out (an explicit count bypasses AQE's small-partition
+      coalescing — needed when the table is small relative to the
+      advisory size but pruning granularity still matters); None lets
+      AQE size the files.
+
+    ``stats_cols`` names the secondary columns whose footer min/max the
+    manifest entries carry (Iceberg per-column stats).
 
     Sequence numbers order data files against equality-delete files
     (the Iceberg rule): a delete with seq D applies to a data file
@@ -245,16 +301,14 @@ def _write_commit_files(
     key survives the read-side anti-join. Entries from manifests that
     predate this field default to seq 0 (oldest)."""
     commit_dir = _commit_dir(loc, version, sub=subdir)
-    if sort_cols:
-        cols = [F.col(c) for c in sort_cols]
+    if _bins is not None:
+        col, bounds = _bins
+        laid = df.repartitionById(len(bounds), _bin_id(col, bounds))
     else:
-        cols = [F.col(part_col)] + (
-            [F.col(cluster_col)] if cluster_col else []
-        )
-    head = [files] if files is not None else []
-    df.repartitionByRange(*head, *cols).write.mode("overwrite").parquet(
-        commit_dir
-    )
+        cols = sort_cols or [part_col] + ([cluster_col] if cluster_col else [])
+        head = [files] if files is not None else []
+        laid = df.repartitionByRange(*head, *map(F.col, cols))
+    laid.write.mode("overwrite").parquet(commit_dir)
     entries = _file_entries(commit_dir, loc, part_col, stats_cols)
     for e in entries:
         e["seq"] = version
@@ -819,8 +873,16 @@ def merge_snapshot_commit(
     def build(m, version):
         part_col = m["part_col"]
         candidates = pre["candidates"]
+        opts = _table_write_opts(m)
+        # the layout is planned from (manifest, batch) alone: bins of
+        # candidates on the table's first clustering column
+        col = (opts["sort_cols"] or [part_col])[0]
+        limit = parse_byte_conf(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        bins = _bin_bounds(candidates, loc, col, part_col, limit)
         new_files = _write_commit_files(
-            pre["out"], loc, version, part_col, **_table_write_opts(m)
+            pre["out"], loc, version, part_col, **opts, _bins=(col, bins)
         )
         fields = {"commit": {"op": "merge"}}
         dirs = [_commit_dir(loc, version)]

@@ -187,8 +187,10 @@ def _pandas_batch(spark, rows):
 
 def test_warm_in_memory_merge_commit_job_budget(spark, tmp_path):
     """A warm merge commit of an in-memory batch checks its keys on the
-    driver: the commit runs the write's jobs only (6 here, at most 7
-    allowed; with the key-check aggregate it ran 9)."""
+    driver and plans its file layout there: the commit runs 5 jobs —
+    three broadcasts, the shuffle map and the write. (With the
+    key-check aggregate it ran 9; with the range sampler's sketch and
+    re-sample jobs, 6-7.)"""
     loc = _mk_table(spark, tmp_path)
     for i, rows in enumerate(([(5, "a"), (15, "b")], [(6, "c"), (16, "d"), (105, "e")])):
         v, jobs = _jobs_during(
@@ -198,7 +200,7 @@ def test_warm_in_memory_merge_commit_job_budget(spark, tmp_path):
             ),
         )
         assert v == i + 1
-    assert jobs <= 7, jobs
+    assert jobs <= 5, jobs
     got = _state(spark, loc)
     assert got[16] == ("d", 1) and got[105] == ("e", 10) and len(got) == 41
 
@@ -216,6 +218,304 @@ def test_duplicate_keyed_in_memory_batch_publishes_nothing(spark, tmp_path):
         st.merge_snapshot_commit(spark, loc, batch, ["k"], _part_of, [1, 2])
     assert st.latest_version(loc) == head
     assert sorted(os.listdir(os.path.join(loc, "data"))) == dirs
+
+
+def _final_plan(df) -> str:
+    """The final (post-AQE) part of ``df``'s executed plan, without
+    the initial plan AQE prints after it."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_warm_merge_commit_broadcast_shape(spark, tmp_path, monkeypatch):
+    """The executed plan of a warm merge commit's write holds three
+    ``BroadcastExchange``s — the batch with every column (update arm),
+    the batch's keys (the insert arm's semi-probe, column-pruned) and
+    the matched-key set — and no ``ReusedExchange``: the two arms do
+    not share one hash relation (merge._insert_arm, scd2.py)."""
+    written = {}
+    write = st._write_commit_files
+
+    def spy(df, *args, **kw):
+        written.update(df=df, bins=kw.get("_bins"))
+        return write(df, *args, **kw)
+
+    monkeypatch.setattr(st, "_write_commit_files", spy)
+    loc = _mk_table(spark, tmp_path)
+    for rows in ([(5, "a"), (15, "b")], [(6, "c"), (16, "d"), (105, "e")]):
+        st.merge_snapshot_commit(
+            spark, loc, _pandas_batch(spark, rows), ["k"], _part_of, [0, 1, 10]
+        )
+    col, bounds = written["bins"]
+    laid = written["df"].repartitionById(len(bounds), st._bin_id(col, bounds))
+    assert len(laid.collect()) == 21
+    plan = _final_plan(laid)
+    assert plan.count("BroadcastExchange") == 3, plan
+    assert "ReusedExchange" not in plan, plan
+    assert "REPARTITION_BY_NUM" in plan and "rangepartitioning" not in plan
+
+
+def _gap_table(spark, tmp_path, cdf=False):
+    """Months m = (k // 10) * 10 over k in 0..59 without month 30: one
+    file per month, {0, 10, 20, 40, 50}."""
+    loc = str(tmp_path / ("gap_cdf" if cdf else "gap"))
+
+    def src():
+        df = spark.range(60).select(
+            F.col("id").cast("int").alias("k"),
+            F.concat(F.lit("v"), F.col("id")).alias("val"),
+        )
+        return df.withColumn("m", _gap_month(df)).filter("m != 30")
+
+    st.create_snapshot_table(spark, loc, src, "m", "k", files=5, cdf=cdf)
+    files = st.load_manifest(loc, 0)["files"]
+    assert sorted((e["min"], e["max"]) for e in files) == [
+        (m, m) for m in (0, 10, 20, 40, 50)
+    ]
+    return loc
+
+
+def _gap_month(df):
+    return (F.floor(F.col("k") / 10) * 10).cast("int")
+
+
+def _tiny_bins(spark):
+    """A child session whose advisory partition size puts every
+    candidate file in a bin of its own."""
+    child = spark.newSession()
+    child.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")
+    return child
+
+
+def _new_ranges(loc, version, col="m"):
+    m = st.load_manifest(loc, version)
+    return sorted(
+        st._entry_range(e, col, m["part_col"])
+        for e in m["files"]
+        if e["seq"] == version
+    )
+
+
+# one update in each candidate month (0, 20, 40) and one insert below
+# the lowest (-10), in the gap (30) and above the highest (100)
+_GAP_ROWS = [(5, "U5"), (25, "U25"), (45, "U45"), (-5, "I-5"), (35, "I35"), (105, "I105")]
+_GAP_TOUCHED = [-10, 0, 20, 30, 40, 100]
+
+
+def test_planned_bins_place_outside_values_in_adjacent_bin(spark, tmp_path):
+    """Candidates of months 0, 20 and 40 plan three bins with lower
+    bounds (none), 20 and 40. A batch month below the lowest candidate
+    (-10) lands in bin 0, one in the gap between candidates (30) in the
+    bin below it, one above the highest (100) in the last bin; the
+    written files' month ranges are disjoint and each is contiguous."""
+    loc = _gap_table(spark, tmp_path)
+    child = _tiny_bins(spark)
+    v = st.merge_snapshot_commit(
+        child, loc, _batch(child, _GAP_ROWS), ["k"], _gap_month, _GAP_TOUCHED
+    )
+    assert _new_ranges(loc, v) == [(-10, 0), (20, 30), (40, 100)]
+    got = _state(spark, loc)
+    assert len(got) == 53
+    assert got[35] == ("I35", 30) and got[-5] == ("I-5", -10)
+    assert got[45] == ("U45", 40) and got[41] == ("v41", 40)
+
+
+def test_bin_bounds_pack_entries_in_range_order(monkeypatch):
+    """Unit pins of the planner: bounds strictly increase, entries with
+    no range count toward bin 0, and equal lower bounds share a bin."""
+    entries = [
+        {"path": "a", "min": 20, "max": 25},
+        {"path": "b", "min": 0, "max": 9},
+        {"path": "c", "min": None, "max": None},
+        {"path": "d", "min": 20, "max": 22},
+        {"path": "e", "min": 40, "max": 40},
+    ]
+    monkeypatch.setattr(st.os.path, "getsize", lambda p: 10)
+    assert st._bin_bounds(entries, "/t", "m", "m", 1 << 20) == [None]
+    # c (no range) sorts first, into bin 0; a and d share bound 20
+    assert st._bin_bounds(entries, "/t", "m", "m", 1) == [None, 0, 20, 40]
+    assert st._bin_bounds(entries, "/t", "m", "m", 20) == [None, 20, 40]
+
+
+def test_planned_bin_id_maps_values_to_adjacent_bins(spark):
+    """A row's bin is the last lower bound at or below its value; a
+    value below every bound and NULL go to bin 0."""
+    df = spark.createDataFrame(
+        [(v,) for v in (-5, 0, 19, 20, 21, 39, 40, 99)] + [(None,)], "m int"
+    )
+    got = df.select("m", st._bin_id("m", [None, 20, 40]).alias("b")).collect()
+    assert {r["m"]: r["b"] for r in got} == {
+        -5: 0, 0: 0, 19: 0, 20: 1, 21: 1, 39: 1, 40: 2, 99: 2, None: 0
+    }
+    assert df.select(st._bin_id("m", [None]).alias("b")).distinct().collect()[0][0] == 0
+
+
+def test_planned_bins_use_first_sort_column(spark, tmp_path):
+    """A table that declares ``sort_cols=["k"]`` (months cycle through
+    every file) bins its merge write on k: the new files' k ranges are
+    the candidates' own, not month slices."""
+    loc = str(tmp_path / "sorted")
+
+    def src():
+        return spark.range(60).select(
+            F.col("id").cast("int").alias("k"),
+            F.concat(F.lit("v"), F.col("id")).alias("val"),
+            (F.col("id") % 3).cast("int").alias("m"),
+        )
+
+    st.create_snapshot_table(
+        spark, loc, src, "m", files=3, sort_cols=["k"], stats_cols=["k"]
+    )
+    assert _new_ranges(loc, 0, "k") == [(0, 19), (20, 39), (40, 59)]
+    child = _tiny_bins(spark)
+    rows = [(5, "U5"), (25, "U25"), (45, "U45")]
+    v = st.merge_snapshot_commit(
+        child, loc, _batch(child, rows), ["k"], lambda df: F.col("k") % 3, [0, 1, 2]
+    )
+    assert _new_ranges(loc, v, "k") == [(0, 19), (20, 39), (40, 59)]
+    assert _state(spark, loc)[25] == ("U25", 1)
+
+
+def test_multi_bin_cdf_merge_feed_unchanged(spark, tmp_path):
+    """On a ``cdf=True`` table a multi-bin merge still writes its
+    change files in the commit, and ``read_changes`` over them equals
+    the read-time diff of the same merge on a plain table."""
+    child = _tiny_bins(spark)
+    feeds = {}
+    for cdf in (True, False):
+        loc = _gap_table(spark, tmp_path, cdf=cdf)
+        v = st.merge_snapshot_commit(
+            child, loc, _batch(child, _GAP_ROWS), ["k"], _gap_month, _GAP_TOUCHED
+        )
+        assert len(_new_ranges(loc, v)) == 3
+        assert ("changes" in st.load_manifest(loc, v)) == cdf
+        feeds[cdf] = sorted(
+            (r["_change_type"], r["k"], r["val"], r["m"])
+            for r in st.read_changes(spark, loc, 0, v, ["k"]).collect()
+        )
+    assert feeds[True] == feeds[False]
+    assert [f for f in feeds[True] if f[0] == "insert"] == [
+        ("insert", -5, "I-5", -10),
+        ("insert", 35, "I35", 30),
+        ("insert", 105, "I105", 100),
+    ]
+    assert len(feeds[True]) == 9
+
+
+def test_merge_commit_never_samples_ranges(spark, tmp_path, monkeypatch):
+    """Nothing a merge commit runs calls ``repartitionByRange`` (its
+    sampler is a Spark job and seeds on the RDD id), on a plain and on
+    a ``cdf=True`` table. The spy is on pyspark's classic DataFrame,
+    the class session frames are instances of."""
+    from pyspark.sql.classic.dataframe import DataFrame as Classic
+
+    for cdf in (False, True):
+        loc = _gap_table(spark, tmp_path, cdf=cdf)
+        monkeypatch.setattr(Classic, "repartitionByRange", _no_sampling)
+        v = st.merge_snapshot_commit(
+            spark, loc, _batch(spark, _GAP_ROWS), ["k"], _gap_month, _GAP_TOUCHED
+        )
+        monkeypatch.undo()
+        assert v == 1
+
+
+def _no_sampling(*_args, **_kw):
+    raise AssertionError("repartitionByRange called")
+
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Updates every 50th key of the table at argv[1] in a copy of it
+# (argv[2]), after argv[3] rounds of unrelated jobs and RDDs, and
+# prints the new entries.
+_DETERMINISM_PROG = """
+import json, shutil, sys
+from pyspark.sql import functions as F
+from database_importer_spark import get_spark
+from database_importer_spark.operators import snapshot_table as st
+
+spark = get_spark("determinism", shuffle_partitions=4)
+for i in range(int(sys.argv[3])):
+    spark.sparkContext.parallelize(range(100), 3).map(lambda x: x * i).count()
+    spark.range(i + 10).selectExpr("sum(id)").collect()
+shutil.copytree(sys.argv[1], sys.argv[2])
+child = spark.newSession()
+# every candidate file is larger than this, so each is a bin of its own;
+# without parallelismFirst AQE honours the size too, so a sampled
+# layout also writes several files
+child.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
+child.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+keys = range(0, 400000, 50)
+batch = child.range(keys.start, keys.stop, keys.step).select(
+    F.col("id").cast("int").alias("k"), F.lit("UPD").alias("val")
+)
+part_of = lambda df: F.floor(F.col("k") / 10).cast("int")
+touched = sorted({k // 10 for k in keys})
+v = st.merge_snapshot_commit(child, sys.argv[2], batch, ["k"], part_of, touched)
+m = st.load_manifest(sys.argv[2], v)
+new = [e for e in m["files"] if e["seq"] == v]
+print("ENTRIES", json.dumps(sorted(
+    [e["rows"], e["min"], e["max"], e.get("stats")] for e in new
+)))
+"""
+
+
+def test_merge_layout_identical_across_process_histories(spark, tmp_path):
+    """Two processes apply the same batch to copies of the same table
+    and write identical entries (rows, min, max, stats), although one
+    of them first ran unrelated jobs and RDDs that move Spark's RDD-id
+    counter — the seed of a range sampler. The merge plans several
+    bins (a lowered advisory size), so the layout has boundaries to
+    move."""
+    import json
+    import subprocess
+
+    loc = str(tmp_path / "big")
+
+    def src():
+        df = spark.range(400000).select(
+            F.col("id").cast("int").alias("k"),
+            F.concat(F.lit("v"), F.col("id")).alias("val"),
+        )
+        return df.withColumn("m", F.floor(F.col("k") / 10).cast("int"))
+
+    st.create_snapshot_table(
+        spark, loc, src, "m", files=8, stats_cols=["k"]
+    )
+    env = dict(
+        os.environ,
+        PYTHONPATH=_REPO,
+        SPARK_GRAFT_CPUS="2",
+        SPARK_DRIVER_MEMORY="1g",
+    )
+    procs = [
+        subprocess.Popen(
+            [
+                sys.executable,
+                "-c",
+                _DETERMINISM_PROG,
+                loc,
+                str(tmp_path / f"copy{warm}"),
+                str(warm),
+            ],
+            stdout=subprocess.PIPE,
+            stderr=subprocess.DEVNULL,
+            env=env,
+            text=True,
+        )
+        for warm in (0, 10)
+    ]
+    outs = [p.communicate(timeout=600)[0] for p in procs]
+    assert all(p.returncode == 0 for p in procs), outs
+    entries = [
+        json.loads(line.split(" ", 1)[1])
+        for o in outs
+        for line in o.splitlines()
+        if line.startswith("ENTRIES")
+    ]
+    assert len(entries) == 2 and len(entries[0]) > 1, entries
+    assert entries[0] == entries[1]
 
 
 def test_read_of_many_files_plans_without_listing_job(spark, tmp_path):

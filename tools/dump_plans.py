@@ -60,9 +60,9 @@ ANNOTATED = {
     "upsert_merge_bucketed": "Single-pass MERGE (r5): ONE full-outer SMJ over the bucketed layout arbitrates update/keep/insert — the target scans once, exchange-free and sort-free; only the batch shuffles+sorts.",
     "win_running_sum_bucketed": "Window-aligned layout (r5): bucket key = PARTITION BY, in-bucket sort = partition+ORDER BY — the window runs straight off the scan: ZERO exchange, ZERO sort, fully pipelined.",
     "agg_events_rollup_partitioned": "Date-partitioned events layout (r5): the range filter prunes whole day directories at plan time (PartitionFilters); day feeds the groupBy from the layout — scan cost ∝ queried range.",
-    "upsert_merge_delta_rows": "Delta-output merge (r6): only the rows the MERGE writes — updated images via an inner broadcast probe, inserts via a semi-probe of the SAME broadcast frame then anti; the target streams through hash probes, nothing target-sized shuffles or is emitted.",
+    "upsert_merge_delta_rows": "Delta-output merge (r6): only the rows the MERGE writes — updated images via an inner broadcast probe, inserts via a semi-probe of the batch (a second, key-pruned broadcast) then anti; the target streams through hash probes, nothing target-sized shuffles or is emitted.",
     "tpch_q6_partitioned": "Q6 over the ship-year-partitioned, shipdate-range-clustered lineitem layout (r6): PartitionFilters prune 6/7 of the corpus at plan time; the residual range predicate prunes pages via the clustering's sharp min/max stats.",
-    "scd2_versioned_merge": "SCD2 merge (r6 hardening): three explicit broadcast joins (left_outer close/carry + semi-probe of the same broadcast frame + anti for brand-new keys) — the dimension NEVER shuffles; a full-outer broadcast hint could never bind.",
+    "scd2_versioned_merge": "SCD2 merge (r6 hardening): three explicit broadcast joins (left_outer close/carry + key semi-probe of the updates, a second key-pruned broadcast + anti for brand-new keys) — the dimension NEVER shuffles; a full-outer broadcast hint could never bind.",
     "profile_numeric_stats_pushdown": "Footer-stats profiler (r7): the whole MIN/MAX/COUNT aggregate pushed into the V2 parquet scan (PushedAggregation) — answered from row-group footer statistics, zero data pages decoded.",
     "agg_count_distinct_bucketed": "Distinct over the custkey-bucketed layout (r8): hashpartitioning(custkey) satisfies the inner GROUP BY (priority, custkey) outright — the pair collapse runs IN PLACE off the scan; the only exchange carries 5 priority groups.",
     "upsert_merge_partitioned": "Month-granular snapshot-table MERGE, COMMIT frame: the same commit as upsert_merge_snapshot on a files=84 table (about one month per file), so the manifest-pruned scan reads only the file(s) holding the touched month; the batch broadcasts through the two-arm merge, its first non-key column wrapped in the touched-set check (a raise_error projection).",
